@@ -1,14 +1,16 @@
 """Profile one or more declared queries: split construction time (the
 eager iterative rounds many fits run at build time) from execution time
-(collect / noop sink), count the Spark jobs each phase submits, and dump
-the formatted plan to plans/<round>/<name>_<tag>.txt.
+(collect / noop sink), count the Spark jobs and the driver->JVM py4j
+round trips each phase makes, and dump the formatted plan to
+plans/<round>/<name>_<tag>.txt.
 
 Usage:
     python scripts/profile_query.py [--sf DIR] [--cpus N] [--tag before]
         [--sink noop|collect] [--reps N] [--plans-dir plans/r12] q1 q2 ...
 
 Prints one line per query:
-    <name> build=<s> exec=<s> total=<s> jobs_build=<n> jobs_exec=<n>
+    <name> build=<s> exec=<s> total=<s> jobs_build=<n> jobs_exec=<n> \
+        py4j_build=<n> py4j_exec=<n>
 """
 
 from __future__ import annotations
@@ -19,6 +21,23 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def count_py4j_calls():
+    """Count driver->JVM round trips: a counting wrapper on py4j's
+    ``ClientServerConnection.send_command`` (PySpark's pinned-thread
+    gateway).  Returns a one-element list holding the running count."""
+    from py4j.clientserver import ClientServerConnection
+
+    count = [0]
+    send = ClientServerConnection.send_command
+
+    def counting_send(self, command):
+        count[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting_send
+    return count
 
 
 def main():
@@ -71,6 +90,7 @@ def main():
         pass
 
     tracker = sc.statusTracker()
+    py4j_calls = count_py4j_calls()
 
     def n_jobs():
         return len(tracker.getJobIdsForGroup(None) or []) + len(
@@ -89,16 +109,20 @@ def main():
         for rep in range(max(args.reps, 1)):
             sc.setJobDescription(f"profile:{name}:build")
             j0 = job_count()
+            p0 = py4j_calls[0]
             t0 = time.perf_counter()
             out = qs[name](spark, args.sf)
             t1 = time.perf_counter()
+            p1 = py4j_calls[0]
             j1 = job_count()
             sc.setJobDescription(f"profile:{name}:exec")
+            p2 = py4j_calls[0]
             if args.sink == "noop":
                 out.write.format("noop").mode("overwrite").save()
             else:
                 out.collect()
             t2 = time.perf_counter()
+            p3 = py4j_calls[0]
             j2 = job_count()
             sc.setJobDescription(None)
             if args.tag and rep == 0:
@@ -108,7 +132,8 @@ def main():
                 with open(os.path.join(
                         args.plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
                     f.write(plan)
-            row = (t1 - t0, t2 - t1, t2 - t0, j1 - j0, j2 - j1)
+            row = (t1 - t0, t2 - t1, t2 - t0, j1 - j0, j2 - j1,
+                   p1 - p0, p3 - p2)
             if best is None or row[2] < best[2]:
                 best = row
             try:
@@ -118,9 +143,10 @@ def main():
                 spark.catalog.clearCache()
             except Exception:
                 pass
-        b, e, t, jb, je = best
+        b, e, t, jb, je, pb, pe = best
         print(f"{name} build={b:.3f} exec={e:.3f} total={t:.3f} "
-              f"jobs_build={jb} jobs_exec={je}", flush=True)
+              f"jobs_build={jb} jobs_exec={je} "
+              f"py4j_build={pb} py4j_exec={pe}", flush=True)
     spark.stop()
 
 

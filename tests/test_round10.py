@@ -382,12 +382,18 @@ class TestCoxMulti:
 
 
 class TestCoxPlanShape:
-    def test_ungrouped_no_window_or_sort_over_single_partition(self, spark):
+    def test_ungrouped_no_window_or_sort_over_single_partition(
+        self, spark, monkeypatch,
+    ):
         """Item #3 of the round-9 verdict: the ungrouped fit must not
         sort all rows in one partition.  Exchange SinglePartition may
         appear ONLY as input to a global HashAggregate (the one-row
-        score/information folds) — never under a Window or Sort."""
+        score/information folds) — never under a Window or Sort.  The
+        row bound is set to 0 so the fit takes the Spark path."""
+        from woodwork_spark.operators import timeseries
         from woodwork_spark.operators.timeseries import cox_ph_fit
+
+        monkeypatch.setattr(timeseries, "LOCAL_MAX_ROWS", 0)
 
         rng = np.random.RandomState(1)
         rows = [(float(t), float(dd), float(x)) for t, dd, x in zip(

@@ -48,7 +48,7 @@ def test_fisher_support_enumeration_is_distributed(spark):
     assert "Range (" in plan
 
 
-def test_cox_risk_sets_share_tied_times(spark):
+def test_cox_risk_sets_share_tied_times(spark, monkeypatch):
     """Round 10 rewrote cox risk sets: rows collapse to one CELL per
     (group, distinct time) BEFORE the suffix-sum window, so tied
     subjects share a risk set by construction (the round-9 RANGE frame
@@ -56,7 +56,12 @@ def test_cox_risk_sets_share_tied_times(spark):
     pre-window aggregate keyed on the time column feeding ROWS-frame
     running sums — and no RANGE frame needed anywhere.  Value-level tie
     semantics are covered by test_round9e
-    TestCoxPH::test_tied_times_share_risk_set."""
+    TestCoxPH::test_tied_times_share_risk_set.  The row bound is set to
+    0 so the fit takes the Spark path (at this size it would otherwise
+    run whole on the driver)."""
+    from woodwork_spark.operators import timeseries
+
+    monkeypatch.setattr(timeseries, "LOCAL_MAX_ROWS", 0)
     plan = _plan(entrymod.queries()["cox_ph"](spark, SF))
     low = plan.lower().replace(" ", "")
     assert "rowframe" in low and "rangeframe" not in low

@@ -1193,6 +1193,23 @@ def _std_normal_two_sided_p(z):
     return F.least(F.lit(1.0), F.greatest(F.lit(0.0), poly * F.exp(-x * x)))
 
 
+def _std_normal_two_sided_p_local(z: float) -> float:
+    """Driver-side twin of :func:`_std_normal_two_sided_p` for one
+    finite float: the same polynomial in the same evaluation order."""
+    import math
+
+    x = abs(z) / 2.0 ** 0.5
+    t = 1.0 / (1.0 + 0.3275911 * x)
+    poly = (
+        0.254829592 * t
+        - 0.284496736 * t * t
+        + 1.421413741 * t * t * t
+        - 1.453152027 * t * t * t * t
+        + 1.061405429 * t * t * t * t * t
+    )
+    return min(1.0, max(0.0, poly * math.exp(-x * x)))
+
+
 def _chi2_sf(x, dof: int):
     """``P(chi2_dof > x)`` for a PLAN-TIME integer ``dof`` — the exact
     integer-df survival function unrolled as column expressions via the

@@ -1478,6 +1478,214 @@ def holt_winters_fit(
     )
 
 
+# Row bound of the driver-local Cox fit (one collect, every Newton round
+# in numpy) — the same bound as the ANN training collect
+LOCAL_MAX_ROWS = 100_000
+
+
+def _local_key_codes(pdf, cols, fields):
+    """Dense codes for the ``cols`` key tuples of a collected frame, and
+    each code's key tuple as Python values of the source types.  A NULL
+    key is its own group, as in Spark's ``groupBy``.  Returns None when
+    pandas cannot keep a key exact: a float key holding NaN (NaN and
+    NULL are separate Spark groups but one pandas NA), an integral key
+    that a NULL widened to float64 holding values past 2**53, or a type
+    outside plain integers, floats, strings, booleans and dates."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    if not cols:
+        return np.zeros(len(pdf), dtype=np.int64), [()]
+    codes, values = [], []
+    for c in cols:
+        dt, s = fields[c].dataType, pdf[c]
+        if isinstance(dt, T.IntegralType):
+            if s.dtype.kind == "f" and (s.abs() >= 2.0 ** 53).any():
+                return None
+            conv = int
+        elif isinstance(dt, (T.FloatType, T.DoubleType)):
+            if s.isna().any():
+                return None
+            conv = float
+        elif isinstance(dt, T.BooleanType):
+            conv = bool
+        elif dt == T.StringType() or isinstance(dt, T.DateType):
+            conv = None  # already Python str / datetime.date
+        else:
+            return None
+        code, uniq = pd.factorize(s, use_na_sentinel=False)
+        codes.append(code)
+        values.append([
+            None if v is None or v != v else conv(v) if conv else v
+            for v in uniq
+        ])
+    uniq, inv = np.unique(
+        np.stack(codes, axis=1), axis=0, return_inverse=True,
+    )
+    keys = [tuple(values[i][c] for i, c in enumerate(u)) for u in uniq]
+    return inv.reshape(-1), keys
+
+
+def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
+    """Whole-fit driver-local twin of :func:`cox_ph_fit`'s Spark path
+    over the collected ``base`` rows: every Newton round and the readout
+    in numpy, the same formulas per (group, strata) partition.  Returns
+    the output rows, or None when the fit must run on the Spark path: a
+    non-finite t, d or x, a key pandas cannot keep exact, or any
+    non-finite intermediate (the Spark path's NaN/NULL expression
+    semantics are not mimicked here)."""
+    import math
+
+    import numpy as np
+
+    from woodwork_spark.operators.linalg import (
+        chol_solve_local,
+        pd_ok_local,
+    )
+    from woodwork_spark.operators.stats_tests import (
+        _std_normal_two_sided_p_local,
+    )
+
+    t = pdf["__t"].to_numpy(dtype=np.float64)
+    d = pdf["__d"].to_numpy(dtype=np.float64)
+    X = pdf[[f"__x{j + 1}" for j in range(k)]].to_numpy(dtype=np.float64)
+    if not (
+        np.isfinite(t).all() and np.isfinite(d).all()
+        and np.isfinite(X).all()
+    ):
+        return None
+    grp = _local_key_codes(pdf, group_cols, fields)
+    part = _local_key_codes(pdf, part_cols, fields)
+    if grp is None or part is None:
+        return None
+    gid, keys = grp
+    pid = part[0]
+    G = len(keys)
+    # rows in (partition, time descending) order; a cell is one
+    # (partition, distinct time), as in the Spark path's cell collapse
+    order = np.lexsort((-t, pid))
+    t, d, X, gid, pid = t[order], d[order], X[order], gid[order], pid[order]
+    first = np.ones(len(t), dtype=bool)
+    first[1:] = (pid[1:] != pid[:-1]) | (t[1:] != t[:-1])
+    cid = np.cumsum(first) - 1
+    C = int(cid[-1]) + 1
+    cg, cp = gid[first], pid[first]
+    # each partition is a run of cells in descending time, so its risk
+    # sets are the run's running sums; runs of one length share an
+    # index block and one cumsum along the run axis
+    run0 = np.flatnonzero(np.r_[True, cp[1:] != cp[:-1]])
+    run_len = np.diff(np.r_[run0, C])
+    blocks = [
+        run0[run_len == n_][:, None] + np.arange(n_)
+        for n_ in np.unique(run_len)
+    ]
+
+    def cell_sum(w):
+        return np.bincount(cid, weights=w, minlength=C)
+
+    def group_sum(w):
+        return np.bincount(cg, weights=w, minlength=G)
+
+    dt = cell_sum(d)
+    dx = [cell_sum(d * X[:, j]) for j in range(k)]
+    n = group_sum(np.bincount(cid, minlength=C).astype(np.float64))
+    ne = group_sum(dt)
+    pairs = [(i, j) for i in range(k) for j in range(i + 1)]
+
+    def fold(b):
+        """(loglik, score, information) per group at coefficients b."""
+        br = b[gid]
+        eta = br[:, 0] * X[:, 0]
+        for j in range(1, k):
+            eta = eta + br[:, j] * X[:, j]
+        if multi:
+            eta = np.minimum(700.0, eta)
+        ew = np.exp(eta)
+        V = np.column_stack(
+            [cell_sum(ew)]
+            + [cell_sum(X[:, j] * ew) for j in range(k)]
+            + [cell_sum(X[:, i] * X[:, j] * ew) for i, j in pairs],
+        )
+        S = np.empty_like(V)
+        for idx in blocks:
+            S[idx] = np.cumsum(V[idx], axis=1)
+        s0 = S[:, 0]
+        if not (np.isfinite(S).all() and (s0 > 0).all()):
+            return None
+        r = [S[:, 1 + j] / s0 for j in range(k)]
+        bc = b[cg]
+        lterm = bc[:, 0] * dx[0]
+        for j in range(1, k):
+            lterm = lterm + bc[:, j] * dx[j]
+        ll = group_sum(np.where(dt > 0, lterm - dt * np.log(s0), 0.0))
+        u = [group_sum(dx[j] - dt * r[j]) for j in range(k)]
+        a = {
+            ij: group_sum(dt * (S[:, 1 + k + m] / s0 - r[ij[0]] * r[ij[1]]))
+            for m, ij in enumerate(pairs)
+        }
+        if not all(np.isfinite(v).all() for v in [ll, *u, *a.values()]):
+            return None
+        return ll, np.column_stack(u), a
+
+    b = np.zeros((G, k))
+    with np.errstate(all="ignore"):
+        for _ in range(int(iters)):
+            f = fold(b)
+            if f is None:
+                return None
+            _, u, a = f
+            if not multi:
+                a0 = a[(0, 0)]
+                b = np.where(a0 > 0, b[:, 0] + u[:, 0] / a0, 0.0)[:, None]
+            else:
+                al = {ij: v.tolist() for ij, v in a.items()}
+                b = b.copy()
+                for g, ug in enumerate(u.tolist()):
+                    sol, piv = chol_solve_local(
+                        k, lambda i, j, g=g: al[(i, j)][g], {"s": ug},
+                    )
+                    if pd_ok_local(piv):
+                        b[g] = [b[g, j] + sol["s"][j] for j in range(k)]
+            if not np.isfinite(b).all():
+                return None
+        f = fold(b)
+    if f is None:
+        return None
+    ll, _, a = f
+    al = {ij: v.tolist() for ij, v in a.items()}
+    rows = []
+    unit = {f"e{j}": [float(m == j) for m in range(k)] for j in range(k)}
+    for g in range(G):
+        if not multi:
+            ag = al[(0, 0)][g]
+            ok = ne[g] > 0 and ag > 0
+            ses = [1.0 / math.sqrt(ag)] if ok else []
+        else:
+            sol, piv = chol_solve_local(
+                k, lambda i, j, g=g: al[(i, j)][g], unit,
+            )
+            ok = pd_ok_local(piv) and ne[g] > 0
+            inv_diag = [sol[f"e{j}"][j] for j in range(k)] if ok else []
+            if not all(v > 0 for v in inv_diag):
+                return None
+            ses = [math.sqrt(v) for v in inv_diag]
+        stats = [None] * (4 * k)
+        for j, se in enumerate(ses):
+            bj = float(b[g, j])
+            z = bj / se
+            if not math.isfinite(z):
+                return None
+            stats[4 * j:4 * j + 4] = [
+                bj, se, z, _std_normal_two_sided_p_local(z),
+            ]
+        rows.append(
+            keys[g] + (int(n[g]), int(ne[g])) + tuple(stats)
+            + (float(ll[g]) if ok else None,),
+        )
+    return rows
+
+
 def cox_ph_fit(
     df: DataFrame,
     time_col: str,
@@ -1501,22 +1709,35 @@ def cox_ph_fit(
     (tied subjects share a cell, hence the identical risk set the RANGE
     frame used to provide), and folds score ``U_j = sum_t (dx_j - d_t
     S1_j/S0)`` and information ``I_ij = sum_t d_t (S2_ij/S0 -
-    (S1_i/S0)(S1_j/S0))`` in one aggregate.  The window input is
-    DISTINCT TIMES, not rows.  Single covariate: closed-form ``b' = b
-    + U/I``; multi-covariate: the d x d system solves in-plan via the
-    unrolled-Cholesky layers of :mod:`~woodwork_spark.operators.linalg`
-    (eta clamped at 700 against exp overflow), guarded by Sylvester's
-    pivots-positive criterion (a degenerate round keeps the previous
-    beta).  The per-group beta frame broadcasts back each step — no
-    driver math beyond the ungrouped offsets rows.
+    (S1_i/S0)(S1_j/S0))`` in one aggregate.  Single covariate:
+    closed-form ``b' = b + U/I`` (``0`` when ``I <= 0``); multi-
+    covariate: a d x d Cholesky solve (eta clamped at 700 against exp
+    overflow), guarded by Sylvester's pivots-positive criterion (a
+    degenerate round keeps the previous beta).
 
-    Scale shape: GROUPED fits sort cells within each group (one window
-    per group over its distinct times).  UNGROUPED fits use the
-    distributed suffix-sum machinery of :mod:`~woodwork_spark.operators.
-    rank` (``global_prefix_sums`` ordered by time DESCENDING — one range
-    shuffle + per-bucket windows + driver-folded bucket offsets), so no
-    SinglePartition exchange appears anywhere in the plan; the old
-    "ungrouped = one partition's sort" contract is gone.
+    Three execution tiers, chosen per fit:
+
+    1. **Whole fit on the driver.**  ``base`` (the filtered, cast input)
+       is collected once through Arrow, bounded by
+       :data:`LOCAL_MAX_ROWS` (100k rows).  When it fits and every t, d
+       and x is finite, every round and the readout run in numpy
+       (:func:`_cox_fit_local`) — no Spark job per round.
+    2. **Per-round driver solve.**  Otherwise the rounds run as Spark
+       plans from the cached ``base``; each round's one-row-per-group
+       sufficient stats are collected and solved on the driver
+       (:func:`~woodwork_spark.operators.linalg.newton_step_local`)
+       while the group count is within ``WW_GLM_LOCAL_SOLVE_MAX_GROUPS``.
+    3. **Layered plan.**  Above that bound the solve stays in-plan as
+       the unrolled-Cholesky layers of
+       :mod:`~woodwork_spark.operators.linalg`, with an eager checkpoint
+       of the group-sized beta frame per round.
+
+    Spark-path scale shape: GROUPED fits sort cells within each group
+    (one window per group over its distinct times).  UNGROUPED fits use
+    the distributed suffix-sum machinery of :mod:`~woodwork_spark.
+    operators.rank` (``global_prefix_sums`` ordered by time DESCENDING
+    — one range shuffle + per-bucket windows + driver-folded bucket
+    offsets), so no SinglePartition exchange appears in the plan.
 
     ``strata_cols`` gives the STRATIFIED Cox model: risk sets form
     WITHIN each stratum (each stratum has its own baseline hazard) but
@@ -1536,11 +1757,17 @@ def cox_ph_fit(
     ``loglik`` the Breslow partial log-likelihood at the converged
     beta (nested fits feed
     :func:`~woodwork_spark.operators.regression.glm_lrt` verbatim).
-    Groups with no events or a degenerate (non-PD) information matrix
-    yield NULL statistics.
+    Rows with a NULL time, event or covariate are dropped; a NULL group
+    key is its own group.  Groups with no events or a degenerate
+    (non-PD) information matrix yield NULL statistics.  All three tiers
+    return the same schema and NULL gating.
     """
+    from pyspark.sql import types as T
+
+    from woodwork_spark.io import arrow_to_pandas
     from woodwork_spark.lifecycle import attach_persisted, persisted_frames
     from woodwork_spark.operators.rank import global_prefix_sums
+    from woodwork_spark.operators.scale import local_rows_df
     from woodwork_spark.operators.stats_tests import (
         _std_normal_two_sided_p,
     )
@@ -1565,9 +1792,8 @@ def cox_ph_fit(
     cond = F.col(time_col).isNotNull() & F.col(event_col).isNotNull()
     for c in xs:
         cond = cond & F.col(c).isNotNull()
-    # persisted: every Newton round's risk-cell pass (and the final
-    # readout) re-reads this frame — one upstream scan instead of
-    # iters + 1
+    # persisted: the bounded collect and, above the bound, every Newton
+    # round's risk-cell pass (and the final readout) re-read this frame
     base = df.filter(cond).select(
         *part_cols,
         F.col(time_col).cast("double").alias("__t"),
@@ -1577,67 +1803,106 @@ def cox_ph_fit(
             for j, c in enumerate(xs)
         ],
     ).persist()
+    if LOCAL_MAX_ROWS > 0:
+        pdf = arrow_to_pandas(base.limit(LOCAL_MAX_ROWS + 1))
+        rows = None
+        # an empty input stays on the Spark path, whose ungrouped
+        # global aggregate yields one all-NULL row
+        if 0 < len(pdf) <= LOCAL_MAX_ROWS:
+            rows = _cox_fit_local(
+                pdf, group_cols, part_cols, base.schema, k, iters, multi,
+            )
+        if rows is not None:
+            names = (
+                ["beta", "se", "z_stat", "p_approx"] if not multi
+                else [
+                    f"{s}_{name}" for name in xs
+                    for s in ("beta", "se", "z", "p")
+                ]
+            )
+            schema = T.StructType(
+                [base.schema[g] for g in group_cols]
+                + [T.StructField(c, T.LongType()) for c in ("n", "n_events")]
+                + [T.StructField(c, T.DoubleType())
+                   for c in names + ["loglik"]],
+            )
+            base.unpersist()
+            return local_rows_df(df.sparkSession, rows, schema)
     bnames = [f"__b{j + 1}" for j in range(k)]
     caches = [base]
+
+    # every Column below is loop-invariant: built once per fit, reused
+    # by each round's plan
+    eta = None
+    for j in range(k):
+        term = F.col(bnames[j]) * F.col(f"__x{j + 1}")
+        eta = term if eta is None else eta + term
+    if multi:
+        # exp-overflow clamp, mirroring the GLM engines; the
+        # 1-covariate path keeps its exact legacy arithmetic
+        eta = F.least(F.lit(700.0), eta)
+    # factor e^(b'x) through a NAMED projection (the bootstrap/
+    # logistic_fit_diag convention): the exp(dot-product) tree would
+    # otherwise inline into every one of the 1 + k + k(k+1)/2 cell
+    # aggregates.  Same arithmetic; aggregates reference a leaf column.
+    ew_col = F.exp(eta).alias("__ew")
+    ew = F.col("__ew")
+    cell_aggs = [
+        *[F.max(b).alias(b) for b in bnames],
+        F.count(F.lit(1)).alias("__nc"),
+        F.sum("__d").alias("__dt"),
+        F.sum(ew).alias("__c0"),
+    ]
+    vcols, scols = ["__c0"], ["__S0"]
+    for j in range(k):
+        cell_aggs.append(
+            F.sum(F.col("__d") * F.col(f"__x{j + 1}")).alias(f"__dx{j}"),
+        )
+        cell_aggs.append(F.sum(F.col(f"__x{j + 1}") * ew).alias(f"__c1_{j}"))
+        vcols.append(f"__c1_{j}")
+        scols.append(f"__S1_{j}")
+    for i in range(k):
+        for j in range(i + 1):
+            cell_aggs.append(
+                F.sum(
+                    F.col(f"__x{i + 1}") * F.col(f"__x{j + 1}") * ew,
+                ).alias(f"__c2_{i}_{j}"),
+            )
+            vcols.append(f"__c2_{i}_{j}")
+            scols.append(f"__S2_{i}_{j}")
+    suffix_sums = None
+    if part_cols:
+        w = (
+            W.partitionBy(*part_cols)
+            .orderBy(F.desc("__t"))
+            .rowsBetween(W.unboundedPreceding, W.currentRow)
+        )
+        suffix_sums = [
+            F.sum(vc).over(w).alias(sc) for vc, sc in zip(vcols, scols)
+        ]
+    # null-safe join on renamed keys: a NULL group key is its own group,
+    # as in the groupBy that seeds beta
+    knames = [f"__k{i}" for i in range(len(group_cols))]
+    beta_keys = [F.col(g).alias(kn) for g, kn in zip(group_cols, knames)]
+    join_on = None
+    for g, kn in zip(group_cols, knames):
+        c = F.col(g).eqNullSafe(F.col(kn))
+        join_on = c if join_on is None else join_on & c
 
     def _risk_cells(bdf):
         """Collapse to (group, t) cells at the broadcast beta, then
         suffix-sum the risk quantities in descending time."""
         if group_cols:
-            cur = base.join(F.broadcast(bdf), group_cols)
+            cur = base.join(
+                F.broadcast(bdf.select(*beta_keys, *bnames)), join_on,
+            ).drop(*knames)
         else:
             cur = base.crossJoin(F.broadcast(bdf))
-        eta = None
-        for j in range(k):
-            term = F.col(bnames[j]) * F.col(f"__x{j + 1}")
-            eta = term if eta is None else eta + term
-        if multi:
-            # exp-overflow clamp, mirroring the GLM engines; the
-            # 1-covariate path keeps its exact legacy arithmetic
-            eta = F.least(F.lit(700.0), eta)
-        # factor e^(b'x) through a NAMED projection (the bootstrap/
-        # logistic_fit_diag convention): the exp(dot-product) tree used
-        # to inline into every one of the 1 + k + k(k+1)/2 cell
-        # aggregates, so each Newton round re-analyzed a plan ~k^2
-        # bigger than needed.  Same arithmetic; aggregates reference a
-        # leaf column.
-        cur = cur.select("*", F.exp(eta).alias("__ew"))
-        ew = F.col("__ew")
-        cell_aggs = [
-            F.count(F.lit(1)).alias("__nc"),
-            F.sum("__d").alias("__dt"),
-            F.sum(ew).alias("__c0"),
-        ]
-        vcols, scols = ["__c0"], ["__S0"]
-        for j in range(k):
-            cell_aggs.append(
-                F.sum(F.col("__d") * F.col(f"__x{j + 1}")).alias(f"__dx{j}"),
-            )
-            cell_aggs.append(F.sum(F.col(f"__x{j + 1}") * ew).alias(f"__c1_{j}"))
-            vcols.append(f"__c1_{j}")
-            scols.append(f"__S1_{j}")
-        for i in range(k):
-            for j in range(i + 1):
-                cell_aggs.append(
-                    F.sum(
-                        F.col(f"__x{i + 1}") * F.col(f"__x{j + 1}") * ew,
-                    ).alias(f"__c2_{i}_{j}"),
-                )
-                vcols.append(f"__c2_{i}_{j}")
-                scols.append(f"__S2_{i}_{j}")
-        cells = cur.groupBy(*part_cols, "__t").agg(
-            *[F.max(b).alias(b) for b in bnames],
+        cells = cur.select("*", ew_col).groupBy(*part_cols, "__t").agg(
             *cell_aggs,
         )
         if part_cols:
-            w = (
-                W.partitionBy(*part_cols)
-                .orderBy(F.desc("__t"))
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            )
-            for vc, sc in zip(vcols, scols):
-                cells = cells.withColumn(sc, F.sum(vc).over(w))
-            return cells
+            return cells.select("*", *suffix_sums)
         # ungrouped/unstratified: distributed suffix sums — range
         # shuffle + bucket windows + driver offsets, never a
         # SinglePartition exchange
@@ -1648,62 +1913,55 @@ def cox_ph_fit(
         caches.extend(persisted_frames(out))
         return out
 
-    def _fold_aggs():
-        r1 = [F.col(f"__S1_{j}") / F.col("__S0") for j in range(k)]
-        # Breslow partial loglik at the current beta: sum over event
-        # cells of (beta'dx - d_t ln S0) — free from the same cell
-        # quantities the score/information fold reads, and the input
-        # to cox likelihood-ratio tests (glm_lrt works verbatim on
-        # these fits)
-        lterm = None
-        for j in range(k):
-            t = F.col(bnames[j]) * F.col(f"__dx{j}")
-            lterm = t if lterm is None else lterm + t
-        aggs = [
-            F.sum("__nc").alias("__n"),
-            F.sum("__dt").alias("__ne"),
-            F.sum(
-                F.when(
-                    F.col("__dt") > 0,
-                    lterm - F.col("__dt") * F.log(F.col("__S0")),
-                ).otherwise(F.lit(0.0)),
-            ).alias("__ll"),
-        ]
-        for j in range(k):
-            aggs.append(
+    r1 = [F.col(f"__S1_{j}") / F.col("__S0") for j in range(k)]
+    # Breslow partial loglik at the current beta: sum over event cells
+    # of (beta'dx - d_t ln S0) — free from the same cell quantities the
+    # score/information fold reads, and the input to cox likelihood-
+    # ratio tests (glm_lrt works verbatim on these fits)
+    lterm = None
+    for j in range(k):
+        t = F.col(bnames[j]) * F.col(f"__dx{j}")
+        lterm = t if lterm is None else lterm + t
+    fold_aggs = [
+        *[F.max(b).alias(b) for b in bnames],
+        F.sum("__nc").alias("__n"),
+        F.sum("__dt").alias("__ne"),
+        F.sum(
+            F.when(
+                F.col("__dt") > 0,
+                lterm - F.col("__dt") * F.log(F.col("__S0")),
+            ).otherwise(F.lit(0.0)),
+        ).alias("__ll"),
+    ]
+    for j in range(k):
+        fold_aggs.append(
+            F.sum(F.col(f"__dx{j}") - F.col("__dt") * r1[j]).alias(f"__u{j}"),
+        )
+    for i in range(k):
+        for j in range(i + 1):
+            fold_aggs.append(
                 F.sum(
-                    F.col(f"__dx{j}") - F.col("__dt") * r1[j],
-                ).alias(f"__u{j}"),
+                    F.col("__dt")
+                    * (F.col(f"__S2_{i}_{j}") / F.col("__S0")
+                       - r1[i] * r1[j]),
+                ).alias(f"__a_{i}_{j}"),
             )
-        for i in range(k):
-            for j in range(i + 1):
-                aggs.append(
-                    F.sum(
-                        F.col("__dt")
-                        * (F.col(f"__S2_{i}_{j}") / F.col("__S0")
-                           - r1[i] * r1[j]),
-                    ).alias(f"__a_{i}_{j}"),
-                )
-        return aggs
 
     beta_df = base.groupBy(*group_cols).agg(
         *[F.lit(0.0).alias(b) for b in bnames],
     )
     a_name = lambda i, j: f"__a_{i}_{j}"  # noqa: E731
+    u_names = [f"__u{j}" for j in range(k)]
+    if not multi:
+        b_next = F.when(
+            F.col("__a_0_0") > 0,
+            F.col("__b1") + F.col("__u0") / F.col("__a_0_0"),
+        ).otherwise(F.lit(0.0)).alias("__b1")
+    local_solve = multi
     for it in range(int(iters)):
-        cells = _risk_cells(beta_df)
-        step = cells.groupBy(*group_cols).agg(
-            *[F.max(b).alias(b) for b in bnames],
-            *_fold_aggs(),
-        )
+        step = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold_aggs)
         if not multi:
-            beta_df = step.select(
-                *group_cols,
-                F.when(
-                    F.col("__a_0_0") > 0,
-                    F.col("__b1") + F.col("__u0") / F.col("__a_0_0"),
-                ).otherwise(F.lit(0.0)).alias("__b1"),
-            )
+            beta_df = step.select(*group_cols, b_next)
             continue
         from woodwork_spark.operators.linalg import (
             apply_layers,
@@ -1714,17 +1972,16 @@ def cox_ph_fit(
 
         # driver-local Newton step when the group count is bounded —
         # bit-identical solve (see linalg.chol_solve_local), one collect
-        # replaces the layered plan + eager checkpoint per round
-        nb = newton_step_local(
-            step, group_cols, bnames, a_name,
-            [f"__u{j}" for j in range(k)],
-        )
-        if nb is not None:
-            beta_df = nb
-            continue
+        # replaces the layered plan + eager checkpoint per round; after
+        # the first miss the rest of the fit skips the probe collect
+        if local_solve:
+            nb = newton_step_local(step, group_cols, bnames, a_name, u_names)
+            if nb is not None:
+                beta_df = nb
+                continue
+            local_solve = False
         layers, sol, piv = chol_solve_layers(
-            k, a_name, {"s": [f"__u{j}" for j in range(k)]},
-            pref=f"__it{it}",
+            k, a_name, {"s": u_names}, pref=f"__it{it}",
         )
         solved = apply_layers(step, layers)
         ok = pd_ok(piv)
@@ -1742,11 +1999,7 @@ def cox_ph_fit(
         # stays constant per round (bradley_terry convention)
         beta_df = beta_df.localCheckpoint(eager=True)
     # final readout: information at the FINAL beta for the Wald se
-    cells = _risk_cells(beta_df)
-    out = cells.groupBy(*group_cols).agg(
-        *[F.max(b).alias(b) for b in bnames],
-        *_fold_aggs(),
-    )
+    out = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold_aggs)
     if not multi:
         ok = (F.col("__ne") > 0) & (F.col("__a_0_0") > 0)
         se = F.lit(1.0) / F.sqrt(F.col("__a_0_0"))
@@ -2006,6 +2259,7 @@ def cox_ph_fit_tv(
         *[F.lit(0.0).alias(b) for b in bnames],
     )
     a_name = lambda i, j: f"__a_{i}_{j}"  # noqa: E731
+    local_solve = True
     for it in range(int(iters)):
         cells = _risk_cells(beta_df)
         step = cells.groupBy(*group_cols).agg(
@@ -2014,14 +2268,17 @@ def cox_ph_fit_tv(
         )
         from woodwork_spark.operators.linalg import newton_step_local
 
-        # driver-local Newton step under the group bound (see cox_ph_fit)
-        nb = newton_step_local(
-            step, group_cols, bnames, a_name,
-            [f"__u{j}" for j in range(k)],
-        )
-        if nb is not None:
-            beta_df = nb
-            continue
+        # driver-local Newton step under the group bound (see
+        # cox_ph_fit); after the first miss, no more probe collects
+        if local_solve:
+            nb = newton_step_local(
+                step, group_cols, bnames, a_name,
+                [f"__u{j}" for j in range(k)],
+            )
+            if nb is not None:
+                beta_df = nb
+                continue
+            local_solve = False
         layers, sol, piv = chol_solve_layers(
             k, a_name, {"s": [f"__u{j}" for j in range(k)]},
             pref=f"__tv{it}",
@@ -2354,6 +2611,7 @@ def fine_gray_fit(
         *[F.lit(0.0).alias(b) for b in bnames],
     )
     a_name = lambda i, j: f"__a_{i}_{j}"  # noqa: E731
+    local_solve = True
     for it in range(int(iters)):
         cells = _risk_cells(beta_df)
         step = cells.groupBy(*group_cols).agg(
@@ -2362,14 +2620,17 @@ def fine_gray_fit(
         )
         from woodwork_spark.operators.linalg import newton_step_local
 
-        # driver-local Newton step under the group bound (see cox_ph_fit)
-        nb = newton_step_local(
-            step, group_cols, bnames, a_name,
-            [f"__u{j}" for j in range(k)],
-        )
-        if nb is not None:
-            beta_df = nb
-            continue
+        # driver-local Newton step under the group bound (see
+        # cox_ph_fit); after the first miss, no more probe collects
+        if local_solve:
+            nb = newton_step_local(
+                step, group_cols, bnames, a_name,
+                [f"__u{j}" for j in range(k)],
+            )
+            if nb is not None:
+                beta_df = nb
+                continue
+            local_solve = False
         layers, sol, piv = chol_solve_layers(
             k, a_name, {"s": [f"__u{j}" for j in range(k)]},
             pref=f"__fg{it}",
