@@ -1957,7 +1957,7 @@ def cox_ph_fit(
             F.col("__a_0_0") > 0,
             F.col("__b1") + F.col("__u0") / F.col("__a_0_0"),
         ).otherwise(F.lit(0.0)).alias("__b1")
-    local_solve = multi
+    local_solve = True
     for it in range(int(iters)):
         step = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold_aggs)
         if not multi:
