@@ -222,3 +222,33 @@ def test_one_group_bound_probe_per_fit(spark, monkeypatch, which):
             df, "t", "ev", ["x1", "x2"], group_cols="g", iters=3,
         ).collect()
     assert calls == [False]
+
+
+def test_null_key_is_a_group_in_every_fit(spark):
+    """A NULL group key is its own group in cox_ph_fit, cox_ph_fit_tv and
+    fine_gray_fit alike (the key joins are null-safe)."""
+    rng = np.random.RandomState(3)
+    rows = []
+    for i in range(60):
+        t = float(rng.randint(1, 12))
+        rows.append((
+            "a" if i % 2 else None, 0.0, t, float(rng.uniform() < 0.7),
+            int(rng.randint(0, 3)), float(np.round(rng.normal(), 3)),
+        ))
+    df = spark.createDataFrame(
+        rows, "g string, t0 double, t double, d double, cause int, x double",
+    )
+    fits = {
+        "cox_ph_fit": lambda: timeseries.cox_ph_fit(df, "t", "d", "x", "g"),
+        "cox_ph_fit_tv": lambda: timeseries.cox_ph_fit_tv(
+            df, "t0", "t", "d", "x", "g",
+        ),
+        "fine_gray_fit": lambda: timeseries.fine_gray_fit(
+            df, "t", "cause", "x", "g",
+        ),
+    }
+    for name, fit in fits.items():
+        groups = sorted(
+            (r["g"] for r in fit().collect()), key=lambda g: (g is not None, g),
+        )
+        assert groups == [None, "a"], name

@@ -379,6 +379,7 @@ def test_mutual_info_job_count_is_batched(spark):
     """A wide frame's MI pass must issue O(pairs/chunk) Spark jobs, not
     O(pairs): all union counts in one agg, contingencies grouped."""
     import random
+    import uuid
 
     random.seed(3)
     ncols = 12  # 66 pairs -> old code issued 132+ jobs
@@ -392,13 +393,15 @@ def test_mutual_info_job_count_is_batched(spark):
         validate=False,
     )
     sc = spark.sparkContext
-    sc.setJobGroup("mi_batch_test", "mi job counting")
+    # one group per run: the test also runs as its Spark-tier twin
+    group = f"mi_batch_test_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "mi job counting")
     try:
         out = t.dependence(measures="mutual_info")
     finally:
         sc.setJobGroup(None, None)
     tracker = sc.statusTracker()
-    njobs = len(tracker.getJobIdsForGroup("mi_batch_test"))
+    njobs = len(tracker.getJobIdsForGroup(group))
     assert len(out) == 66
     assert njobs <= 12, f"MI pass issued {njobs} jobs for 66 pairs"
 
@@ -570,3 +573,47 @@ def test_grouped_quantile_sketches_merge_accuracy(spark):
             F.percentile("v", F.lit(0.48)), F.percentile("v", F.lit(0.52)),
         ).first()
         assert lo <= val <= hi, (grp, val, lo, hi)
+
+
+# The tests above run the default tier: every frame is small, so
+# describe, dependence and the outlier family take the bounded
+# driver-local kernels.  Each one listed here runs again with
+# ``io.LOCAL_MAX_CELLS = 0``, so the distributed twin keeps the same
+# goldens.
+SPARK_TIER_TWINS = [
+    test_describe_numeric_golden,
+    test_describe_boolean_and_categorical,
+    test_box_plot_golden,
+    test_medcouple_skewed,
+    test_dependence_pearson_spearman_match_pandas,
+    test_dependence_spearman_with_nulls,
+    test_dependence_mutual_info_detects_dependency,
+    test_dependence_min_shared_nan,
+    test_describe_with_extra_stats,
+    test_dependence_reference_goldens,
+    test_box_plot_with_precomputed_quantiles,
+    test_dependence_same_reference_golden,
+    test_dependence_unique_cols_reference,
+    test_medcouple_left_skew_coefficient_signs,
+    test_mutual_info_job_count_is_batched,
+    test_outlier_max_values_cap,
+    test_medcouple_random_sampling_unbiased_on_sorted_data,
+    test_describe_callback,
+    test_dependence_callback,
+    test_describe_results_callback,
+]
+
+
+@pytest.mark.parametrize(
+    "case", SPARK_TIER_TWINS, ids=[f.__name__ for f in SPARK_TIER_TWINS],
+)
+def test_spark_tier(case, request, monkeypatch):
+    import inspect
+
+    from woodwork_spark import io
+
+    monkeypatch.setattr(io, "LOCAL_MAX_CELLS", 0)
+    case(**{
+        name: request.getfixturevalue(name)
+        for name in inspect.signature(case).parameters
+    })

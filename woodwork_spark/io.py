@@ -224,6 +224,51 @@ def arrow_to_pandas(df: DataFrame):
         spark.conf.set(key, prev)
 
 
+# Cells (rows x columns) a bounded driver-local tier may collect through
+# collect_bounded: about 8 MB of doubles.
+LOCAL_MAX_CELLS = 1_000_000
+
+
+def collect_bounded(df: DataFrame):
+    """``df`` on the driver as pandas from ONE Arrow collect, or None.
+
+    The collect is ``df.limit(max_rows + 1).toArrow()`` with
+    ``max_rows = LOCAL_MAX_CELLS // len(df.columns)``.  None — the
+    caller's distributed path runs — when the frame has more rows than
+    that, when a floating column holds NaN or +-inf (Spark keeps NaN
+    apart from NULL, pandas cannot), or when ``df`` is streaming.
+    Integer and boolean columns come back as pandas' nullable dtypes, so
+    NULL stays apart from the values and int64 stays exact; timestamps
+    come back as UTC instants."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if df.isStreaming:
+        return None
+    ncols = len(df.columns)
+    max_rows = LOCAL_MAX_CELLS // ncols if ncols else 0
+    if max_rows <= 0:
+        return None
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
+        return None
+    for col in table.columns:
+        # all-NULL columns aggregate to None, which is fine
+        if pa.types.is_floating(col.type) and pc.all(
+            pc.is_finite(col),
+        ).as_py() is False:
+            return None
+    nullable = {
+        pa.int8(): pd.Int8Dtype(),
+        pa.int16(): pd.Int16Dtype(),
+        pa.int32(): pd.Int32Dtype(),
+        pa.int64(): pd.Int64Dtype(),
+        pa.bool_(): pd.BooleanDtype(),
+    }
+    return table.to_pandas(types_mapper=nullable.get)
+
+
 def pandas_to_spark(spark, pdf) -> DataFrame:
     """``createDataFrame(pandas)`` with Arrow transfer pinned on.
 

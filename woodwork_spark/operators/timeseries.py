@@ -1483,6 +1483,24 @@ def holt_winters_fit(
 LOCAL_MAX_ROWS = 100_000
 
 
+def _key_join(left, right, keys, broadcast=False):
+    """``left.join(right, keys)`` with the keys matched null-safe, so a
+    NULL key is its own group, as in the groupBy that made ``right``.
+    ``right``'s keys are renamed for the join and dropped after it."""
+    knames = [f"__k{i}" for i in range(len(keys))]
+    rest = [c for c in right.columns if c not in keys]
+    right = right.select(
+        *[F.col(k).alias(kn) for k, kn in zip(keys, knames)], *rest,
+    )
+    if broadcast:
+        right = F.broadcast(right)
+    on = None
+    for k, kn in zip(keys, knames):
+        c = F.col(k).eqNullSafe(F.col(kn))
+        on = c if on is None else on & c
+    return left.join(right, on).drop(*knames)
+
+
 def _local_key_codes(pdf, cols, fields):
     """Dense codes for the ``cols`` key tuples of a collected frame, and
     each code's key tuple as Python values of the source types.  A NULL
@@ -1880,22 +1898,14 @@ def cox_ph_fit(
         suffix_sums = [
             F.sum(vc).over(w).alias(sc) for vc, sc in zip(vcols, scols)
         ]
-    # null-safe join on renamed keys: a NULL group key is its own group,
-    # as in the groupBy that seeds beta
-    knames = [f"__k{i}" for i in range(len(group_cols))]
-    beta_keys = [F.col(g).alias(kn) for g, kn in zip(group_cols, knames)]
-    join_on = None
-    for g, kn in zip(group_cols, knames):
-        c = F.col(g).eqNullSafe(F.col(kn))
-        join_on = c if join_on is None else join_on & c
-
     def _risk_cells(bdf):
         """Collapse to (group, t) cells at the broadcast beta, then
         suffix-sum the risk quantities in descending time."""
         if group_cols:
-            cur = base.join(
-                F.broadcast(bdf.select(*beta_keys, *bnames)), join_on,
-            ).drop(*knames)
+            cur = _key_join(
+                base, bdf.select(*group_cols, *bnames), group_cols,
+                broadcast=True,
+            )
         else:
             cur = base.crossJoin(F.broadcast(bdf))
         cells = cur.select("*", ew_col).groupBy(*part_cols, "__t").agg(
@@ -2156,7 +2166,7 @@ def cox_ph_fit_tv(
 
     def _risk_cells(bdf):
         if group_cols:
-            cur = base.join(F.broadcast(bdf), group_cols)
+            cur = _key_join(base, bdf, group_cols, broadcast=True)
         else:
             cur = base.crossJoin(F.broadcast(bdf))
         eta = None
@@ -2466,13 +2476,13 @@ def fine_gray_fit(
     )
     # persisted base: subject rows + their cell's G(t-) — every Newton
     # round re-reads this frame
-    base = rows.join(gm, [*group_cols, "__t"]).persist()
+    base = _key_join(rows, gm, [*group_cols, "__t"]).persist()
     caches.append(base)
     bnames = [f"__b{j + 1}" for j in range(k)]
 
     def _risk_cells(bdf):
         if group_cols:
-            cur = base.join(F.broadcast(bdf), group_cols)
+            cur = _key_join(base, bdf, group_cols, broadcast=True)
         else:
             cur = base.crossJoin(F.broadcast(bdf))
         eta = None

@@ -5,19 +5,28 @@ statistics_utils/_get_dependence_dict.py:31-299,
 _calculate_dependence_measure.py:11-91,
 _bin_numeric_cols_into_categories.py:4-27.
 
-Distributed design:
-- Pearson: ALL pairs in ONE aggregation pass (`corr(a,b)` per pair plus
-  shared/union row counts) — one job for the whole matrix.
-- Spearman: average-rank transform per column via groupBy(value) + a
-  cumulative-count window over DISTINCT values (bounded by column
-  cardinality, not row count), then the same one-pass corr.  Pairs where
-  either column has nulls recompute ranks on the pair's shared rows
-  (pairwise-dropna semantics, reference _calculate_dependence_measure).
-- Mutual info: exact quantile bin edges (one percentile agg for all
-  numeric columns, parity with pd.qcut), per-pair contingency via
-  groupBy(bin_a, bin_b) — contingencies are tiny (≤ num_bins² or
-  category cardinalities, guarded by the 800/6000 rule) and adjusted
-  mutual information is computed from them in numpy on the driver.
+Two tiers; only the source of the numbers differs (``_LocalPairs`` vs
+``_SparkPairs``), the assembly, scaling, sorting and the AMI kernel are
+shared:
+
+- Local: when the numeric view (datetimes as epoch micros, categoricals
+  as Spark's string cast) fits ``io.LOCAL_MAX_CELLS`` (1M cells) and
+  holds no NaN/inf, ONE Arrow collect brings it to the driver and numpy
+  computes every pair — one Spark job.
+- Distributed, above the bound:
+  - Pearson: ALL pairs in ONE aggregation pass (`corr(a,b)` per pair
+    plus shared/union row counts) — one job for the whole matrix.
+  - Spearman: average-rank transform per column via groupBy(value) + a
+    cumulative-count window over DISTINCT values (bounded by column
+    cardinality, not row count), then the same one-pass corr.  Pairs
+    where either column has nulls recompute ranks on the pair's shared
+    rows (pairwise-dropna semantics, reference
+    _calculate_dependence_measure).
+  - Mutual info: exact quantile bin edges (one percentile agg for all
+    numeric columns, parity with pd.qcut), per-pair contingency via
+    groupBy(bin_a, bin_b) — contingencies are tiny (<= num_bins² or
+    category cardinalities, guarded by the 800/6000 rule) and adjusted
+    mutual information is computed from them in numpy on the driver.
 """
 
 from __future__ import annotations
@@ -38,6 +47,7 @@ from woodwork_spark.logical_types import (
     Datetime,
     Ordinal,
 )
+from woodwork_spark.statistics import local_percentile
 
 # pairs per grouped-contingency job: bounds the melt's explode factor
 # (rows x chunk) while keeping job count O(pairs / chunk), not O(pairs)
@@ -94,27 +104,6 @@ def _measure_columns(ww_df, measures, include_index=False, include_time_index=Fa
     return valid
 
 
-def _numeric_view(ww_df, cols):
-    """Project each column to a double 'numeric signal' column:
-    bool -> 0/1, datetime -> epoch micros, ordinal -> declared rank
-    (reference casts _cast_nullable_int_and_datetime_to_int.py,
-    _convert_ordinal_to_numeric.py)."""
-    schema = ww_df.schema
-    exprs = []
-    for c in cols:
-        lt = schema.columns[c].logical_type
-        col = F.col(c)
-        if isinstance(lt, Datetime):
-            exprs.append(F.unix_micros(col).cast("double").alias(c))
-        elif isinstance(lt, Ordinal):
-            exprs.append(lt.rank_expr(col).cast("double").alias(c))
-        elif isinstance(lt, BooleanNullable):
-            exprs.append(col.cast("int").cast("double").alias(c))
-        else:
-            exprs.append(col.cast("double").alias(c))
-    return ww_df.raw.select(*exprs)
-
-
 def _rank_column(df, col):
     """Average-rank transform (ties get mean rank, scipy.rankdata
     semantics): exclusive prefix-count over DISTINCT values + join back.
@@ -145,8 +134,9 @@ def _rank_column(df, col):
     )
 
 
-def _pairwise_corr(df, pairs, rank=False):
-    """All pair correlations + shared/union counts in ONE agg pass.
+def _pairwise_corr(df, pairs):
+    """All pair correlations + shared/union counts in ONE agg pass, plus
+    ``flat_{i}``: whether either side is constant over the shared rows.
 
     ANSI mode makes `corr` throw DIVIDE_BY_ZERO on zero-variance columns
     where the semantics (pandas, the reference) are NaN — disable ANSI
@@ -161,6 +151,7 @@ def _pairwise_corr(df, pairs, rank=False):
             F.corr(a, b).alias(f"corr_{i}"),
             F.sum(both.cast("long")).alias(f"shared_{i}"),
             F.sum(either.cast("long")).alias(f"union_{i}"),
+            _flat(F.when(both, ca), F.when(both, cb)).alias(f"flat_{i}"),
         ]
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.ansi.enabled", "true")
@@ -169,6 +160,36 @@ def _pairwise_corr(df, pairs, rank=False):
         return df.agg(*aggs).collect()[0].asDict()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def _flat(a, b):
+    """Aggregate: is either column constant over its non-NULL rows?
+
+    Spark's ``corr`` merges partial moments through ``avg + delta / n *
+    n2``, which is not exact: on a constant column it can leave a tiny
+    variance and return a finite value where the exact answer (pandas,
+    the reference) is NaN.  min == max is exact."""
+    return (F.min(a) == F.max(a)) | (F.min(b) == F.max(b))
+
+
+def _nan_if_flat(corr, flat):
+    return float("nan") if flat and corr is not None else corr
+
+
+def _corr_triples(df, pairs):
+    """(corr, shared rows, union rows) per pair from ONE
+    :func:`_pairwise_corr` pass."""
+    if not pairs:
+        return []
+    row = _pairwise_corr(df, pairs)
+    return [
+        (
+            _nan_if_flat(row[f"corr_{i}"], row[f"flat_{i}"]),
+            row[f"shared_{i}"] or 0,
+            row[f"union_{i}"] or 0,
+        )
+        for i in range(len(pairs))
+    ]
 
 
 def _spearman_pair(df, a, b):
@@ -191,11 +212,14 @@ def _spearman_pair(df, a, b):
     prev = spark.conf.get("spark.sql.ansi.enabled", "true")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
-        row = ranked.agg(F.corr("__rank_a", "__rank").alias("c")).collect()[0]
+        row = ranked.agg(
+            F.corr("__rank_a", "__rank").alias("c"),
+            _flat(F.col("__rank_a"), F.col("__rank")).alias("flat"),
+        ).collect()[0]
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
         release(ranked)
-    return row["c"]
+    return _nan_if_flat(row["c"], row["flat"])
 
 
 # -- adjusted mutual information (numpy; no sklearn in this env) -------------
@@ -372,6 +396,8 @@ def dependence(
     preprocessing, one per column for null handling, one per MI column
     for binning, one per pair per measure."""
     from woodwork_spark.callback import CallbackCaller
+    from woodwork_spark.io import collect_bounded
+
     measures, _ = _parse_measures(measures)
     real_measures = [m for m in measures if m != "max"]
     valid = _measure_columns(ww_df, real_measures)
@@ -384,15 +410,14 @@ def dependence(
     df = _numeric_view_mixed(ww_df, union_cols)
     if nrows is not None:
         df = df.limit(nrows)
-    df = df.cache()
+    pdf = collect_bounded(df)
+    src = _SparkPairs(df) if pdf is None else _LocalPairs(pdf)
 
     # cardinality guard for MI (reference 800-unique / 6000-total rule)
     mi_cols = [c for c in union_cols if c in valid.get("mutual_info", [])]
     dropped = []
     if "mutual_info" in real_measures and mi_cols:
-        card = df.agg(
-            *[F.count_distinct(F.col(c)).alias(c) for c in mi_cols],
-        ).collect()[0].asDict()
+        card = src.distinct_counts(mi_cols)
         total = sum(card.values())
         for c in sorted(mi_cols, key=lambda c: -card[c]):
             if total <= max_nunique:
@@ -437,61 +462,16 @@ def dependence(
 
     if "pearson" in real_measures:
         pairs = pairs_for(valid["pearson"])
-        if pairs:
-            row = _pairwise_corr(df, pairs)
-            for i, p in enumerate(pairs):
-                record(p, "pearson", row[f"corr_{i}"], row[f"shared_{i}"], row[f"union_{i}"])
-                caller.update(1)
+        for p, (corr, shared, union) in zip(pairs, src.pearson(pairs)):
+            record(p, "pearson", corr, shared, union)
+            caller.update(1)
 
     if "spearman" in real_measures:
         pairs = pairs_for(valid["spearman"])
-        if pairs:
-            nullc = df.agg(
-                *[
-                    (F.count(F.lit(1)) - F.count(F.col(c))).alias(c)
-                    for c in valid["spearman"]
-                ],
-            ).collect()[0].asDict()
-            no_null_cols = [c for c in valid["spearman"] if nullc[c] == 0]
-            fast = [p for p in pairs if p[0] in no_null_cols and p[1] in no_null_cols]
-            slow = [p for p in pairs if p not in fast]
-            if fast:
-                ranked = df
-                for c in sorted({c for p in fast for c in p}):
-                    r0 = _rank_column(ranked, c)
-                    ranked = attach_persisted(
-                        r0.withColumnRenamed("__rank", f"__rk_{c}"),
-                        *persisted_frames(r0),
-                    )
-                rpairs = [(f"__rk_{a}", f"__rk_{b}") for a, b in fast]
-                row = _pairwise_corr(ranked, rpairs)
-                release(ranked)
-                for i, p in enumerate(fast):
-                    record(p, "spearman", row[f"corr_{i}"], row[f"shared_{i}"], row[f"union_{i}"])
-                    caller.update(1)
-            if slow:
-                # ALL slow-pair shared/union counts in ONE agg (same
-                # batching as the fast path and MI) — a wide all-nullable
-                # table used to issue one count job per pair, O(p^2) jobs
-                su = df.agg(
-                    *[
-                        e
-                        for i, (a, b) in enumerate(slow)
-                        for e in (
-                            F.sum(
-                                (F.col(a).isNotNull() & F.col(b).isNotNull()).cast("long"),
-                            ).alias(f"s_{i}"),
-                            F.sum(
-                                (F.col(a).isNotNull() | F.col(b).isNotNull()).cast("long"),
-                            ).alias(f"u_{i}"),
-                        )
-                    ],
-                ).collect()[0]
-                for i, (a, b) in enumerate(slow):
-                    s, u = su[f"s_{i}"] or 0, su[f"u_{i}"] or 0
-                    corr = _spearman_pair(df, a, b) if s >= min_shared else None
-                    record((a, b), "spearman", corr, s, u)
-                    caller.update(1)
+        got = src.spearman(valid["spearman"], pairs, min_shared)
+        for p, (corr, shared, union) in zip(pairs, got):
+            record(p, "spearman", corr, shared, union)
+            caller.update(1)
 
     if "mutual_info" in real_measures:
         pairs = pairs_for(valid["mutual_info"])
@@ -503,70 +483,28 @@ def dependence(
                 if schema.columns[c].is_numeric
                 or isinstance(schema.columns[c].logical_type, (Datetime, BooleanNullable))
             ]
-            bins = _bin_exprs(df, numeric_like, num_bins)
-            binned = df.select(
-                *[
-                    bins.get(c, F.col(c)).alias(c) if c in bins else F.col(c).cast("string").alias(c)
-                    for c in valid["mutual_info"]
-                ],
+            conts = src.contingencies(
+                valid["mutual_info"], numeric_like, num_bins, pairs,
             )
             caller.update(len(valid["mutual_info"]))
-            # ALL pair union counts in ONE agg (the same batching
-            # _pairwise_corr uses) — O(1) jobs instead of one per pair
-            union_row = df.agg(
-                *[
-                    F.sum(
-                        (F.col(a).isNotNull() | F.col(b).isNotNull()).cast("long"),
-                    ).alias(f"u_{i}")
-                    for i, (a, b) in enumerate(pairs)
-                ],
-            ).collect()[0]
-            # contingency tables grouped _MI_CHUNK pairs per job: melt each
-            # chunk to (pair_id, a_val, b_val) and aggregate once — the
-            # map-side partial agg collapses the explode to the (bounded)
-            # per-pair value-combination cardinality before the shuffle
-            conts = {i: [] for i in range(len(pairs))}
-            for start in range(0, len(pairs), _MI_CHUNK):
-                chunk = list(enumerate(pairs))[start : start + _MI_CHUNK]
-                structs = [
-                    F.struct(
-                        F.lit(i).alias("pid"),
-                        F.col(a).cast("string").alias("av"),
-                        F.col(b).cast("string").alias("bv"),
-                    )
-                    for i, (a, b) in chunk
-                ]
-                melted = (
-                    binned.select(F.explode(F.array(*structs)).alias("x"))
-                    .select("x.pid", "x.av", "x.bv")
-                    .filter(F.col("av").isNotNull() & F.col("bv").isNotNull())
-                )
-                for r in (
-                    melted.groupBy("pid", "av", "bv")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                ):
-                    conts[r["pid"]].append(r)
-            for i, (a, b) in enumerate(pairs):
-                cont = conts[i]
-                shared = sum(r["n"] for r in cont)
-                union = union_row[f"u_{i}"]
+            for (a, b), (cells, union) in zip(pairs, conts):
+                shared = sum(n for _, _, n in cells)
                 if shared == 0:
                     record((a, b), "mutual_info", None, shared, union)
                     caller.update(1)
                     continue
-                avals = sorted({r["av"] for r in cont})
-                bvals = sorted({r["bv"] for r in cont})
+                avals = sorted({av for av, _, _ in cells})
+                bvals = sorted({bv for _, bv, _ in cells})
                 table = np.zeros((len(avals), len(bvals)), dtype="int64")
                 ai = {v: j for j, v in enumerate(avals)}
                 bi = {v: j for j, v in enumerate(bvals)}
-                for r in cont:
-                    table[ai[r["av"]], bi[r["bv"]]] = r["n"]
+                for av, bv, n in cells:
+                    table[ai[av], bi[bv]] = n
                 ami = adjusted_mutual_info_from_contingency(table)
                 record((a, b), "mutual_info", ami, shared, union)
                 caller.update(1)
 
-    df.unpersist()
+    src.close()
     rows = []
     for (a, b), vals in results.items():
         row = {"column_1": a, "column_2": b}
@@ -586,9 +524,218 @@ def dependence(
     return out
 
 
+class _SparkPairs:
+    """Where :func:`dependence` gets its numbers above the local bound:
+    Spark aggregations over the cached numeric view.  Every method
+    returns plain Python values, aligned with the pairs it was given."""
+
+    def __init__(self, df):
+        self.df = df.cache()
+
+    def close(self):
+        self.df.unpersist()
+
+    def distinct_counts(self, cols):
+        return self.df.agg(
+            *[F.count_distinct(F.col(c)).alias(c) for c in cols],
+        ).collect()[0].asDict()
+
+    def pearson(self, pairs):
+        return _corr_triples(self.df, pairs)
+
+    def spearman(self, cols, pairs, min_shared):
+        """(corr, shared, union) per pair: null-free pairs rank once per
+        column; a pair with NULLs ranks its own shared rows."""
+        if not pairs:
+            return []
+        df = self.df
+        nullc = df.agg(
+            *[(F.count(F.lit(1)) - F.count(F.col(c))).alias(c) for c in cols],
+        ).collect()[0].asDict()
+        no_null_cols = [c for c in cols if nullc[c] == 0]
+        fast = [p for p in pairs if p[0] in no_null_cols and p[1] in no_null_cols]
+        slow = [p for p in pairs if p not in fast]
+        out = {}
+        if fast:
+            ranked = df
+            for c in sorted({c for p in fast for c in p}):
+                r0 = _rank_column(ranked, c)
+                ranked = attach_persisted(
+                    r0.withColumnRenamed("__rank", f"__rk_{c}"),
+                    *persisted_frames(r0),
+                )
+            rpairs = [(f"__rk_{a}", f"__rk_{b}") for a, b in fast]
+            out.update(zip(fast, _corr_triples(ranked, rpairs)))
+            release(ranked)
+        if slow:
+            # ALL slow-pair shared/union counts in ONE agg (same
+            # batching as the fast path and MI) — a wide all-nullable
+            # table used to issue one count job per pair, O(p^2) jobs
+            su = df.agg(
+                *[
+                    e
+                    for i, (a, b) in enumerate(slow)
+                    for e in (
+                        F.sum(
+                            (F.col(a).isNotNull() & F.col(b).isNotNull()).cast("long"),
+                        ).alias(f"s_{i}"),
+                        F.sum(
+                            (F.col(a).isNotNull() | F.col(b).isNotNull()).cast("long"),
+                        ).alias(f"u_{i}"),
+                    )
+                ],
+            ).collect()[0]
+            for i, (a, b) in enumerate(slow):
+                s, u = su[f"s_{i}"] or 0, su[f"u_{i}"] or 0
+                corr = _spearman_pair(df, a, b) if s >= min_shared else None
+                out[(a, b)] = (corr, s, u)
+        return [out[p] for p in pairs]
+
+    def contingencies(self, cols, numeric_like, num_bins, pairs):
+        """([(a label, b label, count)], union rows) per pair: numeric
+        columns binned on exact quantile edges, labels as strings."""
+        df = self.df
+        bins = _bin_exprs(df, numeric_like, num_bins)
+        binned = df.select(
+            *[
+                bins[c].alias(c) if c in bins else F.col(c).cast("string").alias(c)
+                for c in cols
+            ],
+        )
+        # ALL pair union counts in ONE agg (the same batching
+        # _pairwise_corr uses) — O(1) jobs instead of one per pair
+        union_row = df.agg(
+            *[
+                F.sum(
+                    (F.col(a).isNotNull() | F.col(b).isNotNull()).cast("long"),
+                ).alias(f"u_{i}")
+                for i, (a, b) in enumerate(pairs)
+            ],
+        ).collect()[0]
+        # contingency tables grouped _MI_CHUNK pairs per job: melt each
+        # chunk to (pair_id, a_val, b_val) and aggregate once — the
+        # map-side partial agg collapses the explode to the (bounded)
+        # per-pair value-combination cardinality before the shuffle
+        conts = {i: [] for i in range(len(pairs))}
+        for start in range(0, len(pairs), _MI_CHUNK):
+            chunk = list(enumerate(pairs))[start : start + _MI_CHUNK]
+            structs = [
+                F.struct(
+                    F.lit(i).alias("pid"),
+                    F.col(a).cast("string").alias("av"),
+                    F.col(b).cast("string").alias("bv"),
+                )
+                for i, (a, b) in chunk
+            ]
+            melted = (
+                binned.select(F.explode(F.array(*structs)).alias("x"))
+                .select("x.pid", "x.av", "x.bv")
+                .filter(F.col("av").isNotNull() & F.col("bv").isNotNull())
+            )
+            for r in (
+                melted.groupBy("pid", "av", "bv")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            ):
+                conts[r["pid"]].append((r["av"], r["bv"], r["n"]))
+        return [(conts[i], union_row[f"u_{i}"] or 0) for i in range(len(pairs))]
+
+
+class _LocalPairs:
+    """:class:`_SparkPairs` on the collected numeric view, in numpy:
+    the same numbers, from one driver collect.  Doubles hold NaN only
+    for NULL (``collect_bounded`` sends real NaN to Spark)."""
+
+    def __init__(self, pdf):
+        self.pdf = pdf
+
+    def close(self):
+        pass
+
+    def distinct_counts(self, cols):
+        return {c: int(self.pdf[c].nunique()) for c in cols}
+
+    def _correlate(self, pairs, rank, min_shared=0):
+        out = []
+        for a, b in pairs:
+            x = self.pdf[a].to_numpy(dtype="float64")
+            y = self.pdf[b].to_numpy(dtype="float64")
+            hx, hy = ~np.isnan(x), ~np.isnan(y)
+            both = hx & hy
+            shared, union = int(both.sum()), int((hx | hy).sum())
+            x, y = x[both], y[both]
+            if not rank:
+                corr = _local_corr(x, y)
+            elif shared >= min_shared:
+                corr = _local_corr(_average_ranks(x), _average_ranks(y))
+            else:
+                corr = None
+            out.append((corr, shared, union))
+        return out
+
+    def pearson(self, pairs):
+        return self._correlate(pairs, rank=False)
+
+    def spearman(self, cols, pairs, min_shared):
+        return self._correlate(pairs, rank=True, min_shared=min_shared)
+
+    def contingencies(self, cols, numeric_like, num_bins, pairs):
+        qs = [i / num_bins for i in range(1, num_bins)]
+        codes = {}
+        for c in cols:
+            s = self.pdf[c]
+            if c in numeric_like:
+                x = s.to_numpy(dtype="float64")
+                has = ~np.isnan(x)
+                edges = local_percentile(np.sort(x[has]), qs)
+                # right-closed bins: the bin is the count of edges < x
+                uniq = np.unique(edges or [])
+                codes[c] = (
+                    np.where(has, np.searchsorted(uniq, x, side="left"), -1),
+                    [str(i) for i in range(uniq.size + 1)],
+                )
+            else:
+                ca, ua = pd.factorize(s)
+                codes[c] = (ca, [u if isinstance(u, str) else repr(float(u)) for u in ua])
+        out = []
+        for a, b in pairs:
+            (ca, la), (cb, lb) = codes[a], codes[b]
+            both = (ca >= 0) & (cb >= 0)
+            cnt = np.bincount(
+                ca[both] * len(lb) + cb[both], minlength=len(la) * len(lb),
+            )
+            cells = [
+                (la[k // len(lb)], lb[k % len(lb)], int(cnt[k]))
+                for k in np.flatnonzero(cnt)
+            ]
+            union = int((self.pdf[a].notna() | self.pdf[b].notna()).sum())
+            out.append((cells, union))
+        return out
+
+
+def _local_corr(x, y):
+    """Spark's ``corr`` on two NULL-free arrays: NULL below two rows,
+    NaN when either side is constant (its moments are exactly 0 there)."""
+    if x.size < 2:
+        return None
+    if x.max() == x.min() or y.max() == y.min():
+        return float("nan")
+    dx, dy = x - x.mean(), y - y.mean()
+    return float(dx @ dy / np.sqrt((dx @ dx) * (dy @ dy)))
+
+
+def _average_ranks(x):
+    """Average ranks (ties share the mean rank), as :func:`_rank_column`
+    computes them: the count of smaller values plus (ties + 1) / 2."""
+    uniq, inv, cnt = np.unique(x, return_inverse=True, return_counts=True)
+    return (np.cumsum(cnt) - cnt + (cnt + 1) / 2.0)[inv]
+
+
 def _numeric_view_mixed(ww_df, cols):
-    """Like _numeric_view but keeps Categorical columns as strings (for
-    MI) while converting numeric-like columns to doubles."""
+    """Project each column to what the measures read: a double for
+    numeric-like columns (bool -> 0/1, datetime -> epoch micros, ordinal
+    -> declared rank; reference _cast_nullable_int_and_datetime_to_int.py,
+    _convert_ordinal_to_numeric.py) and a string for categoricals (MI)."""
     schema = ww_df.schema
     exprs = []
     for c in cols:

@@ -3,27 +3,37 @@
 Reference: /root/reference/woodwork/table_accessor.py:1454-1567 +
 statistics_utils/_get_describe_dict.py:51-231.
 
-Distributed design (SURVEY §3.3): the reference loops columns issuing
-pandas ops; here ALL per-column statistics are computed in ONE wide
-``df.agg`` (count/nunique/mean/std/min/max/exact percentiles/bool
-counts), plus ONE melt-based job for modes — two Spark jobs total for any
-table width.  Exact `percentile` matches pandas linear interpolation
-(reference `percentile` helper _get_describe_dict.py:27-48); set the
-``profile_percentile_mode="approx"`` config option to route quartiles
-through the bounded-state `percentile_approx` sketch instead (the
-100 TB path for high-cardinality doubles; default stays exact for
-reference parity).
+Two tiers, and only the source of the numbers differs between them:
+
+- Local (bounded input): when the described columns fit
+  ``io.LOCAL_MAX_CELLS`` (1M cells) and hold no NaN/inf, ONE Arrow
+  collect (``io.collect_bounded``) brings them to the driver and numpy
+  computes every statistic and mode — one Spark job.
+- Distributed (anything larger, or ``profile_percentile_mode`` not
+  "exact"): ONE wide ``df.agg`` (count/mean/std/min/max/exact
+  percentiles/bool counts), one count_distinct agg, and ONE melt-based
+  job for modes — three Spark jobs for any table width.
+
+Exact quartiles are linear interpolation like pandas (reference
+`percentile` helper _get_describe_dict.py:27-48), in both tiers with
+Spark's own arithmetic.  Set the ``profile_percentile_mode="approx"``
+config option to route quartiles through the bounded-state
+`percentile_approx` sketch instead (the 100 TB path for
+high-cardinality doubles; default stays exact for reference parity).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import re
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from woodwork_spark.statistics import INTEGRAL_TYPES, NUMERIC_TYPES
 from woodwork_spark.statistics import profile_percentile as _pctl
 
 STAT_ORDER = [
@@ -77,43 +87,18 @@ def describe_dict(ww_df, include=None, callback=None, results_callback=None):
     # batches all columns into two agg jobs
     caller = CallbackCaller(callback, "calculations", 1 + len(cols))
 
-    # count_distinct lives in its own agg pass: combined with exact
-    # percentile it forces the percentile buffers through an Expand
-    # (see profile.py) — two clean jobs beat one poisoned one.
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    distinct_aggs = []
-    for c in cols:
-        col = F.col(c)
-        kind = kinds[c]
-        aggs.append(F.count(col).alias(f"{c}__count"))
-        if kind in ("numeric", "category", "datetime", "other"):
-            distinct_aggs.append(F.count_distinct(col).alias(f"{c}__nunique"))
-        if kind == "numeric":
-            aggs += [
-                F.mean(col).alias(f"{c}__mean"),
-                F.stddev_samp(col).alias(f"{c}__std"),
-                F.min(col).alias(f"{c}__min"),
-                F.max(col).alias(f"{c}__max"),
-                _pctl(col, [0.25, 0.5, 0.75]).alias(f"{c}__quartiles"),
-            ]
-        elif kind == "datetime":
-            aggs += [
-                F.avg(F.unix_micros(col)).alias(f"{c}__mean_us"),
-                F.min(col).alias(f"{c}__min"),
-                F.max(col).alias(f"{c}__max"),
-            ]
-        elif kind == "boolean":
-            aggs += [
-                F.sum(F.when(col, 1).otherwise(0)).alias(f"{c}__num_true"),
-                F.sum(F.when(~col, 1).otherwise(0)).alias(f"{c}__num_false"),
-            ]
-    row = df.agg(*aggs).collect()[0].asDict()
-    if distinct_aggs:
-        row.update(df.agg(*distinct_aggs).collect()[0].asDict())
+    dtypes = {f.name: f.dataType for f in df.schema.fields}
+    local = _describe_local(df, cols, kinds, dtypes)
+    if local is None:
+        row = _describe_row(df, cols, kinds)
+        raw_modes = _modes(df, cols)
+    else:
+        row, raw_modes = local
     total = row["__total"]
     caller.update(1)
-
-    modes = _modes(df, cols, kinds)
+    modes = {
+        c: _from_string(v, dtypes[c], kinds[c]) for c, v in raw_modes.items()
+    }
 
     phys = ww_df.physical_types
     out = {}
@@ -167,12 +152,53 @@ def describe_dict(ww_df, include=None, callback=None, results_callback=None):
     return out
 
 
-def _modes(df, cols, kinds):
-    """Most frequent value per column in ONE job via melt + window.
+def _describe_row(df, cols, kinds):
+    """Every per-column statistic as one dict keyed ``{column}__{stat}``
+    (plus ``__total``): one wide agg and one count_distinct agg.
 
-    Tie-break: smallest value first, matching pandas ``Series.mode()[0]``
-    (reference _get_mode.py:1-6).  Values travel as strings; numeric ties
-    are ordered numerically via a cast sort key.
+    count_distinct lives in its own agg pass: combined with exact
+    percentile it forces the percentile buffers through an Expand
+    (see profile.py) — two clean jobs beat one poisoned one."""
+    aggs = [F.count(F.lit(1)).alias("__total")]
+    distinct_aggs = []
+    for c in cols:
+        col = F.col(c)
+        kind = kinds[c]
+        aggs.append(F.count(col).alias(f"{c}__count"))
+        if kind != "boolean":
+            distinct_aggs.append(F.count_distinct(col).alias(f"{c}__nunique"))
+        if kind == "numeric":
+            aggs += [
+                F.mean(col).alias(f"{c}__mean"),
+                F.stddev_samp(col).alias(f"{c}__std"),
+                F.min(col).alias(f"{c}__min"),
+                F.max(col).alias(f"{c}__max"),
+                _pctl(col, [0.25, 0.5, 0.75]).alias(f"{c}__quartiles"),
+            ]
+        elif kind == "datetime":
+            aggs += [
+                F.avg(F.unix_micros(col)).alias(f"{c}__mean_us"),
+                F.min(col).alias(f"{c}__min"),
+                F.max(col).alias(f"{c}__max"),
+            ]
+        elif kind == "boolean":
+            aggs += [
+                F.sum(F.when(col, 1).otherwise(0)).alias(f"{c}__num_true"),
+                F.sum(F.when(~col, 1).otherwise(0)).alias(f"{c}__num_false"),
+            ]
+    row = df.agg(*aggs).collect()[0].asDict()
+    if distinct_aggs:
+        row.update(df.agg(*distinct_aggs).collect()[0].asDict())
+    return row
+
+
+def _modes(df, cols):
+    """Most frequent value per column, as Spark's string cast, in ONE
+    job via melt + window.
+
+    Tie-break: count desc, then ``try_cast(double)`` asc, then string
+    asc — smallest value first, matching pandas ``Series.mode()[0]``
+    (reference _get_mode.py:1-6) for numeric columns.
     """
     from pyspark.sql import Window as W
 
@@ -197,12 +223,172 @@ def _modes(df, cols, kinds):
         .select("__col", "__val")
         .collect()
     )
-    raw = {r["__col"]: r["__val"] for r in top}
-    out = {}
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    for c, v in raw.items():
-        out[c] = _from_string(v, dtypes[c], kinds.get(c))
-    return out
+    return {r["__col"]: r["__val"] for r in top}
+
+
+# physical types each kind's local kernel handles; any other described
+# column (decimal, date, array, ...) keeps the whole call on Spark
+_LOCAL_TYPES = {
+    "numeric": NUMERIC_TYPES,
+    "boolean": (T.BooleanType,),
+    "datetime": (T.TimestampType,),
+    "category": (*NUMERIC_TYPES, T.BooleanType, T.StringType, T.TimestampType),
+}
+_LOCAL_TYPES["other"] = _LOCAL_TYPES["category"]
+
+
+def _describe_local(df, cols, kinds, dtypes):
+    """:func:`_describe_row` and :func:`_modes` computed on the driver
+    from one bounded collect, or None when the distributed path must
+    run: the input is over ``io.LOCAL_MAX_CELLS`` or holds NaN/inf, a
+    column's type has no local kernel, the session time zone is not an
+    IANA name, or quartiles are approximate
+    (``profile_percentile_mode``)."""
+    import zoneinfo
+
+    from woodwork_spark.config import config
+    from woodwork_spark.io import collect_bounded
+    from woodwork_spark.statistics import local_percentile, local_values
+
+    if config.get_option("profile_percentile_mode") != "exact":
+        return None
+    if not all(isinstance(dtypes[c], _LOCAL_TYPES[kinds[c]]) for c in cols):
+        return None
+    zone = None
+    if any(isinstance(dtypes[c], T.TimestampType) for c in cols):
+        try:
+            zone = zoneinfo.ZoneInfo(
+                df.sparkSession.conf.get("spark.sql.session.timeZone"),
+            )
+        except (ValueError, zoneinfo.ZoneInfoNotFoundError):
+            return None
+    pdf = collect_bounded(df.select(*cols))
+    if pdf is None:
+        return None
+    row = {"__total": len(pdf)}
+    modes = {}
+    for c in cols:
+        kind, dtype = kinds[c], dtypes[c]
+        v = local_values(pdf[c])
+        n = int(v.size)
+        row[f"{c}__count"] = n
+        if kind != "boolean":
+            row[f"{c}__nunique"] = int(np.unique(v).size)
+        if kind == "numeric":
+            # mean and std sum in collect order; sort only for quartiles
+            x = v.astype("float64")
+            lo, hi = (v.min().item(), v.max().item()) if n else (None, None)
+            if n < 2:
+                std = None
+            elif lo == hi:
+                std = 0.0  # Spark's central moments are exactly 0 here
+            else:
+                std = float(x.std(ddof=1))
+            row.update({
+                f"{c}__mean": float(x.mean()) if n else None,
+                f"{c}__std": std,
+                f"{c}__min": lo,
+                f"{c}__max": hi,
+                f"{c}__quartiles": local_percentile(
+                    np.sort(x), [0.25, 0.5, 0.75],
+                ),
+            })
+        elif kind == "datetime":
+            # Row's own conversion: naive local time of the driver process
+            as_row = T.TimestampType().fromInternal
+            row.update({
+                f"{c}__mean_us": float(v.astype("float64").mean()) if n else None,
+                f"{c}__min": as_row(int(v.min())) if n else None,
+                f"{c}__max": as_row(int(v.max())) if n else None,
+            })
+        elif kind == "boolean":
+            num_true = int(v.sum())
+            row[f"{c}__num_true"] = num_true
+            row[f"{c}__num_false"] = n - num_true
+        if n:
+            modes[c] = _local_mode(v, dtype, zone)
+    return row, modes
+
+
+def _local_mode(v, dtype, zone):
+    """:func:`_modes` for one column's non-NULL values: group by the
+    value Spark's string cast would give (timestamps as wall time in the
+    session zone, -0.0 apart from 0.0), keep the most frequent, and break
+    ties as the window does."""
+    if isinstance(dtype, T.TimestampType):
+        keys = (
+            pd.DatetimeIndex(v.view("datetime64[us]")).tz_localize("UTC")
+            .tz_convert(zone).tz_localize(None).asi8
+        )
+    elif isinstance(dtype, (T.FloatType, T.DoubleType)):
+        keys = v.view("int64" if v.dtype == np.float64 else "int32")
+    else:
+        keys = v
+    uniq, counts = np.unique(keys, return_counts=True)
+    tied = uniq[counts == counts.max()]
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        tied = tied.view(v.dtype)
+    return min((_spark_string(x, dtype) for x in tied), key=_mode_order)
+
+
+def _spark_string(x, dtype):
+    """``CAST(x AS STRING)`` for one value of a locally-described column.
+    Doubles and floats use Python's shortest repr, which parses back to
+    the same value as Java's; timestamps arrive as wall-time micros."""
+    if isinstance(dtype, T.BooleanType):
+        return "true" if x else "false"
+    if isinstance(dtype, INTEGRAL_TYPES):
+        return str(int(x))
+    if isinstance(dtype, T.DoubleType):
+        return repr(float(x))
+    if isinstance(dtype, T.FloatType):
+        return str(np.float32(x))
+    if isinstance(dtype, T.TimestampType):
+        sec, us = divmod(int(x), 1_000_000)
+        out = (_dt.datetime(1970, 1, 1) + _dt.timedelta(seconds=sec)).strftime(
+            "%Y-%m-%d %H:%M:%S",
+        )
+        return out + ("." + f"{us:06d}".rstrip("0") if us else "")
+    return x
+
+
+def _mode_order(s):
+    """Sort key of the mode window's tie-break on a string value:
+    ``try_cast(double)`` asc (NaN after numbers, NULL last), then the
+    string asc."""
+    d = _try_double(s)
+    if d is None:
+        return (2, 0.0, s)
+    if d != d:
+        return (1, 0.0, s)
+    return (0, d, s)
+
+
+# Java's Double.parseDouble grammar (decimal or hex, optional f/d suffix)
+_JAVA_DOUBLE = re.compile(
+    r"[+-]?(?:NaN|Infinity|(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?[fFdD]?"
+    r"|0[xX](?:[0-9a-fA-F]+\.?[0-9a-fA-F]*|\.[0-9a-fA-F]+)[pP][+-]?\d+[fFdD]?)",
+)
+# Java's String.trim() drops every char <= U+0020
+_JAVA_BLANK = "".join(map(chr, range(33)))
+
+
+def _try_double(s):
+    """Spark's ``try_cast(s AS double)``: Java's ``Double.parseDouble``,
+    then Spark's case-insensitive inf/nan literals; None for NULL."""
+    t = s.strip(_JAVA_BLANK)
+    if _JAVA_DOUBLE.fullmatch(t):
+        if t[-1] in "fFdD":
+            t = t[:-1]
+        return float.fromhex(t) if "x" in t or "X" in t else float(t)
+    low = t.lower()
+    if low in ("inf", "+inf", "infinity", "+infinity"):
+        return float("inf")
+    if low in ("-inf", "-infinity"):
+        return float("-inf")
+    if low in ("nan", "+nan", "-nan"):
+        return float("nan")
+    return None
 
 
 def _from_string(v, dtype, kind):

@@ -4,16 +4,28 @@ Reference: column_accessor.py:389-546 +
 statistics_utils/_get_box_plot_info_for_column.py:19-237,
 _medcouple_implementation.py:4-39, _get_medcouple_statistic.py:19-45.
 
-Distributed design: quantiles are ONE exact-percentile aggregation;
-outlier values come back as filters on the bounds (predicate-pushed
-scans), never a full collect.  The medcouple kernel is O(N²) memory by
-construction, so — exactly like the reference — it runs on a bounded
-sample (config medcouple_sample_size, default 10k) on the driver.
+Two tiers; only the source of the numbers differs (``_LocalColumn`` vs
+``_SparkColumn``), the bounds, medcouple kernel and readouts are shared:
+
+- Local: when the column fits ``io.LOCAL_MAX_CELLS`` and holds no
+  NaN/inf, ONE Arrow collect brings it to the driver; quantiles (Spark's
+  exact percentile arithmetic) and outlier values come from numpy — one
+  Spark job per call.
+- Distributed: quantiles are ONE exact-percentile aggregation; outlier
+  values come back as filters on the bounds (predicate-pushed scans),
+  never a full collect.
+
+The medcouple kernel is O(N²) memory by construction, so — exactly like
+the reference — it runs on a bounded sample (config
+medcouple_sample_size, default 10k) on the driver: the whole column
+when it is no larger than that, else Spark's seeded sample (one more
+job, in either tier).
 
 Every quantile here honors the ``profile_percentile_mode`` config
 option: "exact" (default, reference parity) buffers distinct values;
 "approx" swaps in the bounded-state ``percentile_approx`` sketch for
-the 100 TB path (see statistics/__init__.py).
+the 100 TB path (see statistics/__init__.py) and always takes the
+distributed tier.
 """
 
 from __future__ import annotations
@@ -24,6 +36,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from woodwork_spark.config import config
+from woodwork_spark.statistics import (
+    NUMERIC_TYPES,
+    local_percentile,
+    local_values,
+)
 from woodwork_spark.statistics import profile_percentile as _pctl
 
 _QUANTILES = [0.0, 0.25, 0.5, 0.75, 1.0]
@@ -138,6 +155,108 @@ def _collect_outlier_values(nonnull, c, low, high, max_values):
     return low_values, high_values
 
 
+class _SparkColumn:
+    """Where the outlier family gets its numbers above the local bound
+    (or with approximate percentiles): Spark jobs over the column's
+    non-NULL rows."""
+
+    def __init__(self, ww_df, column):
+        self.c = F.col(column)
+        self.nonnull = ww_df.raw.filter(self.c.isNotNull())
+
+    def quantiles(self):
+        """(non-NULL count, {fraction: quantile}) in ONE agg."""
+        row = self.nonnull.agg(
+            F.count(self.c).alias("n"),
+            *[
+                _pctl(self.c, qq).alias(f"q{int(qq * 100)}")
+                for qq in _QUANTILES
+            ],
+        ).collect()[0]
+        return row["n"], {qq: row[f"q{int(qq * 100)}"] for qq in _QUANTILES}
+
+    def sample(self, sample_size, sample_mode, n):
+        return _sampled_values(
+            self.nonnull, self.c, sample_size, sample_mode, known_total=n,
+        )
+
+    def outliers(self, low, high, max_values):
+        return _collect_outlier_values(
+            self.nonnull, self.c, low, high, max_values,
+        )
+
+
+class _LocalColumn(_SparkColumn):
+    """The same numbers from the column's collected non-NULL values
+    (native dtype, collect order).  A medcouple sample larger than
+    medcouple_sample_size still comes from Spark's seeded sample."""
+
+    def __init__(self, ww_df, column, values):
+        super().__init__(ww_df, column)
+        self.values = values
+        self.x = values.astype("float64")
+
+    def quantiles(self):
+        q = local_percentile(np.sort(self.x), _QUANTILES) or [None] * 5
+        return self.x.size, dict(zip(_QUANTILES, q))
+
+    def sample(self, sample_size, sample_mode, n):
+        if n <= sample_size:
+            return self.x
+        return super().sample(sample_size, sample_mode, n)
+
+    def outliers(self, low, high, max_values):
+        low_values = self.values[self.x < low]
+        high_values = self.values[self.x > high]
+        if max_values is not None:
+            low_values = np.sort(low_values)[:max_values]
+            high_values = np.sort(high_values)[
+                max(high_values.size - max_values, 0):
+            ]
+        return low_values.tolist(), high_values.tolist()
+
+
+def _column_source(ww_df, column):
+    """:class:`_LocalColumn` when exact percentiles are asked for and the
+    column (integral or floating) fits ``io.LOCAL_MAX_CELLS`` with no
+    NaN/inf, else :class:`_SparkColumn`."""
+    from woodwork_spark.io import collect_bounded
+
+    dtype = ww_df.raw.schema[column].dataType
+    if (
+        config.get_option("profile_percentile_mode") == "exact"
+        and isinstance(dtype, NUMERIC_TYPES)
+    ):
+        pdf = collect_bounded(ww_df.raw.select(column))
+        if pdf is not None:
+            return _LocalColumn(ww_df, column, local_values(pdf[column]))
+    return _SparkColumn(ww_df, column)
+
+
+def _box_plot_empty(include_indices_and_values):
+    out = {
+        "low_bound": float("nan"),
+        "high_bound": float("nan"),
+        "quantiles": {q: float("nan") for q in _QUANTILES},
+    }
+    if include_indices_and_values:
+        out["low_values"] = []
+        out["high_values"] = []
+    return out
+
+
+def _box_plot_result(src, q, include_indices_and_values, max_values):
+    iqr = q[0.75] - q[0.25]
+    low_bound = max(round(q[0.25] - 1.5 * iqr, 10), q[0.0])
+    high_bound = min(round(q[0.75] + 1.5 * iqr, 10), q[1.0])
+    out = {"low_bound": low_bound, "high_bound": high_bound, "quantiles": q}
+    if include_indices_and_values:
+        out["low_values"], out["high_values"] = src.outliers(
+            low_bound, high_bound, max_values,
+        )
+    return out
+
+
 def box_plot_dict(
     ww_df,
     column,
@@ -152,9 +271,7 @@ def box_plot_dict(
     list at the N most extreme values (None = collect all, reference
     parity)."""
     _numeric_col_or_raise(ww_df, column)
-    df = ww_df.raw
-    c = F.col(column)
-    nonnull = df.filter(c.isNotNull())
+    src = None
     if quantiles is not None:
         needed = {0.0, 0.25, 0.75, 1.0} - set(quantiles)
         if needed:
@@ -162,36 +279,14 @@ def box_plot_dict(
                 "Input quantiles do not contain the minimum necessary quantiles",
             )
         q = dict(quantiles)
-        row = {"n": 1}
     else:
-        row = nonnull.agg(
-            F.count(c).alias("n"),
-            *[
-                _pctl(c, qq).alias(f"q{int(qq * 100)}")
-                for qq in _QUANTILES
-            ],
-        ).collect()[0]
-    if row["n"] == 0:
-        out = {
-            "low_bound": float("nan"),
-            "high_bound": float("nan"),
-            "quantiles": {q: float("nan") for q in _QUANTILES},
-        }
-        if include_indices_and_values:
-            out["low_values"] = []
-            out["high_values"] = []
-        return out
-    if quantiles is None:
-        q = {qq: row[f"q{int(qq * 100)}"] for qq in _QUANTILES}
-    iqr = q[0.75] - q[0.25]
-    low_bound = max(round(q[0.25] - 1.5 * iqr, 10), q[0.0])
-    high_bound = min(round(q[0.75] + 1.5 * iqr, 10), q[1.0])
-    out = {"low_bound": low_bound, "high_bound": high_bound, "quantiles": q}
-    if include_indices_and_values:
-        out["low_values"], out["high_values"] = _collect_outlier_values(
-            nonnull, c, low_bound, high_bound, max_values,
-        )
-    return out
+        src = _column_source(ww_df, column)
+        n, q = src.quantiles()
+        if n == 0:
+            return _box_plot_empty(include_indices_and_values)
+    if include_indices_and_values and src is None:
+        src = _column_source(ww_df, column)
+    return _box_plot_result(src, q, include_indices_and_values, max_values)
 
 
 def _medcouple(values: np.ndarray) -> float:
@@ -261,20 +356,13 @@ def medcouple_dict(ww_df, column, sample_mode="random", max_values=None):
     _get_medcouple_statistic.py:19-45); ``max_values`` bounds the
     collected outlier lists (None = all, reference parity)."""
     _numeric_col_or_raise(ww_df, column)
-    df = ww_df.raw
-    c = F.col(column)
-    nonnull = df.filter(c.isNotNull())
     sample_size = config.get_option("medcouple_sample_size")
     # ONE agg for the non-null count (sizes the sample fraction) AND the
     # percentiles — instead of a count job, a sample job, and a separate
     # percentile job serially re-scanning the column
-    row = nonnull.agg(
-        F.count(c).alias("n"),
-        *[_pctl(c, q).alias(f"q{int(q * 100)}") for q in _QUANTILES],
-    ).collect()[0]
-    values = _sampled_values(
-        nonnull, c, sample_size, sample_mode, known_total=row["n"],
-    )
+    src = _column_source(ww_df, column)
+    n, q = src.quantiles()
+    values = src.sample(sample_size, sample_mode, n)
     if values.size == 0:
         return {
             "low_bound": float("nan"),
@@ -284,11 +372,10 @@ def medcouple_dict(ww_df, column, sample_mode="random", max_values=None):
             "low_values": [],
             "high_values": [],
         }
-    q = {qq: row[f"q{int(qq * 100)}"] for qq in _QUANTILES}
-    return _medcouple_result(nonnull, c, q, values, max_values)
+    return _medcouple_result(src, q, values, max_values)
 
 
-def _medcouple_result(nonnull, c, q, values, max_values, mc=None):
+def _medcouple_result(src, q, values, max_values, mc=None):
     """Medcouple bounds + outlier collect from an ALREADY-computed
     quantile dict and sample — shared by :func:`medcouple_dict` and
     :func:`get_outliers`, which folds its method-choice agg/sample
@@ -310,7 +397,7 @@ def _medcouple_result(nonnull, c, q, values, max_values, mc=None):
         high = q[0.75] + 1.5 * np.exp(-coeff * mc) * iqr
     low = max(round(float(low), 10), q[0.0])
     high = min(round(float(high), 10), q[1.0])
-    low_values, high_values = _collect_outlier_values(nonnull, c, low, high, max_values)
+    low_values, high_values = src.outliers(low, high, max_values)
     return {
         "low_bound": low,
         "high_bound": high,
@@ -334,31 +421,19 @@ def get_outliers(ww_df, column, method="best", sample_mode="random", max_values=
     if method == "medcouple":
         return medcouple_dict(ww_df, column, sample_mode=sample_mode, max_values=max_values)
     _numeric_col_or_raise(ww_df, column)
-    c = F.col(column)
-    nonnull = ww_df.raw.filter(c.isNotNull())
     sample_size = config.get_option("medcouple_sample_size")
     # ONE shared agg feeds everything downstream: the sample-sizing
     # count, the method-choice medcouple sample, and the quantiles BOTH
     # readouts need — 'best' used to pay a count job + its chosen
     # method's full agg + (medcouple path) a second sample over the
     # same column.
-    row = nonnull.agg(
-        F.count(c).alias("n"),
-        *[
-            _pctl(c, qq).alias(f"q{int(qq * 100)}")
-            for qq in _QUANTILES
-        ],
-    ).collect()[0]
-    if row["n"] == 0:
-        return box_plot_dict(ww_df, column, max_values=max_values)
-    values = _sampled_values(
-        nonnull, c, sample_size, sample_mode, known_total=row["n"],
-    )
+    src = _column_source(ww_df, column)
+    n, q = src.quantiles()
+    if n == 0:
+        return _box_plot_empty(True)
+    values = src.sample(sample_size, sample_mode, n)
     mc = _medcouple(values) if values.size else float("nan")
     threshold = config.get_option("medcouple_threshold")
-    q = {qq: row[f"q{int(qq * 100)}"] for qq in _QUANTILES}
     if np.isnan(mc) or abs(mc) < threshold:
-        return box_plot_dict(
-            ww_df, column, quantiles=q, max_values=max_values,
-        )
-    return _medcouple_result(nonnull, c, q, values, max_values, mc=mc)
+        return _box_plot_result(src, q, True, max_values)
+    return _medcouple_result(src, q, values, max_values, mc=mc)
