@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import re
+import zoneinfo
 
 import numpy as np
 import pandas as pd
@@ -33,7 +34,13 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from woodwork_spark.statistics import INTEGRAL_TYPES, NUMERIC_TYPES
+from woodwork_spark.config import config
+from woodwork_spark.statistics import (
+    INTEGRAL_TYPES,
+    NUMERIC_TYPES,
+    local_percentile,
+    local_values,
+)
 from woodwork_spark.statistics import profile_percentile as _pctl
 
 STAT_ORDER = [
@@ -244,11 +251,7 @@ def _describe_local(df, cols, kinds, dtypes):
     column's type has no local kernel, the session time zone is not an
     IANA name, or quartiles are approximate
     (``profile_percentile_mode``)."""
-    import zoneinfo
-
-    from woodwork_spark.config import config
     from woodwork_spark.io import collect_bounded
-    from woodwork_spark.statistics import local_percentile, local_values
 
     if config.get_option("profile_percentile_mode") != "exact":
         return None
