@@ -5,7 +5,7 @@
 - ``step``: Spark rounds with the per-round driver solve
   (``LOCAL_MAX_ROWS = 0``);
 - ``layered``: Spark rounds with the in-plan Cholesky layers
-  (``LOCAL_MAX_ROWS = 0`` and ``WW_GLM_LOCAL_SOLVE_MAX_GROUPS`` below the
+  (``LOCAL_MAX_ROWS = 0`` and ``linalg.LOCAL_MAX_GROUPS`` below the
   group count).
 
 Each fit shape (grouped, ungrouped, stratified; one covariate and two)
@@ -54,6 +54,7 @@ def fit(monkeypatch):
     tier calls the spies saw)."""
     seen = {"local": [], "step": []}
     local_fit, step = timeseries._cox_fit_local, linalg.newton_step_local
+    max_groups = linalg.LOCAL_MAX_GROUPS
 
     def spy_local(*a, **k):
         out = local_fit(*a, **k)
@@ -74,15 +75,12 @@ def fit(monkeypatch):
         monkeypatch.setattr(
             timeseries, "LOCAL_MAX_ROWS", max_rows if tier == "local" else 0,
         )
-        if tier == "layered":
-            # one group is within a bound of 1, so ungrouped fits need 0
-            monkeypatch.setenv(
-                "WW_GLM_LOCAL_SOLVE_MAX_GROUPS", "1" if group else "0",
-            )
-        else:
-            monkeypatch.delenv(
-                "WW_GLM_LOCAL_SOLVE_MAX_GROUPS", raising=False,
-            )
+        # layered: one group is within a bound of 1, so ungrouped fits
+        # need 0
+        monkeypatch.setattr(
+            linalg, "LOCAL_MAX_GROUPS",
+            (1 if group else 0) if tier == "layered" else max_groups,
+        )
         out = timeseries.cox_ph_fit(
             df, "t", "d", x, group, iters=ITERS, strata_cols=strata,
         )
@@ -201,7 +199,7 @@ def test_one_group_bound_probe_per_fit(spark, monkeypatch, which):
         return out
 
     monkeypatch.setattr(linalg, "newton_step_local", spy)
-    monkeypatch.setenv("WW_GLM_LOCAL_SOLVE_MAX_GROUPS", "1")
+    monkeypatch.setattr(linalg, "LOCAL_MAX_GROUPS", 1)
     rng = np.random.RandomState(3)
     # ev: 0 censored, 1 event, 2 competing event (Fine-Gray only)
     ncause = 3 if which == "fine_gray" else 2

@@ -801,16 +801,17 @@ def _pq_train(
     Bounded inputs train DRIVER-LOCALLY (same quantized trajectory,
     see :func:`_pq_train_local`): one bounded collect through the pts
     cache replaces the seeding collect plus one assignment+update job
-    per iteration.  Above ``WW_ANN_LOCAL_TRAIN_MAX`` (default 100k
+    per iteration.  Above ``similarity.LOCAL_MAX_TRAIN_ROWS`` (100k
     source rows) the distributed loop below runs unchanged — the
     100 TB regime never collects."""
-    import os
+    from woodwork_spark.operators.similarity import LOCAL_MAX_TRAIN_ROWS
 
     if n_subspaces < 1 or k < 2 or iterations < 0:
         raise ValueError(f"{who}: bad n_subspaces/k/iterations")
     pts, dsub = _pq_explode(df, id_col, vec_col, n_subspaces, d=d)
-    max_local = int(os.environ.get("WW_ANN_LOCAL_TRAIN_MAX", "100000"))
-    sub_rows = _pq_bounded_sub_rows(pts, max_local, n_subspaces, dsub)
+    sub_rows = _pq_bounded_sub_rows(
+        pts, LOCAL_MAX_TRAIN_ROWS, n_subspaces, dsub,
+    )
     if sub_rows is not None:
         return _pq_train_local(
             sub_rows, k, iterations, quantize, who,
@@ -898,11 +899,10 @@ def ivf_pq_search(
     squared distance; the final top ``top_k`` sorts by (exact, id) and
     the output gains an ``exact_dist`` column after ``approx_dist``.
     """
-    import os
-
     from woodwork_spark.lifecycle import attach_persisted, persisted_frames
     from woodwork_spark.operators.scale import local_rows_df
     from woodwork_spark.operators.similarity import (
+        LOCAL_MAX_TRAIN_ROWS,
         _bounded_local_rows,
         _lloyd_assign_local,
         _lloyd_local,
@@ -937,13 +937,12 @@ def ivf_pq_search(
     # as a broadcast local frame (no shuffle of the vectors, where the
     # distributed path joins the full-width table by id), and the code
     # table + every query branch below stay distributed.  Above
-    # WW_ANN_LOCAL_TRAIN_MAX (default 100k rows) nothing collects and
+    # similarity.LOCAL_MAX_TRAIN_ROWS (100k rows) nothing collects and
     # the established distributed path runs unchanged.
-    max_local = int(os.environ.get("WW_ANN_LOCAL_TRAIN_MAX", "100000"))
     base = df.where(F.col(id_col).isNotNull() & fv.isNotNull()).select(
         F.col(id_col).alias("__id"), fv.alias("__v"),
     )
-    local = _bounded_local_rows(base, max_local, d=d)
+    local = _bounded_local_rows(base, LOCAL_MAX_TRAIN_ROWS, d=d)
     caches = []
     if local is not None:
         coarse = _lloyd_local(local, init, coarse_iterations, quantize)

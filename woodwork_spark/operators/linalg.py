@@ -3,14 +3,14 @@
 The multi-covariate fitters (logistic / Poisson IRLS, Cox partial-
 likelihood Newton) need to solve a symmetric positive-definite d x d
 system per group per iteration, where d = covariates + intercept is
-small (<= ~10) but the group count is unbounded.  Collecting the
-sufficient-stat frame to the driver each round would work (one row per
-group), but it forces an action per iteration and puts NumPy in the
-loop; instead this module unrolls a Cholesky factorization + solve as
-LAYERS of named column expressions over the one-row-per-group frame, so
-the whole k-step fit remains ONE lazy Catalyst plan with no driver math
-and no collect — the same "pure column algebra" convention as the
-single-covariate engines (regression._glm_newton_fit).
+small (<= ~10) but the group count is unbounded.  :func:`newton_step`
+is the one entry point for such a round.  Up to
+:data:`LOCAL_MAX_GROUPS` groups it collects the one-row-per-group
+sufficient stats and solves them on the driver
+(:func:`chol_solve_local`).  Above that bound it unrolls a Cholesky
+factorization + solve as LAYERS of named column expressions over the
+one-row-per-group frame, so the round stays a lazy Catalyst plan with
+no driver math and no collect.  Both solves give bit-identical results.
 
 Layering matters: Cholesky entries reference earlier entries, and
 inlining those references would duplicate subtrees exponentially.  Each
@@ -26,6 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Group count up to which a Newton round solves on the driver; above it
+# the solve stays in-plan (feature screens keep millions of groups).
+LOCAL_MAX_GROUPS = 10_000
 
 
 def chol_solve_layers(
@@ -163,28 +167,55 @@ def chol_solve_local(d: int, a, rhs: dict):
     return X, P
 
 
+def newton_step(step, group_cols, bnames, a_name, u_names, pref, local):
+    """One guarded Newton update ``b + A^-1 u`` per group over the
+    one-row-per-group sufficient-stat frame ``step`` (its columns:
+    ``group_cols``, the current coefficients ``bnames``, the
+    lower-triangle information ``a_name(i, j)`` and the score
+    ``u_names``).  Returns ``(beta_df, local)``, the new coefficient
+    frame and whether the next round may try the driver again.
+
+    While ``local`` is true, the round collects ``step`` and solves on
+    the driver (:func:`newton_step_local`) if the group count is at
+    most :data:`LOCAL_MAX_GROUPS`.  Otherwise the solve stays in-plan
+    as the :func:`chol_solve_layers` layers under the :func:`pd_ok`
+    guard (a non-PD group keeps its coefficients), and the group-sized
+    result is checkpointed eagerly, so each round's plan does not embed
+    the previous one; ``local`` then turns False, so later rounds of
+    the fit skip the probe collect."""
+    if local:
+        nb = newton_step_local(step, group_cols, bnames, a_name, u_names)
+        if nb is not None:
+            return nb, True
+    layers, sol, piv = chol_solve_layers(
+        len(bnames), a_name, {"s": u_names}, pref=pref,
+    )
+    ok = pd_ok(piv)
+    beta_df = apply_layers(step, layers).select(
+        *group_cols,
+        *[
+            F.when(ok, F.col(b) + F.col(s)).otherwise(F.col(b)).alias(b)
+            for b, s in zip(bnames, sol["s"])
+        ],
+    )
+    return beta_df.localCheckpoint(eager=True), False
+
+
 def newton_step_local(step, group_cols, bnames, a_name, u_names):
-    """One DRIVER-side Newton update over the collected sufficient-stat
-    frame ``step`` (one tiny row per group): collect bounded by
-    ``WW_GLM_LOCAL_SOLVE_MAX_GROUPS`` (default 10k), solve each group
-    with :func:`chol_solve_local` (bit-identical to the layered
+    """The driver half of :func:`newton_step`: collect ``step`` bounded
+    by :data:`LOCAL_MAX_GROUPS`, solve each group with
+    :func:`chol_solve_local` (bit-identical to the layered
     expressions), guard with :func:`pd_ok_local`, and return the new
     coefficient frame as a broadcast-ready local frame.  Returns None
-    when the group count exceeds the bound — the caller falls back to
-    the layered + localCheckpoint path for the rest of the fit."""
-    import os
-
+    when the group count exceeds the bound."""
     from pyspark.sql import types as T
 
     from woodwork_spark.operators.scale import local_rows_df
 
-    max_groups = int(
-        os.environ.get("WW_GLM_LOCAL_SOLVE_MAX_GROUPS", "10000"),
-    )
-    if max_groups <= 0:
+    if LOCAL_MAX_GROUPS <= 0:
         return None
-    rows = step.limit(max_groups + 1).collect()
-    if len(rows) > max_groups:
+    rows = step.limit(LOCAL_MAX_GROUPS + 1).collect()
+    if len(rows) > LOCAL_MAX_GROUPS:
         return None
     k = len(bnames)
     out_rows = []

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from woodwork_spark.operators.scale import local_rows_df
+from woodwork_spark.operators.timeseries import _key_join
 
 _MAX_AGG_FEATURES = 200
 
@@ -259,7 +260,7 @@ def _glm_newton_fit(
 
     def _joined(coef):
         if group_cols:
-            return base.join(F.broadcast(coef), group_cols)
+            return _key_join(base, coef, group_cols, broadcast=True)
         return base.crossJoin(F.broadcast(coef))
 
     def _mu_w(eta):
@@ -374,11 +375,11 @@ def _glm_irls_fit(
     round ONE aggregate folds the d-vector score ``U_j = sum x_j (y -
     mu)`` and the d(d+1)/2 lower-triangle entries of the Fisher
     information ``A_ij = sum x_i x_j w`` (d = k + 1, ``x_0 = 1``), and
-    the d x d system solves IN SPARK via the unrolled-Cholesky layers of
-    :mod:`~woodwork_spark.operators.linalg` over the one-row-per-group
-    frame — so the whole fit is still one lazy plan with no driver math
-    and no collect, exactly like the single-covariate engine (which
-    stays on its closed-form 2x2 path).
+    :func:`~woodwork_spark.operators.linalg.newton_step` solves the
+    d x d system per group: on the driver while the group count is
+    within ``linalg.LOCAL_MAX_GROUPS``, else in Spark via the
+    unrolled-Cholesky layers over the one-row-per-group frame (the
+    single-covariate engine stays on its closed-form 2x2 path).
 
     The positive-definite guard (every Cholesky pivot > 0 — Sylvester's
     criterion, the d-dim analogue of ``det > 0``) keeps a group's
@@ -399,6 +400,7 @@ def _glm_irls_fit(
     from woodwork_spark.operators.linalg import (
         apply_layers,
         chol_solve_layers,
+        newton_step,
         pd_ok,
     )
     from woodwork_spark.operators.stats_tests import (
@@ -444,7 +446,7 @@ def _glm_irls_fit(
 
     def _joined(coef):
         if group_cols:
-            return base.join(F.broadcast(coef), group_cols)
+            return _key_join(base, coef, group_cols, broadcast=True)
         return base.crossJoin(F.broadcast(coef))
 
     def _xs():
@@ -511,36 +513,15 @@ def _glm_irls_fit(
             *[c for c in step.columns if c not in named], *reps,
         )
 
-    # Driver-local Newton solve (guide §1.2 step 1): the per-round
-    # state is d + d(d+1)/2 numbers PER GROUP, so when the group count
-    # fits the driver bound the round's sufficient stats collect and
-    # the Cholesky solve runs in Python via linalg.chol_solve_local —
-    # BIT-IDENTICAL formulas/order/NULL semantics to the layered
-    # column expressions, so the trajectory is unchanged double for
-    # double.  This removes the per-round localCheckpoint job and the
-    # Catalyst analysis of the d^3 unrolled solve layers; the
-    # aggregates themselves stay distributed.  Above the bound
-    # (WW_GLM_LOCAL_SOLVE_MAX_GROUPS, default 10k — feature-screening
-    # scale keeps millions of groups distributed) the layered path
-    # below runs unchanged, checkpointing per round as before.
-    import os
-
-    from pyspark.sql import types as T
-
-    from woodwork_spark.operators.linalg import (
-        chol_solve_local,
-        pd_ok_local,
-    )
-
-    max_groups = int(
-        os.environ.get("WW_GLM_LOCAL_SOLVE_MAX_GROUPS", "10000"),
-    )
-    coef_schema = T.StructType(
-        [base.schema[g] for g in group_cols]
-        + [T.StructField(f"__b{j}", T.DoubleType()) for j in range(d)],
-    )
-    local_solve = max_groups > 0
-    spark = df.sparkSession
+    # Each round's Newton step: solved on the driver while the group
+    # count is within linalg.LOCAL_MAX_GROUPS (one collect of the
+    # group-sized stats; bit-identical to the layered solve), else
+    # in-plan as the unrolled Cholesky layers with an eager checkpoint
+    # per round (see linalg.newton_step).  The aggregates themselves
+    # stay distributed either way.
+    bnames = [f"__b{j}" for j in range(d)]
+    u_names = [f"__u{j}" for j in range(d)]
+    local = True
     for it in range(int(iters)):
         cur = _joined(coef)
         eta = F.col("__b0")
@@ -551,53 +532,12 @@ def _glm_irls_fit(
         cur = _eta_mu_cols(cur, eta)
         mu, w = F.col("__mu"), _w_of(F.col("__mu"))
         step = _penalized(cur.groupBy(*group_cols).agg(
-            *[F.max(f"__b{j}").alias(f"__b{j}") for j in range(d)],
+            *[F.max(b).alias(b) for b in bnames],
             *_suff_aggs(mu, w, _xs()),
         ))
-        if local_solve:
-            rows = step.limit(max_groups + 1).collect()
-            if len(rows) > max_groups:
-                local_solve = False  # fall through to the layered path
-            else:
-                out_rows = []
-                for r in rows:
-                    sol, piv = chol_solve_local(
-                        d,
-                        lambda i, j, r=r: r[a_name(i, j)],
-                        {"s": [r[f"__u{j}"] for j in range(d)]},
-                    )
-                    ok = pd_ok_local(piv)
-                    out_rows.append(
-                        tuple(r[g] for g in group_cols)
-                        + tuple(
-                            r[f"__b{j}"] + sol["s"][j]
-                            if ok else r[f"__b{j}"]
-                            for j in range(d)
-                        ),
-                    )
-                coef = local_rows_df(spark, out_rows, schema=coef_schema)
-                continue
-        layers, sol, piv = chol_solve_layers(
-            d, a_name, {"s": [f"__u{j}" for j in range(d)]},
-            pref=f"__it{it}",
+        coef, local = newton_step(
+            step, group_cols, bnames, a_name, u_names, f"__it{it}", local,
         )
-        solved = apply_layers(step, layers)
-        ok = pd_ok(piv)
-        coef = solved.select(
-            *group_cols,
-            *[
-                F.when(
-                    ok, F.col(f"__b{j}") + F.col(sol["s"][j]),
-                ).otherwise(F.col(f"__b{j}")).alias(f"__b{j}")
-            for j in range(d)
-            ],
-        )
-        # eager checkpoint of the GROUP-sized coefficient frame per
-        # round — the bradley_terry convention: without it each
-        # round's plan embeds the previous one (join + agg + 3d solve
-        # layers) and Catalyst analysis time grows superlinearly in
-        # iters (17 s of planning for a 6-round k=2 fit at tiny SF)
-        coef = coef.localCheckpoint(eager=True)
     # final readout at the converged coefficients
     fin = _joined(coef)
     eta = F.col("__b0")
@@ -811,7 +751,7 @@ def logistic_fit_diag(
         .localCheckpoint(eager=True)
     )
     joined0 = (
-        raw.join(F.broadcast(means), group_cols)
+        _key_join(raw, means, group_cols, broadcast=True)
         if group_cols else raw.crossJoin(F.broadcast(means))
     )
     # centered base frame: persisted once, re-read every round
@@ -825,7 +765,7 @@ def logistic_fit_diag(
 
     def _joined(coef):
         if group_cols:
-            return base.join(F.broadcast(coef), group_cols)
+            return _key_join(base, coef, group_cols, broadcast=True)
         return base.crossJoin(F.broadcast(coef))
 
     def _with_mu(frame):
@@ -940,7 +880,7 @@ def logistic_fit_diag(
         F.sum(ll).alias("loglik"),
     )
     withm = (
-        out.join(F.broadcast(means.drop("__n")), group_cols)
+        _key_join(out, means.drop("__n"), group_cols, broadcast=True)
         if group_cols else out.crossJoin(F.broadcast(means.drop("__n")))
     )
     raw_b0 = F.element_at(F.col("__bv"), 1) - F.aggregate(
@@ -1133,7 +1073,7 @@ def gmm1d_em(
 
     def _joined(st):
         if group_cols:
-            return base.join(F.broadcast(st), group_cols)
+            return _key_join(base, st, group_cols, broadcast=True)
         return base.crossJoin(F.broadcast(st))
 
     def _pdf(mu, var):
@@ -1318,7 +1258,7 @@ def glm_lrt(
         *group_cols, F.col("loglik").alias("loglik_reduced"),
     )
     joined = (
-        lf.join(lr, group_cols) if group_cols
+        _key_join(lf, lr, group_cols) if group_cols
         else lf.crossJoin(F.broadcast(lr))
     )
     raw = F.lit(2.0) * (F.col("loglik_full") - F.col("loglik_reduced"))

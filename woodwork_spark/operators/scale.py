@@ -467,10 +467,6 @@ def fan_out_scan(df: DataFrame, multiplier: int = 1) -> DataFrame:
     jobs.  Row order changes; callers must be order-insensitive (every
     aggregate/join/window operator here is).
     """
-    import os
-
-    if os.environ.get("WW_FAN_OUT_SCAN", "1") == "0":  # A/B kill-switch
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * max(int(multiplier), 1)
     try:
@@ -484,9 +480,11 @@ def fan_out_scan(df: DataFrame, multiplier: int = 1) -> DataFrame:
 
 from contextlib import contextmanager
 
+AQE_FANOUT_MIN_SIZE = "1k"
+
 
 @contextmanager
-def aqe_fanout_floor(spark, min_size: str = None):
+def aqe_fanout_floor(spark):
     """Scoped AQE coalesce floor for materializing SMALL caches whose
     in-plan work is per-ROW-heavy (candidate verify joins, levenshtein,
     MinHash banding).
@@ -496,8 +494,8 @@ def aqe_fanout_floor(spark, min_size: str = None):
     size — correct for data-bound work, but a ~1.5 MB candidate-pair
     cache then materializes through 1-2 tasks and the expensive
     per-pair CPU work serializes (the round-12 entity_resolution
-    regression).  Inside this scope the floor drops (default 16k, env
-    ``WW_AQE_FANOUT_MIN_SIZE``) so AQE's parallelism-first sizing
+    regression).  Inside this scope the floor drops to
+    :data:`AQE_FANOUT_MIN_SIZE` so AQE's parallelism-first sizing
     (total bytes / defaultParallelism) wins for small caches.  Scale
     safe: at production cache sizes bytes/parallelism dominates any
     floor, so the scope changes nothing; it is also strictly an AQE
@@ -512,20 +510,17 @@ def aqe_fanout_floor(spark, min_size: str = None):
     persist() is invisible to the cache build (verified empirically:
     floor-before-persist -> 32 cache partitions, floor-after -> 1).
 
-    The floor defaults to 1k — with AQE's parallelism-first sizing the
+    The floor is 1k — with AQE's parallelism-first sizing the
     partition target is max(bytes/defaultParallelism, floor), so the
     count stays capped at defaultParallelism; the tiny floor only stops
     the 1 MB default from squeezing a kilobyte-sized cache into one
     task."""
-    import os
-
     key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    size = min_size or os.environ.get("WW_AQE_FANOUT_MIN_SIZE", "1k")
     try:
         prev = spark.conf.get(key)
     except Exception:
         prev = None
-    spark.conf.set(key, size)
+    spark.conf.set(key, AQE_FANOUT_MIN_SIZE)
     try:
         yield
     finally:
@@ -633,17 +628,9 @@ def local_rows_df(spark, rows, schema):
     NaN, Decimal, dates, binary, nested structs, schema-less calls)
     falls back to a ONE-slice parallelize: the identical row-verifier
     conversion, one Python task per materialization instead of one per
-    core.  Row order is preserved by both paths.
-
-    ``WW_LOCAL_ROWS_FAST=0`` routes to the verbatim stock call — the
-    A/B control used for the measurements in OPTIMIZATION_r12.md and an
-    escape hatch if a future Spark changes either path's semantics."""
-    import os
-
-    if os.environ.get("WW_LOCAL_ROWS_FAST", "1") == "0":
-        if schema is None:
-            return spark.createDataFrame(rows)
-        return spark.createDataFrame(rows, schema)
+    core.  Row order is preserved by both paths; both match the stock
+    ``createDataFrame(rows, schema)`` (``tests/test_local_rows_df.py``
+    compares them on every input shape the call sites use)."""
     rows = rows if isinstance(rows, list) else list(rows)
     if schema is None:
         return spark.createDataFrame(rows)

@@ -20,6 +20,11 @@ from pyspark.sql import functions as F
 
 from woodwork_spark.operators.scale import local_rows_df
 
+# Training rows up to which k-means and the PQ codebooks train on the
+# driver from one bounded collect (same quantized trajectory); above it
+# every round runs as Spark jobs.
+LOCAL_MAX_TRAIN_ROWS = 100_000
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -759,12 +764,11 @@ def kmeans_lloyd(
     # trajectory runs locally — one bounded collect through the pts
     # cache replaces `iterations` update jobs; the final assignment
     # (and everything downstream) stays distributed.  Above the bound
-    # (the 100 TB regime) the distributed loop below is unchanged.
-    import os
-
-    max_local = int(os.environ.get("WW_ANN_LOCAL_TRAIN_MAX", "100000"))
+    # (LOCAL_MAX_TRAIN_ROWS; the 100 TB regime) the distributed loop
+    # below is unchanged.
     local = (
-        _bounded_local_rows(pts, max_local, d=d) if iterations else None
+        _bounded_local_rows(pts, LOCAL_MAX_TRAIN_ROWS, d=d)
+        if iterations else None
     )
     if local is not None:
         cents = _lloyd_local(local, cents, iterations, quantize)

@@ -1704,6 +1704,104 @@ def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
     return rows
 
 
+def _info_name(i, j):
+    """Column holding entry (i, j), i >= j, of a Cox fit's information."""
+    return f"__a_{i}_{j}"
+
+
+def _counting_process_fold(bnames):
+    """Score/information fold of :func:`cox_ph_fit_tv` and
+    :func:`fine_gray_fit` over per-(group, time) cells carrying the
+    coefficients ``bnames``, ``__nc``, ``__dt``, ``__dx<j>`` and the
+    risk sums ``__S0``, ``__S1_<j>``, ``__S2_<i>_<j>``.  Every ``S0``
+    division sits behind the event gate ``__dt > 0``: suffix
+    cancellation drives ``S0`` to exactly 0 past the last exit, and
+    those cells carry no events.  Returns the aggregates ``bnames``,
+    ``__n``, ``__ne``, ``__ll``, ``__u<j>`` and ``__a_<i>_<j>``."""
+    k = len(bnames)
+    ev = F.col("__dt") > 0
+    s0 = F.col("__S0")
+    r1 = [
+        F.when(ev, F.col(f"__S1_{j}") / s0).otherwise(F.lit(0.0))
+        for j in range(k)
+    ]
+    lterm = None
+    for j in range(k):
+        t = F.col(bnames[j]) * F.col(f"__dx{j}")
+        lterm = t if lterm is None else lterm + t
+    aggs = [
+        *[F.max(b).alias(b) for b in bnames],
+        F.sum("__nc").alias("__n"),
+        F.sum("__dt").alias("__ne"),
+        F.sum(
+            F.when(ev, lterm - F.col("__dt") * F.log(s0))
+            .otherwise(F.lit(0.0)),
+        ).alias("__ll"),
+    ]
+    for j in range(k):
+        aggs.append(
+            F.sum(F.col(f"__dx{j}") - F.col("__dt") * r1[j]).alias(f"__u{j}"),
+        )
+    for i in range(k):
+        for j in range(i + 1):
+            aggs.append(
+                F.sum(
+                    F.when(
+                        ev,
+                        F.col("__dt")
+                        * (F.col(f"__S2_{i}_{j}") / s0 - r1[i] * r1[j]),
+                    ).otherwise(F.lit(0.0)),
+                ).alias(_info_name(i, j)),
+            )
+    return aggs
+
+
+def _cox_wald_readout(out, group_cols, bnames, xs, multi):
+    """Wald readout of a Cox-type fit from its final fold ``out``: one
+    Cholesky factorization of the information solves the unit vectors
+    for the inverse diagonal.  ``n``, ``n_events``, then ``beta, se,
+    z_stat, p_approx`` (one covariate) or ``beta_<x>, se_<x>, z_<x>,
+    p_<x>`` per covariate, then ``loglik``; every statistic is NULL
+    unless the group has events and a PD information matrix, loglik
+    too (it is evaluated at an un-updated beta and must not silently
+    feed glm_lrt)."""
+    from woodwork_spark.operators.linalg import (
+        apply_layers,
+        chol_solve_layers,
+        pd_ok,
+    )
+    from woodwork_spark.operators.stats_tests import (
+        _std_normal_two_sided_p,
+    )
+
+    k = len(bnames)
+    rhs = {
+        f"e{j}": [1.0 if m == j else 0.0 for m in range(k)]
+        for j in range(k)
+    }
+    layers, sol, piv = chol_solve_layers(k, _info_name, rhs, pref="__se")
+    ok = pd_ok(piv) & (F.col("__ne") > 0)
+    names = (
+        [(f"beta_{x}", f"se_{x}", f"z_{x}", f"p_{x}") for x in xs] if multi
+        else [("beta", "se", "z_stat", "p_approx")]
+    )
+    cols = [
+        F.col("__n").cast("long").alias("n"),
+        F.col("__ne").cast("long").alias("n_events"),
+    ]
+    for j, (bn, sn, zn, pn) in enumerate(names):
+        se = F.sqrt(F.col(sol[f"e{j}"][j]))
+        z = F.col(bnames[j]) / se
+        cols += [
+            F.when(ok, F.col(bnames[j])).alias(bn),
+            F.when(ok, se).alias(sn),
+            F.when(ok, z).alias(zn),
+            F.when(ok, _std_normal_two_sided_p(z)).alias(pn),
+        ]
+    cols.append(F.when(ok, F.col("__ll")).alias("loglik"))
+    return apply_layers(out, layers).select(*group_cols, *cols)
+
+
 def cox_ph_fit(
     df: DataFrame,
     time_col: str,
@@ -1741,12 +1839,13 @@ def cox_ph_fit(
        and x is finite, every round and the readout run in numpy
        (:func:`_cox_fit_local`) — no Spark job per round.
     2. **Per-round driver solve.**  Otherwise the rounds run as Spark
-       plans from the cached ``base``; each round's one-row-per-group
-       sufficient stats are collected and solved on the driver
-       (:func:`~woodwork_spark.operators.linalg.newton_step_local`)
-       while the group count is within ``WW_GLM_LOCAL_SOLVE_MAX_GROUPS``.
-    3. **Layered plan.**  Above that bound the solve stays in-plan as
-       the unrolled-Cholesky layers of
+       plans from the cached ``base``, and each multi-covariate round
+       steps through :func:`~woodwork_spark.operators.linalg.
+       newton_step`: its one-row-per-group sufficient stats are
+       collected and solved on the driver while the group count is
+       within :data:`~woodwork_spark.operators.linalg.LOCAL_MAX_GROUPS`.
+    3. **Layered plan.**  Above that bound the same helper keeps the
+       solve in-plan as the unrolled-Cholesky layers of
        :mod:`~woodwork_spark.operators.linalg`, with an eager checkpoint
        of the group-sized beta frame per round.
 
@@ -1784,6 +1883,7 @@ def cox_ph_fit(
 
     from woodwork_spark.io import arrow_to_pandas
     from woodwork_spark.lifecycle import attach_persisted, persisted_frames
+    from woodwork_spark.operators.linalg import newton_step
     from woodwork_spark.operators.rank import global_prefix_sums
     from woodwork_spark.operators.scale import local_rows_df
     from woodwork_spark.operators.stats_tests import (
@@ -1954,63 +2054,33 @@ def cox_ph_fit(
                     F.col("__dt")
                     * (F.col(f"__S2_{i}_{j}") / F.col("__S0")
                        - r1[i] * r1[j]),
-                ).alias(f"__a_{i}_{j}"),
+                ).alias(_info_name(i, j)),
             )
 
     beta_df = base.groupBy(*group_cols).agg(
         *[F.lit(0.0).alias(b) for b in bnames],
     )
-    a_name = lambda i, j: f"__a_{i}_{j}"  # noqa: E731
     u_names = [f"__u{j}" for j in range(k)]
     if not multi:
         b_next = F.when(
             F.col("__a_0_0") > 0,
             F.col("__b1") + F.col("__u0") / F.col("__a_0_0"),
         ).otherwise(F.lit(0.0)).alias("__b1")
-    local_solve = True
+    local = True
     for it in range(int(iters)):
         step = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold_aggs)
         if not multi:
             beta_df = step.select(*group_cols, b_next)
             continue
-        from woodwork_spark.operators.linalg import (
-            apply_layers,
-            chol_solve_layers,
-            newton_step_local,
-            pd_ok,
+        beta_df, local = newton_step(
+            step, group_cols, bnames, _info_name, u_names, f"__it{it}",
+            local,
         )
-
-        # driver-local Newton step when the group count is bounded —
-        # bit-identical solve (see linalg.chol_solve_local), one collect
-        # replaces the layered plan + eager checkpoint per round; after
-        # the first miss the rest of the fit skips the probe collect
-        if local_solve:
-            nb = newton_step_local(step, group_cols, bnames, a_name, u_names)
-            if nb is not None:
-                beta_df = nb
-                continue
-            local_solve = False
-        layers, sol, piv = chol_solve_layers(
-            k, a_name, {"s": u_names}, pref=f"__it{it}",
-        )
-        solved = apply_layers(step, layers)
-        ok = pd_ok(piv)
-        beta_df = solved.select(
-            *group_cols,
-            *[
-                F.when(
-                    ok, F.col(bnames[j]) + F.col(sol["s"][j]),
-                ).otherwise(F.col(bnames[j])).alias(bnames[j])
-                for j in range(k)
-            ],
-        )
-        # eager checkpoint of the group-sized beta frame per round —
-        # truncates the nested risk-cells lineage so Catalyst analysis
-        # stays constant per round (bradley_terry convention)
-        beta_df = beta_df.localCheckpoint(eager=True)
     # final readout: information at the FINAL beta for the Wald se
     out = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold_aggs)
-    if not multi:
+    if multi:
+        res = _cox_wald_readout(out, group_cols, bnames, xs, multi)
+    else:
         ok = (F.col("__ne") > 0) & (F.col("__a_0_0") > 0)
         se = F.lit(1.0) / F.sqrt(F.col("__a_0_0"))
         z = F.col("__b1") / se
@@ -2027,36 +2097,6 @@ def cox_ph_fit(
             # beta and must not silently feed glm_lrt
             F.when(ok, F.col("__ll")).alias("loglik"),
         )
-        return attach_persisted(res, *caches)
-    from woodwork_spark.operators.linalg import (
-        apply_layers,
-        chol_solve_layers,
-        pd_ok,
-    )
-
-    rhs = {
-        f"e{j}": [1.0 if m == j else 0.0 for m in range(k)]
-        for j in range(k)
-    }
-    layers, sol, piv = chol_solve_layers(k, a_name, rhs, pref="__se")
-    solved = apply_layers(out, layers)
-    ok = pd_ok(piv) & (F.col("__ne") > 0)
-    cols = [
-        F.col("__n").cast("long").alias("n"),
-        F.col("__ne").cast("long").alias("n_events"),
-    ]
-    for j, name in enumerate(xs):
-        se = F.sqrt(F.col(sol[f"e{j}"][j]))
-        z = F.col(bnames[j]) / se
-        cols += [
-            F.when(ok, F.col(bnames[j])).alias(f"beta_{name}"),
-            F.when(ok, se).alias(f"se_{name}"),
-            F.when(ok, z).alias(f"z_{name}"),
-            F.when(ok, _std_normal_two_sided_p(z)).alias(f"p_{name}"),
-        ]
-    # same gating as the Wald readout — see the single-covariate branch
-    cols.append(F.when(ok, F.col("__ll")).alias("loglik"))
-    res = solved.select(*group_cols, *cols)
     return attach_persisted(res, *caches)
 
 
@@ -2106,15 +2146,8 @@ def cox_ph_fit_tv(
     information yield NULL statistics (loglik gated identically).
     """
     from woodwork_spark.lifecycle import attach_persisted, persisted_frames
-    from woodwork_spark.operators.linalg import (
-        apply_layers,
-        chol_solve_layers,
-        pd_ok,
-    )
+    from woodwork_spark.operators.linalg import newton_step
     from woodwork_spark.operators.rank import global_prefix_sums
-    from woodwork_spark.operators.stats_tests import (
-        _std_normal_two_sided_p,
-    )
 
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -2221,126 +2254,20 @@ def cox_ph_fit_tv(
         caches.extend(persisted_frames(out))
         return out
 
-    def _fold_aggs():
-        # guard every S0 division behind the event gate: suffix
-        # cancellation drives S0 to exactly 0 past the last exit, and
-        # those cells carry no events
-        s0 = F.col("__S0")
-        r1 = [
-            F.when(F.col("__dt") > 0, F.col(f"__S1_{j}") / s0)
-            .otherwise(F.lit(0.0))
-            for j in range(k)
-        ]
-        lterm = None
-        for j in range(k):
-            t = F.col(bnames[j]) * F.col(f"__dx{j}")
-            lterm = t if lterm is None else lterm + t
-        aggs = [
-            F.sum("__nc").alias("__n"),
-            F.sum("__dt").alias("__ne"),
-            F.sum(
-                F.when(
-                    F.col("__dt") > 0,
-                    lterm - F.col("__dt") * F.log(s0),
-                ).otherwise(F.lit(0.0)),
-            ).alias("__ll"),
-        ]
-        for j in range(k):
-            aggs.append(
-                F.sum(
-                    F.col(f"__dx{j}") - F.col("__dt") * r1[j],
-                ).alias(f"__u{j}"),
-            )
-        for i in range(k):
-            for j in range(i + 1):
-                aggs.append(
-                    F.sum(
-                        F.when(
-                            F.col("__dt") > 0,
-                            F.col("__dt")
-                            * (F.col(f"__S2_{i}_{j}") / s0
-                               - r1[i] * r1[j]),
-                        ).otherwise(F.lit(0.0)),
-                    ).alias(f"__a_{i}_{j}"),
-                )
-        return aggs
-
+    fold = _counting_process_fold(bnames)
+    u_names = [f"__u{j}" for j in range(k)]
     beta_df = base.groupBy(*group_cols).agg(
         *[F.lit(0.0).alias(b) for b in bnames],
     )
-    a_name = lambda i, j: f"__a_{i}_{j}"  # noqa: E731
-    local_solve = True
+    local = True
     for it in range(int(iters)):
-        cells = _risk_cells(beta_df)
-        step = cells.groupBy(*group_cols).agg(
-            *[F.max(b).alias(b) for b in bnames],
-            *_fold_aggs(),
+        step = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold)
+        beta_df, local = newton_step(
+            step, group_cols, bnames, _info_name, u_names, f"__tv{it}",
+            local,
         )
-        from woodwork_spark.operators.linalg import newton_step_local
-
-        # driver-local Newton step under the group bound (see
-        # cox_ph_fit); after the first miss, no more probe collects
-        if local_solve:
-            nb = newton_step_local(
-                step, group_cols, bnames, a_name,
-                [f"__u{j}" for j in range(k)],
-            )
-            if nb is not None:
-                beta_df = nb
-                continue
-            local_solve = False
-        layers, sol, piv = chol_solve_layers(
-            k, a_name, {"s": [f"__u{j}" for j in range(k)]},
-            pref=f"__tv{it}",
-        )
-        solved = apply_layers(step, layers)
-        ok = pd_ok(piv)
-        beta_df = solved.select(
-            *group_cols,
-            *[
-                F.when(
-                    ok, F.col(bnames[j]) + F.col(sol["s"][j]),
-                ).otherwise(F.col(bnames[j])).alias(bnames[j])
-                for j in range(k)
-            ],
-        ).localCheckpoint(eager=True)
-    cells = _risk_cells(beta_df)
-    out = cells.groupBy(*group_cols).agg(
-        *[F.max(b).alias(b) for b in bnames],
-        *_fold_aggs(),
-    )
-    rhs = {
-        f"e{j}": [1.0 if m == j else 0.0 for m in range(k)]
-        for j in range(k)
-    }
-    layers, sol, piv = chol_solve_layers(k, a_name, rhs, pref="__se")
-    solved = apply_layers(out, layers)
-    ok = pd_ok(piv) & (F.col("__ne") > 0)
-    cols = [
-        F.col("__n").cast("long").alias("n"),
-        F.col("__ne").cast("long").alias("n_events"),
-    ]
-    if not multi:
-        se = F.sqrt(F.col(sol["e0"][0]))
-        z = F.col(bnames[0]) / se
-        cols += [
-            F.when(ok, F.col(bnames[0])).alias("beta"),
-            F.when(ok, se).alias("se"),
-            F.when(ok, z).alias("z_stat"),
-            F.when(ok, _std_normal_two_sided_p(z)).alias("p_approx"),
-        ]
-    else:
-        for j, name in enumerate(xs):
-            se = F.sqrt(F.col(sol[f"e{j}"][j]))
-            z = F.col(bnames[j]) / se
-            cols += [
-                F.when(ok, F.col(bnames[j])).alias(f"beta_{name}"),
-                F.when(ok, se).alias(f"se_{name}"),
-                F.when(ok, z).alias(f"z_{name}"),
-                F.when(ok, _std_normal_two_sided_p(z)).alias(f"p_{name}"),
-            ]
-    cols.append(F.when(ok, F.col("__ll")).alias("loglik"))
-    res = solved.select(*group_cols, *cols)
+    out = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold)
+    res = _cox_wald_readout(out, group_cols, bnames, xs, multi)
     return attach_persisted(res, *caches)
 
 
@@ -2394,15 +2321,8 @@ def fine_gray_fit(
     glm_lrt` for nested-model screens, same caveat).
     """
     from woodwork_spark.lifecycle import attach_persisted, persisted_frames
-    from woodwork_spark.operators.linalg import (
-        apply_layers,
-        chol_solve_layers,
-        pd_ok,
-    )
+    from woodwork_spark.operators.linalg import newton_step
     from woodwork_spark.operators.rank import global_prefix_sums
-    from woodwork_spark.operators.stats_tests import (
-        _std_normal_two_sided_p,
-    )
 
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -2576,123 +2496,20 @@ def fine_gray_fit(
             *s_exprs,
         )
 
-    def _fold_aggs():
-        s0 = F.col("__S0")
-        r1 = [
-            F.when(F.col("__dt") > 0, F.col(f"__S1_{j}") / s0)
-            .otherwise(F.lit(0.0))
-            for j in range(k)
-        ]
-        lterm = None
-        for j in range(k):
-            t = F.col(bnames[j]) * F.col(f"__dx{j}")
-            lterm = t if lterm is None else lterm + t
-        aggs = [
-            F.sum("__nc").alias("__n"),
-            F.sum("__dt").alias("__ne"),
-            F.sum(
-                F.when(
-                    F.col("__dt") > 0,
-                    lterm - F.col("__dt") * F.log(s0),
-                ).otherwise(F.lit(0.0)),
-            ).alias("__ll"),
-        ]
-        for j in range(k):
-            aggs.append(
-                F.sum(
-                    F.col(f"__dx{j}") - F.col("__dt") * r1[j],
-                ).alias(f"__u{j}"),
-            )
-        for i in range(k):
-            for j in range(i + 1):
-                aggs.append(
-                    F.sum(
-                        F.when(
-                            F.col("__dt") > 0,
-                            F.col("__dt")
-                            * (F.col(f"__S2_{i}_{j}") / s0
-                               - r1[i] * r1[j]),
-                        ).otherwise(F.lit(0.0)),
-                    ).alias(f"__a_{i}_{j}"),
-                )
-        return aggs
-
+    fold = _counting_process_fold(bnames)
+    u_names = [f"__u{j}" for j in range(k)]
     beta_df = base.groupBy(*group_cols).agg(
         *[F.lit(0.0).alias(b) for b in bnames],
     )
-    a_name = lambda i, j: f"__a_{i}_{j}"  # noqa: E731
-    local_solve = True
+    local = True
     for it in range(int(iters)):
-        cells = _risk_cells(beta_df)
-        step = cells.groupBy(*group_cols).agg(
-            *[F.max(b).alias(b) for b in bnames],
-            *_fold_aggs(),
+        step = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold)
+        beta_df, local = newton_step(
+            step, group_cols, bnames, _info_name, u_names, f"__fg{it}",
+            local,
         )
-        from woodwork_spark.operators.linalg import newton_step_local
-
-        # driver-local Newton step under the group bound (see
-        # cox_ph_fit); after the first miss, no more probe collects
-        if local_solve:
-            nb = newton_step_local(
-                step, group_cols, bnames, a_name,
-                [f"__u{j}" for j in range(k)],
-            )
-            if nb is not None:
-                beta_df = nb
-                continue
-            local_solve = False
-        layers, sol, piv = chol_solve_layers(
-            k, a_name, {"s": [f"__u{j}" for j in range(k)]},
-            pref=f"__fg{it}",
-        )
-        solved = apply_layers(step, layers)
-        ok = pd_ok(piv)
-        beta_df = solved.select(
-            *group_cols,
-            *[
-                F.when(
-                    ok, F.col(bnames[j]) + F.col(sol["s"][j]),
-                ).otherwise(F.col(bnames[j])).alias(bnames[j])
-            for j in range(k)
-            ],
-        ).localCheckpoint(eager=True)
-    cells = _risk_cells(beta_df)
-    out = cells.groupBy(*group_cols).agg(
-        *[F.max(b).alias(b) for b in bnames],
-        *_fold_aggs(),
-    )
-    rhs = {
-        f"e{j}": [1.0 if m == j else 0.0 for m in range(k)]
-        for j in range(k)
-    }
-    layers, sol, piv = chol_solve_layers(k, a_name, rhs, pref="__se")
-    solved = apply_layers(out, layers)
-    ok = pd_ok(piv) & (F.col("__ne") > 0)
-    cols = [
-        F.col("__n").cast("long").alias("n"),
-        F.col("__ne").cast("long").alias("n_events"),
-    ]
-    if not multi:
-        se = F.sqrt(F.col(sol["e0"][0]))
-        z = F.col(bnames[0]) / se
-        cols += [
-            F.when(ok, F.col(bnames[0])).alias("beta"),
-            F.when(ok, se).alias("se"),
-            F.when(ok, z).alias("z_stat"),
-            F.when(ok, _std_normal_two_sided_p(z)).alias("p_approx"),
-        ]
-    else:
-        for j, name in enumerate(xs):
-            se = F.sqrt(F.col(sol[f"e{j}"][j]))
-            z = F.col(bnames[j]) / se
-            cols += [
-                F.when(ok, F.col(bnames[j])).alias(f"beta_{name}"),
-                F.when(ok, se).alias(f"se_{name}"),
-                F.when(ok, z).alias(f"z_{name}"),
-                F.when(ok, _std_normal_two_sided_p(z)).alias(f"p_{name}"),
-            ]
-    cols.append(F.when(ok, F.col("__ll")).alias("loglik"))
-    res = solved.select(*group_cols, *cols)
+    out = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold)
+    res = _cox_wald_readout(out, group_cols, bnames, xs, multi)
     return attach_persisted(res, *caches)
 
 
