@@ -26,14 +26,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def count_py4j_calls():
     """Count driver->JVM round trips: a counting wrapper on py4j's
     ``ClientServerConnection.send_command`` (PySpark's pinned-thread
-    gateway).  Returns a one-element list holding the running count."""
+    gateway).  The object releases py4j sends when Python's garbage
+    collector frees a JavaObject are not counted: their number depends
+    on when the collector runs, not on the query.  Returns a
+    one-element list holding the running count."""
+    from py4j import protocol as proto
     from py4j.clientserver import ClientServerConnection
 
     count = [0]
     send = ClientServerConnection.send_command
+    release = proto.MEMORY_COMMAND_NAME + proto.MEMORY_DEL_SUBCOMMAND_NAME
 
     def counting_send(self, command):
-        count[0] += 1
+        if not command.startswith(release):
+            count[0] += 1
         return send(self, command)
 
     ClientServerConnection.send_command = counting_send

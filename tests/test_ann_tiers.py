@@ -1,8 +1,8 @@
 """Equivalence of the ANN quantizer training tiers.
 
-Under ``similarity.LOCAL_MAX_TRAIN_ROWS`` the k-means and PQ codebook
-training runs on the driver from one bounded collect; with the bound at
-0 every round runs as Spark jobs.  Both replay the same quantized
+Within ``io.LOCAL_MAX_CELLS`` the k-means and PQ codebook training runs
+on the driver from one bounded collect; with the bound at 0 every round
+runs as Spark jobs.  Both replay the same quantized
 trajectory (means rounded to ``quantize`` decimals after a small tie
 shift), so centroids, codes and search results must be equal, not just
 close.
@@ -11,6 +11,7 @@ close.
 import numpy as np
 import pytest
 
+from woodwork_spark import io
 from woodwork_spark.operators import embedding, similarity
 
 D = 8
@@ -42,9 +43,9 @@ def tier(monkeypatch):
 
     def run(call):
         out = {}
-        for name, bound in (("local", 100_000), ("spark", 0)):
+        for name, bound in (("local", 1_000_000), ("spark", 0)):
             calls.clear()
-            monkeypatch.setattr(similarity, "LOCAL_MAX_TRAIN_ROWS", bound)
+            monkeypatch.setattr(io, "LOCAL_MAX_CELLS", bound)
             out[name] = (call(), len(calls))
         return out
 

@@ -1,12 +1,11 @@
 """Equivalence of cox_ph_fit's three execution tiers.
 
 - ``local``: the whole fit on the driver from one bounded collect
-  (``timeseries.LOCAL_MAX_ROWS``, the default tier at this size);
-- ``step``: Spark rounds with the per-round driver solve
-  (``LOCAL_MAX_ROWS = 0``);
+  (within ``io.LOCAL_MAX_CELLS``, the default tier at this size);
+- ``step``: Spark rounds with the per-round driver solve (a cell bound
+  between the group-statistics cells and the ``base`` cells);
 - ``layered``: Spark rounds with the in-plan Cholesky layers
-  (``LOCAL_MAX_ROWS = 0`` and ``linalg.LOCAL_MAX_GROUPS`` below the
-  group count).
+  (``LOCAL_MAX_CELLS = 0``).
 
 Each fit shape (grouped, ungrouped, stratified; one covariate and two)
 runs on data with tied times, a group with no events, a degenerate
@@ -21,9 +20,13 @@ import math
 import numpy as np
 import pytest
 
+from woodwork_spark import io
 from woodwork_spark.operators import linalg, timeseries
 
 ITERS = 4
+# the step tier's cell bound: below the base frame's cells (over 600 in
+# every shape), above the group statistics' (under 100)
+STEP_CELLS = 300
 
 
 @pytest.fixture(scope="module")
@@ -54,7 +57,21 @@ def fit(monkeypatch):
     tier calls the spies saw)."""
     seen = {"local": [], "step": []}
     local_fit, step = timeseries._cox_fit_local, linalg.newton_step_local
-    max_groups = linalg.LOCAL_MAX_GROUPS
+    collect = io.collect_bounded
+    frames = []  # (rows, columns) of each bounded collect
+
+    def spy_collect(df):
+        n, c = df.count(), len(df.columns)
+        frames.append((n, c))
+        out = collect(df)
+        if (
+            out is None and "__t" in df.columns
+            and n <= io.LOCAL_MAX_CELLS // c
+        ):
+            # the base frame fits the bound but holds a NaN or inf: the
+            # whole-fit tier declines it
+            seen["local"].append(False)
+        return out
 
     def spy_local(*a, **k):
         out = local_fit(*a, **k)
@@ -68,22 +85,23 @@ def fit(monkeypatch):
 
     monkeypatch.setattr(timeseries, "_cox_fit_local", spy_local)
     monkeypatch.setattr(linalg, "newton_step_local", spy_step)
+    monkeypatch.setattr(io, "collect_bounded", spy_collect)
 
-    def run(tier, df, x, group, strata, max_rows=100_000):
+    def run(tier, df, x, group, strata, max_cells=1_000_000):
         for v in seen.values():
             v.clear()
-        monkeypatch.setattr(
-            timeseries, "LOCAL_MAX_ROWS", max_rows if tier == "local" else 0,
-        )
-        # layered: one group is within a bound of 1, so ungrouped fits
-        # need 0
-        monkeypatch.setattr(
-            linalg, "LOCAL_MAX_GROUPS",
-            (1 if group else 0) if tier == "layered" else max_groups,
-        )
+        frames.clear()
+        bound = {"local": max_cells, "step": STEP_CELLS, "layered": 0}[tier]
+        monkeypatch.setattr(io, "LOCAL_MAX_CELLS", bound)
         out = timeseries.cox_ph_fit(
             df, "t", "d", x, group, iters=ITERS, strata_cols=strata,
         )
+        if tier == "step":
+            # the base frame is over the bound, every round's group
+            # statistics within it
+            (n_base, c_base), *rounds = frames
+            assert n_base > bound // c_base
+            assert all(n <= bound // c for n, c in rounds)
         return out, out.collect(), {k: list(v) for k, v in seen.items()}
 
     return run
@@ -176,20 +194,21 @@ def test_non_finite_value_takes_spark_path(spark, cox_df, fit, x):
 
 
 def test_local_tier_skipped_above_bound(cox_df, fit):
-    """More rows than LOCAL_MAX_ROWS: the kernel never runs and the
+    """More cells than LOCAL_MAX_CELLS: the kernel never runs and the
     Spark path gives the local tier's answer."""
     df, rows, seen = fit("local", cox_df, ["x1", "x2"], "g", ())
     assert seen == {"local": [True], "step": []}
-    over = fit("local", cox_df, ["x1", "x2"], "g", (), max_rows=10)
+    over = fit("local", cox_df, ["x1", "x2"], "g", (), max_cells=STEP_CELLS)
     assert over[2] == {"local": [], "step": [True] * ITERS}
     _assert_same((df, rows), over[:2], ["g"])
 
 
 @pytest.mark.parametrize("which", ["tv", "fine_gray"])
 def test_one_group_bound_probe_per_fit(spark, monkeypatch, which):
-    """With the group bound at 1 and two groups, the per-round driver
-    solve misses once; the remaining rounds go straight to the layered
-    plan instead of re-running the round for a discarded probe."""
+    """With the cell bound below two groups' statistics, the per-round
+    driver solve misses once; the remaining rounds go straight to the
+    layered plan instead of re-running the round for a discarded
+    probe."""
     calls = []
     step = linalg.newton_step_local
 
@@ -199,7 +218,7 @@ def test_one_group_bound_probe_per_fit(spark, monkeypatch, which):
         return out
 
     monkeypatch.setattr(linalg, "newton_step_local", spy)
-    monkeypatch.setattr(linalg, "LOCAL_MAX_GROUPS", 1)
+    monkeypatch.setattr(io, "LOCAL_MAX_CELLS", 1)
     rng = np.random.RandomState(3)
     # ev: 0 censored, 1 event, 2 competing event (Fine-Gray only)
     ncause = 3 if which == "fine_gray" else 2

@@ -2,9 +2,9 @@
 
 - ``step``: each round's one-row-per-group sufficient stats collect to
   the driver and solve there (``linalg.newton_step_local``), the default
-  while the group count is within ``linalg.LOCAL_MAX_GROUPS``;
+  while they fit ``io.LOCAL_MAX_CELLS``;
 - ``layered``: the solve stays in-plan as the unrolled Cholesky layers
-  (``LOCAL_MAX_GROUPS = 0``).
+  (``LOCAL_MAX_CELLS = 0``).
 
 Logistic and Poisson fits with two covariates run grouped and
 ungrouped, with a ridge penalty and with a Poisson exposure, on data
@@ -21,6 +21,7 @@ import math
 import numpy as np
 import pytest
 
+from woodwork_spark import io
 from woodwork_spark.operators import linalg, regression
 
 ITERS = 4
@@ -70,12 +71,12 @@ def fit(monkeypatch):
     monkeypatch.setattr(linalg, "newton_step_local", spy_step)
     monkeypatch.setattr(linalg, "chol_solve_layers", spy_layers)
 
-    def run(tier, family, df, group, max_groups=None, **kw):
+    def run(tier, family, df, group, max_cells=None, **kw):
         for v in seen.values():
             v.clear()
-        if max_groups is None:
-            max_groups = 10_000 if tier == "step" else 0
-        monkeypatch.setattr(linalg, "LOCAL_MAX_GROUPS", max_groups)
+        if max_cells is None:
+            max_cells = 1_000_000 if tier == "step" else 0
+        monkeypatch.setattr(io, "LOCAL_MAX_CELLS", max_cells)
         fn = (
             regression.logistic_fit if family == "logistic"
             else regression.poisson_fit
@@ -149,10 +150,10 @@ def test_tiers_agree(glm_df, fit, case, group):
 
 
 def test_one_group_bound_probe_per_fit(glm_df, fit):
-    """With the group bound at 1 and five groups, the driver solve
-    misses once; the remaining rounds go straight to the layered plan
-    instead of re-running the round for a discarded probe."""
-    _, rows, seen = fit("step", "logistic", glm_df, "g", max_groups=1)
+    """With the cell bound below the five groups' statistics, the driver
+    solve misses once; the remaining rounds go straight to the layered
+    plan instead of re-running the round for a discarded probe."""
+    _, rows, seen = fit("step", "logistic", glm_df, "g", max_cells=1)
     assert seen["step"] == [False]
     assert len(seen["layers"]) == ITERS
     assert len(rows) == len(GROUPS)
@@ -203,3 +204,14 @@ def test_null_key_is_a_group_in_diag_em_and_lrt(null_key_df):
     lrt = regression.glm_lrt(full, reduced, 1, "g")
     assert _groups(lrt) == [None, "a"]
     assert all(r["lrt_stat"] is not None for r in lrt.collect())
+
+
+def test_null_key_is_a_group_in_ols_by_and_theil_sen(null_key_df):
+    """ols_fit_by and theil_sen_fit keep the NULL-key group too."""
+    df = null_key_df
+    assert _groups(regression.ols_fit_by(df, "yc", ["x1", "x2"], "g")) == [
+        None, "a",
+    ]
+    assert _groups(regression.theil_sen_fit(df, "x1", "yc", "g")) == [
+        None, "a",
+    ]

@@ -556,20 +556,53 @@ def test_semdedup_groups_and_representatives(spark):
     assert renamed.join(survivors, "doc_key").count() == 2
 
 
-def test_connected_components_distributed_matches_unionfind(spark):
+def test_connected_components_distributed_matches_unionfind(
+    spark, monkeypatch,
+):
     """Forced distributed label-propagation path must produce the same
     labels as the driver-side union-find fast path."""
     import random
+
+    from woodwork_spark import io
 
     random.seed(11)
     edges = [(random.randint(0, 200), random.randint(0, 200)) for _ in range(150)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     fast = {r["id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
+    monkeypatch.setattr(io, "LOCAL_MAX_CELLS", 0)
     dist = {
         r["id"]: r["component"]
-        for r in dedup.connected_components(pairs, small_threshold=0).collect()
+        for r in dedup.connected_components(pairs).collect()
     }
     assert fast == dist
+
+
+def test_connected_components_nan_ids(spark, monkeypatch):
+    """Float ids holding NaN take the distributed path under the default
+    bound (a NaN never equals itself, so a driver union-find could not
+    find its root) and label like the forced distributed path."""
+    from woodwork_spark import io
+
+    nan = float("nan")
+    pairs = spark.createDataFrame(
+        [(1.0, 2.0), (2.0, 3.0), (nan, 5.0), (5.0, 6.0)],
+        "id_a double, id_b double",
+    )
+
+    def labels():
+        # NaN keys compare unequal, so name them for the comparison
+        name = lambda x: "nan" if x != x else x  # noqa: E731
+        return {
+            name(r["id"]): name(r["component"])
+            for r in dedup.connected_components(pairs).collect()
+        }
+
+    default = labels()
+    monkeypatch.setattr(io, "LOCAL_MAX_CELLS", 0)
+    assert default == labels()
+    assert default == {
+        1.0: 1.0, 2.0: 1.0, 3.0: 1.0, 5.0: 5.0, 6.0: 5.0, "nan": 5.0,
+    }
 
 
 def test_resample_fills_gaps(spark):
@@ -3393,7 +3426,8 @@ def test_median_ci_known_ranks(spark):
     assert (r["ci_lo"], r["median"], r["ci_hi"]) == (1, 2, 3)
 
 
-def test_kcore_known_graph_and_distributed_parity(spark):
+def test_kcore_known_graph_and_distributed_parity(spark, monkeypatch):
+    from woodwork_spark import io
     from woodwork_spark.operators.graph import kcore
 
     # triangle a-b-c plus a pendant chain c-d-e: 2-core = the triangle
@@ -3401,14 +3435,42 @@ def test_kcore_known_graph_and_distributed_parity(spark):
     df = spark.createDataFrame(edges, "src string, dst string")
     core = {r["node"]: r["core_degree"] for r in kcore(df, 2).collect()}
     assert core == {"a": 2, "b": 2, "c": 2}
-    # distributed path (forced) must agree exactly
-    dist = {r["node"]: r["core_degree"]
-            for r in kcore(df, 2, small_threshold=0).collect()}
-    assert dist == core
     # k=3 empties this graph
     assert kcore(df, 3).count() == 0
-    assert kcore(df, 3, small_threshold=0).count() == 0
+    # distributed path (forced) must agree exactly
+    monkeypatch.setattr(io, "LOCAL_MAX_CELLS", 0)
+    dist = {r["node"]: r["core_degree"]
+            for r in kcore(df, 2).collect()}
+    assert dist == core
+    assert kcore(df, 3).count() == 0
 
+
+def test_kcore_nan_ids(spark, monkeypatch):
+    """Float ids holding NaN take the distributed path under the default
+    bound (a NaN never equals itself, so driver-side sets would count
+    each NaN edge end as its own node) and give the forced distributed
+    path's core: the 4-clique with its NaN node, without the pendant."""
+    from woodwork_spark import io
+    from woodwork_spark.operators.graph import kcore
+
+    nan = float("nan")
+    nodes = [1.0, 2.0, 3.0, nan]
+    clique = [(a, b) for i, a in enumerate(nodes) for b in nodes[i + 1:]]
+    df = spark.createDataFrame(
+        clique + [(1.0, 5.0)], "src double, dst double",
+    )
+
+    def core():
+        # NaN keys compare unequal, so name them for the comparison
+        name = lambda x: "nan" if x != x else x  # noqa: E731
+        return {
+            name(r["node"]): r["core_degree"] for r in kcore(df, 3).collect()
+        }
+
+    default = core()
+    monkeypatch.setattr(io, "LOCAL_MAX_CELLS", 0)
+    assert default == core()
+    assert default == {1.0: 3, 2.0: 3, 3.0: 3, "nan": 3}
 
 def test_twonn_dimension_gaussian(spark):
     import numpy as np
@@ -3601,14 +3663,16 @@ def test_radius_join_complete_at_high_latitude(spark):
     assert any(a != b for a, b in got)  # the tight pairs actually match
 
 
-def test_kcore_schema_matches_input_dtype(spark):
+def test_kcore_schema_matches_input_dtype(spark, monkeypatch):
+    from woodwork_spark import io
     from woodwork_spark.operators.graph import kcore
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3)], "src int, dst int",
     )
     small = kcore(edges, 2)
-    dist = kcore(edges, 2, small_threshold=0)
+    monkeypatch.setattr(io, "LOCAL_MAX_CELLS", 0)
+    dist = kcore(edges, 2)
     assert small.schema["node"].dataType == dist.schema["node"].dataType
     assert {r["node"] for r in small.collect()} == {1, 2, 3}
 

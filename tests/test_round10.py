@@ -389,11 +389,11 @@ class TestCoxPlanShape:
         sort all rows in one partition.  Exchange SinglePartition may
         appear ONLY as input to a global HashAggregate (the one-row
         score/information folds) — never under a Window or Sort.  The
-        row bound is set to 0 so the fit takes the Spark path."""
-        from woodwork_spark.operators import timeseries
+        cell bound is set to 0 so the fit takes the Spark path."""
+        from woodwork_spark import io
         from woodwork_spark.operators.timeseries import cox_ph_fit
 
-        monkeypatch.setattr(timeseries, "LOCAL_MAX_ROWS", 0)
+        monkeypatch.setattr(io, "LOCAL_MAX_CELLS", 0)
 
         rng = np.random.RandomState(1)
         rows = [(float(t), float(dd), float(x)) for t, dd, x in zip(

@@ -56,12 +56,12 @@ def test_cox_risk_sets_share_tied_times(spark, monkeypatch):
     pre-window aggregate keyed on the time column feeding ROWS-frame
     running sums — and no RANGE frame needed anywhere.  Value-level tie
     semantics are covered by test_round9e
-    TestCoxPH::test_tied_times_share_risk_set.  The row bound is set to
-    0 so the fit takes the Spark path (at this size it would otherwise
-    run whole on the driver)."""
-    from woodwork_spark.operators import timeseries
+    TestCoxPH::test_tied_times_share_risk_set.  The cell bound is set
+    to 0 so the fit takes the Spark path (at this size it would
+    otherwise run whole on the driver)."""
+    from woodwork_spark import io
 
-    monkeypatch.setattr(timeseries, "LOCAL_MAX_ROWS", 0)
+    monkeypatch.setattr(io, "LOCAL_MAX_CELLS", 0)
     plan = _plan(entrymod.queries()["cox_ph"](spark, SF))
     low = plan.lower().replace(" ", "")
     assert "rowframe" in low and "rangeframe" not in low

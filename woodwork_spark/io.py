@@ -224,8 +224,10 @@ def arrow_to_pandas(df: DataFrame):
         spark.conf.set(key, prev)
 
 
-# Cells (rows x columns) a bounded driver-local tier may collect through
-# collect_bounded: about 8 MB of doubles.
+# Cells (rows x columns) a driver-local tier may collect through
+# collect_bounded — about 8 MB of doubles.  The one bound of every such
+# tier: the statistics, the Cox whole fit, the per-round Newton solve,
+# ANN quantizer training, k-core and connected components.
 LOCAL_MAX_CELLS = 1_000_000
 
 
@@ -267,6 +269,12 @@ def collect_bounded(df: DataFrame):
         pa.bool_(): pd.BooleanDtype(),
     }
     return table.to_pandas(types_mapper=nullable.get)
+
+
+def column_values(s) -> list:
+    """A :func:`collect_bounded` column as a list of Python values, NULL
+    as None (a floating NaN there is NULL: real NaN never comes back)."""
+    return s.astype(object).where(s.notna(), None).tolist()
 
 
 def pandas_to_spark(spark, pdf) -> DataFrame:

@@ -287,7 +287,6 @@ def minhash_dedup_pairs(
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 50,
-    small_threshold: int = 100_000,
 ) -> DataFrame:
     """Connected components over an (id_a, id_b) edge list via iterative
     min-label propagation (the alternating large-star/small-star
@@ -297,62 +296,60 @@ def connected_components(
     Cardinality-aware (same hybrid as operators/rank.py): dup-pair edge
     lists are usually a tiny fraction of the corpus, and each distributed
     iteration costs 2 shuffles + a convergence-check job — pure overhead
-    at small sizes.  At or below ``small_threshold`` edges the list is
-    collected and solved with driver-side union-find (exact same
+    at small sizes.  While the list fits
+    :data:`~woodwork_spark.io.LOCAL_MAX_CELLS` (500k pairs, with no NaN
+    id) it is collected through :func:`~woodwork_spark.io.
+    collect_bounded` and solved with driver-side union-find (exact same
     labels, one job instead of ~3 per iteration).  Above it, the
     iterative loop: 2 shuffles per iteration, O(log(longest path))
     iterations, state bounded at one (id, label) row per vertex.
-    Pass ``small_threshold=0`` to force the distributed shape.
     """
+    from woodwork_spark.io import collect_bounded, column_values
+    from woodwork_spark.operators.scale import aqe_fanout_floor
+
     spark = pairs.sparkSession
-    if small_threshold:
-        # persist BEFORE the size probe: the edge list often carries an
-        # expensive lineage (LSH candidates + verify in semdedup), and
-        # when the probe overflows into the distributed path that same
-        # lineage feeds the edges frame — without the persist it would
-        # execute twice on exactly the large inputs the threshold guards
-        from woodwork_spark.operators.scale import aqe_fanout_floor
+    # persist BEFORE the size probe: the edge list often carries an
+    # expensive lineage (LSH candidates + verify in semdedup), and when
+    # the probe overflows into the distributed path that same lineage
+    # feeds the edges frame — without the persist it would execute
+    # twice on exactly the large inputs the bound guards.
+    # The persist+collect MATERIALIZE the pair cache — typically an
+    # LSH/edit-join candidate+verify pipeline whose per-pair CPU work
+    # AQE would otherwise squeeze onto 1-2 tasks at small byte sizes;
+    # the scope must include persist() because the cached plan captures
+    # the session conf at InMemoryRelation creation (see
+    # aqe_fanout_floor)
+    with aqe_fanout_floor(spark):
+        pairs = pairs.persist()
+        head = collect_bounded(pairs.select("id_a", "id_b"))
+    if head is not None:
+        pairs.unpersist()
+        parent: dict = {}
 
-        # the persist+collect MATERIALIZE the pair cache — typically an
-        # LSH/edit-join candidate+verify pipeline whose per-pair CPU
-        # work AQE would otherwise squeeze onto 1-2 tasks at small byte
-        # sizes; the scope must include persist() because the cached
-        # plan captures the session conf at InMemoryRelation creation
-        # (see aqe_fanout_floor)
-        with aqe_fanout_floor(spark):
-            pairs = pairs.persist()
-            head = (
-                pairs.select("id_a", "id_b")
-                .limit(small_threshold + 1)
-                .collect()
-            )
-        if len(head) <= small_threshold:
-            pairs.unpersist()
-            parent: dict = {}
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:  # path compression
+                parent[x], x = root, parent[x]
+            return root
 
-            def find(x):
-                root = x
-                while parent[root] != root:
-                    root = parent[root]
-                while parent[x] != root:  # path compression
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in head:
-                a, b = r["id_a"], r["id_b"]
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:  # union by min: smaller id becomes the root
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            rows = [(x, find(x)) for x in parent]
-            return local_rows_df(spark, 
-                rows, schema=pairs.select(
-                    F.col("id_a").alias("id"), F.col("id_b").alias("component"),
-                ).schema,
-            )
+        for a, b in zip(
+            column_values(head["id_a"]), column_values(head["id_b"]),
+        ):
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:  # union by min: smaller id becomes the root
+                if rb < ra:
+                    ra, rb = rb, ra
+                parent[rb] = ra
+        rows = [(x, find(x)) for x in parent]
+        return local_rows_df(
+            spark, rows, schema=pairs.select(
+                F.col("id_a").alias("id"), F.col("id_b").alias("component"),
+            ).schema,
+        )
     # persist: every iteration joins against edges, and the caller's edge
     # list may carry an expensive lineage (LSH sketch + verify in
     # semdedup) that must not be recomputed per iteration
@@ -422,15 +419,13 @@ def connected_components(
         # is converge-checked, so hitting the cap means the graph needs
         # a larger max_iter (label still moving after `max_iter` rounds)
         edges.unpersist()
-        if small_threshold:
-            pairs.unpersist()
+        pairs.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "
             "iterations; raise max_iter",
         )
     edges.unpersist()  # final labels generation is itself materialized
-    if small_threshold:
-        pairs.unpersist()
+    pairs.unpersist()
     return labels
 
 

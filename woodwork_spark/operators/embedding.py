@@ -750,36 +750,6 @@ def _pq_train_local(sub_rows: dict, k: int, iterations: int,
     return cents
 
 
-def _pq_bounded_sub_rows(pts, max_rows: int, n_subspaces: int, dsub: int):
-    """Collect the exploded training frame when the ORIGINAL row count
-    fits ``max_rows`` (exploded bound = max_rows x n_subspaces), else
-    None.  Mirrors ``similarity._bounded_local_rows``: non-finite
-    values or ragged subvectors keep the distributed path."""
-    import math
-
-    if not max_rows or max_rows <= 0:
-        return None
-    head = (
-        pts.select("__id", "__sub", "__v")
-        .limit(max_rows * n_subspaces + 1)
-        .collect()
-    )
-    if len(head) > max_rows * n_subspaces:
-        return None
-    sub_rows: dict = {s: [] for s in range(n_subspaces)}
-    for r in head:
-        v = r["__v"]
-        if v is None or len(v) != dsub or r["__sub"] not in sub_rows:
-            return None
-        vals = [float(x) for x in v]
-        if not all(math.isfinite(x) for x in vals):
-            return None
-        sub_rows[r["__sub"]].append((r["__id"], vals))
-    for rows in sub_rows.values():
-        rows.sort(key=lambda t: t[0])
-    return sub_rows
-
-
 def _pq_train(
     df: DataFrame,
     id_col: str,
@@ -801,18 +771,20 @@ def _pq_train(
     Bounded inputs train DRIVER-LOCALLY (same quantized trajectory,
     see :func:`_pq_train_local`): one bounded collect through the pts
     cache replaces the seeding collect plus one assignment+update job
-    per iteration.  Above ``similarity.LOCAL_MAX_TRAIN_ROWS`` (100k
-    source rows) the distributed loop below runs unchanged — the
-    100 TB regime never collects."""
-    from woodwork_spark.operators.similarity import LOCAL_MAX_TRAIN_ROWS
+    per iteration.  Above :data:`~woodwork_spark.io.LOCAL_MAX_CELLS`
+    (source rows x (d + 3 x n_subspaces) cells), or for a subvector
+    that is not d_sub finite numbers, the distributed loop below runs
+    unchanged — the 100 TB regime never collects."""
+    from woodwork_spark.operators.similarity import _bounded_vectors
 
     if n_subspaces < 1 or k < 2 or iterations < 0:
         raise ValueError(f"{who}: bad n_subspaces/k/iterations")
     pts, dsub = _pq_explode(df, id_col, vec_col, n_subspaces, d=d)
-    sub_rows = _pq_bounded_sub_rows(
-        pts, LOCAL_MAX_TRAIN_ROWS, n_subspaces, dsub,
-    )
-    if sub_rows is not None:
+    local = _bounded_vectors(pts, dsub, keys=("__sub", "__id"))
+    if local is not None:
+        sub_rows = {s: [] for s in range(n_subspaces)}
+        for s, i, v in local:
+            sub_rows[s].append((i, v))
         return _pq_train_local(
             sub_rows, k, iterations, quantize, who,
         ), pts
@@ -887,6 +859,11 @@ def ivf_pq_search(
       centroids (rounded like :func:`pq_search`), and the cell's codes
       score with the fixed-order lookup sum.
 
+    While the corpus fits :data:`~woodwork_spark.io.LOCAL_MAX_CELLS`
+    (rows x (d + 2) cells) with finite d-vectors, both quantizers train
+    on the driver from one bounded collect, along the same trajectory;
+    above it every training round runs as Spark jobs.
+
     ``queries`` maps query_id -> full-dimension list[float].  Returns
     ``(query_id, id_col, cluster, approx_dist, rank)`` — top ``top_k``
     per query by (approx_dist, id) over the probed cells only.
@@ -902,8 +879,7 @@ def ivf_pq_search(
     from woodwork_spark.lifecycle import attach_persisted, persisted_frames
     from woodwork_spark.operators.scale import local_rows_df
     from woodwork_spark.operators.similarity import (
-        LOCAL_MAX_TRAIN_ROWS,
-        _bounded_local_rows,
+        _bounded_vectors,
         _lloyd_assign_local,
         _lloyd_local,
         kmeans_lloyd,
@@ -937,12 +913,12 @@ def ivf_pq_search(
     # as a broadcast local frame (no shuffle of the vectors, where the
     # distributed path joins the full-width table by id), and the code
     # table + every query branch below stay distributed.  Above
-    # similarity.LOCAL_MAX_TRAIN_ROWS (100k rows) nothing collects and
-    # the established distributed path runs unchanged.
+    # io.LOCAL_MAX_CELLS (rows x (d + 2) cells) the established
+    # distributed path runs unchanged.
     base = df.where(F.col(id_col).isNotNull() & fv.isNotNull()).select(
         F.col(id_col).alias("__id"), fv.alias("__v"),
     )
-    local = _bounded_local_rows(base, LOCAL_MAX_TRAIN_ROWS, d=d)
+    local = _bounded_vectors(base, d)
     caches = []
     if local is not None:
         coarse = _lloyd_local(local, init, coarse_iterations, quantize)

@@ -484,7 +484,6 @@ def kcore(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 100,
-    small_threshold: int = 100_000,
 ) -> DataFrame:
     """The k-core of an undirected simple graph: the maximal subgraph
     where every node keeps degree >= k, by iterative peeling (drop
@@ -494,8 +493,11 @@ def kcore(
     surviving nodes with their degree INSIDE the core.
 
     Cardinality-aware like :func:`~..dedup.connected_components`:
-    at or below ``small_threshold`` edges the list collects and peels
-    on the driver (identical result, one job).  Above it, the
+    while the distinct edge list fits
+    :data:`~woodwork_spark.io.LOCAL_MAX_CELLS` (500k edges of two ids,
+    with no NaN id) it collects through
+    :func:`~woodwork_spark.io.collect_bounded` and peels on the driver
+    (identical result, one job).  Above it, the
     distributed loop peels with one degree agg + two anti-joins per
     round, eagerly ``localCheckpoint``-ed so the plan does not double
     per iteration; rounds are bounded by the peeling depth
@@ -522,37 +524,37 @@ def kcore(
     # any id dtype
     from pyspark.sql.types import LongType, StructField, StructType
 
+    from woodwork_spark.io import collect_bounded, column_values
+
     node_field = e.select(F.col("a").alias("node")).schema.fields[0]
     out_schema = StructType([
         node_field,
         StructField("core_degree", LongType(), False),
     ])
-    if small_threshold:
-        e = e.persist()
-        head = e.limit(small_threshold + 1).collect()
-        if len(head) <= small_threshold:
-            e.unpersist()
-            adj: dict = {}
-            for r in head:
-                adj.setdefault(r["a"], set()).add(r["b"])
-                adj.setdefault(r["b"], set()).add(r["a"])
-            alive = set(adj)
-            while True:
-                dead = [
-                    n for n in alive
-                    if sum(1 for m in adj[n] if m in alive) < k
-                ]
-                if not dead:
-                    break
-                alive.difference_update(dead)
-            rows = [
-                (n, sum(1 for m in adj[n] if m in alive))
-                for n in sorted(alive)
-            ]
-            return local_rows_df(spark, rows, out_schema)
-    live = e.localCheckpoint(eager=True)
-    if small_threshold:
+    e = e.persist()
+    head = collect_bounded(e)
+    if head is not None:
         e.unpersist()
+        adj: dict = {}
+        for a, b in zip(column_values(head["a"]), column_values(head["b"])):
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        alive = set(adj)
+        while True:
+            dead = [
+                n for n in alive
+                if sum(1 for m in adj[n] if m in alive) < k
+            ]
+            if not dead:
+                break
+            alive.difference_update(dead)
+        rows = [
+            (n, sum(1 for m in adj[n] if m in alive))
+            for n in sorted(alive)
+        ]
+        return local_rows_df(spark, rows, out_schema)
+    live = e.localCheckpoint(eager=True)
+    e.unpersist()
     for _ in range(max_iter):
         deg = (
             live.select(F.col("a").alias("node"))

@@ -4,13 +4,14 @@ The multi-covariate fitters (logistic / Poisson IRLS, Cox partial-
 likelihood Newton) need to solve a symmetric positive-definite d x d
 system per group per iteration, where d = covariates + intercept is
 small (<= ~10) but the group count is unbounded.  :func:`newton_step`
-is the one entry point for such a round.  Up to
-:data:`LOCAL_MAX_GROUPS` groups it collects the one-row-per-group
-sufficient stats and solves them on the driver
-(:func:`chol_solve_local`).  Above that bound it unrolls a Cholesky
-factorization + solve as LAYERS of named column expressions over the
-one-row-per-group frame, so the round stays a lazy Catalyst plan with
-no driver math and no collect.  Both solves give bit-identical results.
+is the one entry point for such a round.  While the one-row-per-group
+sufficient stats fit :data:`~woodwork_spark.io.LOCAL_MAX_CELLS` (and
+hold no NaN or inf) it collects them through
+:func:`~woodwork_spark.io.collect_bounded` and solves them on the
+driver (:func:`chol_solve_local`).  Above that bound it unrolls a
+Cholesky factorization + solve as LAYERS of named column expressions
+over the one-row-per-group frame, so the round stays a lazy Catalyst
+plan with no driver math and no collect.  Both solves give bit-identical results.
 
 Layering matters: Cholesky entries reference earlier entries, and
 inlining those references would duplicate subtrees exponentially.  Each
@@ -26,10 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Group count up to which a Newton round solves on the driver; above it
-# the solve stays in-plan (feature screens keep millions of groups).
-LOCAL_MAX_GROUPS = 10_000
 
 
 def chol_solve_layers(
@@ -176,8 +173,9 @@ def newton_step(step, group_cols, bnames, a_name, u_names, pref, local):
     frame and whether the next round may try the driver again.
 
     While ``local`` is true, the round collects ``step`` and solves on
-    the driver (:func:`newton_step_local`) if the group count is at
-    most :data:`LOCAL_MAX_GROUPS`.  Otherwise the solve stays in-plan
+    the driver (:func:`newton_step_local`) if it fits
+    :data:`~woodwork_spark.io.LOCAL_MAX_CELLS` (feature screens keep
+    millions of groups).  Otherwise the solve stays in-plan
     as the :func:`chol_solve_layers` layers under the :func:`pd_ok`
     guard (a non-PD group keeps its coefficients), and the group-sized
     result is checkpointed eagerly, so each round's plan does not embed
@@ -202,34 +200,35 @@ def newton_step(step, group_cols, bnames, a_name, u_names, pref, local):
 
 
 def newton_step_local(step, group_cols, bnames, a_name, u_names):
-    """The driver half of :func:`newton_step`: collect ``step`` bounded
-    by :data:`LOCAL_MAX_GROUPS`, solve each group with
+    """The driver half of :func:`newton_step`: collect ``step`` through
+    :func:`~woodwork_spark.io.collect_bounded`, solve each group with
     :func:`chol_solve_local` (bit-identical to the layered
     expressions), guard with :func:`pd_ok_local`, and return the new
     coefficient frame as a broadcast-ready local frame.  Returns None
-    when the group count exceeds the bound."""
+    when the collect declines: over the cell bound, or a NaN or inf
+    among the stats."""
     from pyspark.sql import types as T
 
+    from woodwork_spark.io import collect_bounded, column_values
     from woodwork_spark.operators.scale import local_rows_df
 
-    if LOCAL_MAX_GROUPS <= 0:
+    pdf = collect_bounded(step)
+    if pdf is None:
         return None
-    rows = step.limit(LOCAL_MAX_GROUPS + 1).collect()
-    if len(rows) > LOCAL_MAX_GROUPS:
-        return None
+    col = {c: column_values(pdf[c]) for c in pdf.columns}
     k = len(bnames)
     out_rows = []
-    for r in rows:
+    for n in range(len(pdf)):
         sol, piv = chol_solve_local(
             k,
-            lambda i, j, r=r: r[a_name(i, j)],
-            {"s": [r[u] for u in u_names]},
+            lambda i, j, n=n: col[a_name(i, j)][n],
+            {"s": [col[u][n] for u in u_names]},
         )
         ok = pd_ok_local(piv)
         out_rows.append(
-            tuple(r[g] for g in group_cols)
+            tuple(col[g][n] for g in group_cols)
             + tuple(
-                (r[b] + sol["s"][j]) if ok else r[b]
+                (col[b][n] + sol["s"][j]) if ok else col[b][n]
                 for j, b in enumerate(bnames)
             ),
         )

@@ -376,8 +376,8 @@ def _glm_irls_fit(
     mu)`` and the d(d+1)/2 lower-triangle entries of the Fisher
     information ``A_ij = sum x_i x_j w`` (d = k + 1, ``x_0 = 1``), and
     :func:`~woodwork_spark.operators.linalg.newton_step` solves the
-    d x d system per group: on the driver while the group count is
-    within ``linalg.LOCAL_MAX_GROUPS``, else in Spark via the
+    d x d system per group: on the driver while the group-sized stats
+    fit ``io.LOCAL_MAX_CELLS``, else in Spark via the
     unrolled-Cholesky layers over the one-row-per-group frame (the
     single-covariate engine stays on its closed-form 2x2 path).
 
@@ -513,9 +513,9 @@ def _glm_irls_fit(
             *[c for c in step.columns if c not in named], *reps,
         )
 
-    # Each round's Newton step: solved on the driver while the group
-    # count is within linalg.LOCAL_MAX_GROUPS (one collect of the
-    # group-sized stats; bit-identical to the layered solve), else
+    # Each round's Newton step: solved on the driver while the
+    # group-sized stats fit io.LOCAL_MAX_CELLS (one collect of them;
+    # bit-identical to the layered solve), else
     # in-plan as the unrolled Cholesky layers with an eager checkpoint
     # per round (see linalg.newton_step).  The aggregates themselves
     # stay distributed either way.
@@ -951,7 +951,8 @@ def theil_sen_fit(
     (``quantile_cont`` in SQL replays).
 
     Returns ``(group_cols..., n, n_pairs, slope, intercept)``; groups
-    with < 2 distinct x yield NULL slope.
+    with < 2 distinct x yield NULL slope.  A NULL group key is its own
+    group.
     """
     group_cols = (
         [group_cols] if isinstance(group_cols, str) else list(group_cols)
@@ -990,9 +991,9 @@ def theil_sen_fit(
         *group_cols, F.col("__x").alias("__xb"),
         F.col("__y").alias("__yb"), F.col("__rn").alias("__rb"),
     )
-    on = [F.col(f"l.{c}") == F.col(f"r.{c}") for c in group_cols] or [
-        F.lit(True),
-    ]
+    on = [
+        F.col(f"l.{c}").eqNullSafe(F.col(f"r.{c}")) for c in group_cols
+    ] or [F.lit(True)]
     pairs = (
         left.alias("l")
         .join(right.alias("r"),
@@ -1011,7 +1012,7 @@ def theil_sen_fit(
         F.expr("percentile(__s, 0.5)").alias("slope"),
     )
     if group_cols:
-        j = base.join(F.broadcast(med_slope), group_cols)
+        j = _key_join(base, med_slope, group_cols, broadcast=True)
     else:
         j = base.crossJoin(F.broadcast(med_slope))
     out = j.groupBy(*group_cols).agg(
@@ -1356,7 +1357,7 @@ def ols_fit_by(
     the shared A&S polynomial, like :func:`ols_fit`).  Groups with a
     singular centered gram, fewer than d+2 rows, or zero residual
     variance yield NULL statistics (coefficients included — there is
-    no meaningful fit to report).
+    no meaningful fit to report).  A NULL group key is its own group.
     """
     from woodwork_spark.operators.linalg import (
         apply_layers,
@@ -1393,7 +1394,7 @@ def ols_fit_by(
         F.avg("__y").alias("__my"),
         *[F.avg(f"__x{j}").alias(f"__m{j}") for j in range(d)],
     )
-    cur = base.join(F.broadcast(means), group_cols)
+    cur = _key_join(base, means, group_cols, broadcast=True)
     cx = [F.col(f"__x{j}") - F.col(f"__m{j}") for j in range(d)]
     cy = F.col("__y") - F.col("__my")
     aggs = [

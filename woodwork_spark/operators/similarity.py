@@ -20,11 +20,6 @@ from pyspark.sql import functions as F
 
 from woodwork_spark.operators.scale import local_rows_df
 
-# Training rows up to which k-means and the PQ codebooks train on the
-# driver from one bounded collect (same quantized trajectory); above it
-# every round runs as Spark jobs.
-LOCAL_MAX_TRAIN_ROWS = 100_000
-
 
 def _dot(a, b):
     return F.aggregate(
@@ -643,32 +638,36 @@ def _lloyd_assign_local(rows, cents):
     ]
 
 
-def _bounded_local_rows(pts, max_rows, d=None):
-    """Collect ``(__id, __v)`` rows through the persisted frame when
-    they fit the driver bound, else None (distributed path).  Rejects
-    non-finite values and ragged vectors — those keep the distributed
-    path's exact expression semantics instead of numpy's."""
-    import math
+def _bounded_vectors(pts, d, keys=("__id",)):
+    """The ``keys`` and ``__v`` of ``pts`` as ``[(*keys, [d floats])]``
+    rows sorted by the keys, from one
+    :func:`~woodwork_spark.io.collect_bounded` of the keys, ``size(__v)``
+    and the ``d`` elements as double columns — so the cell count is
+    known before the collect and the finiteness guard covers every
+    value.  None — the distributed path runs — over the cell bound, or
+    for a NULL vector, a NULL or non-finite element or a length other
+    than ``d``: those keep the distributed path's expression semantics
+    instead of numpy's."""
+    import numpy as np
 
-    if not max_rows or max_rows <= 0:
+    from woodwork_spark.io import collect_bounded, column_values
+
+    pdf = collect_bounded(pts.selectExpr(
+        *keys,
+        "double(size(__v)) AS __n",
+        # try_: an out-of-range [] raises under ANSI
+        *[
+            f"double(try_element_at(__v, {j + 1})) AS __e{j}"
+            for j in range(d)
+        ],
+    ))
+    if pdf is None:
         return None
-    head = pts.select("__id", "__v").limit(max_rows + 1).collect()
-    if len(head) > max_rows:
+    X = pdf.iloc[:, len(keys) + 1:].to_numpy(dtype=np.float64)
+    if (pdf["__n"] != d).any() or np.isnan(X).any():
         return None
-    rows = []
-    for r in head:
-        v = r["__v"]
-        if v is None:
-            return None
-        if d is None:
-            d = len(v)
-        if len(v) != d:
-            return None
-        vals = [float(x) for x in v]
-        if not all(math.isfinite(x) for x in vals):
-            return None
-        rows.append((r["__id"], vals))
-    rows.sort(key=lambda t: t[0])
+    rows = list(zip(*[column_values(pdf[k]) for k in keys], X.tolist()))
+    rows.sort(key=lambda t: t[:-1])
     return rows
 
 
@@ -700,6 +699,10 @@ def kmeans_lloyd(
     partial-sum ordering noise can never flip a later assignment —
     the same engine-reproducibility discipline as the struct-fold
     argmins elsewhere.  Empty clusters keep their previous centroid.
+    While the training rows fit :data:`~woodwork_spark.io.
+    LOCAL_MAX_CELLS` (rows x (d + 2) cells) with finite d-vectors, the
+    same quantized update rounds run on the driver from one bounded
+    collect instead (:func:`_lloyd_local`).
 
     Returns the FINAL assignment: ``(id_col, cluster, dist_sq)`` under
     the last updated centroids.  Null ids/vectors are excluded.
@@ -764,12 +767,9 @@ def kmeans_lloyd(
     # trajectory runs locally — one bounded collect through the pts
     # cache replaces `iterations` update jobs; the final assignment
     # (and everything downstream) stays distributed.  Above the bound
-    # (LOCAL_MAX_TRAIN_ROWS; the 100 TB regime) the distributed loop
-    # below is unchanged.
-    local = (
-        _bounded_local_rows(pts, LOCAL_MAX_TRAIN_ROWS, d=d)
-        if iterations else None
-    )
+    # (io.LOCAL_MAX_CELLS, rows x (d + 2); the 100 TB regime) the
+    # distributed loop below is unchanged.
+    local = _bounded_vectors(pts, d) if iterations else None
     if local is not None:
         cents = _lloyd_local(local, cents, iterations, quantize)
     else:

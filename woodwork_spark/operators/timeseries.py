@@ -1478,11 +1478,6 @@ def holt_winters_fit(
     )
 
 
-# Row bound of the driver-local Cox fit (one collect, every Newton round
-# in numpy) — the same bound as the ANN training collect
-LOCAL_MAX_ROWS = 100_000
-
-
 def _key_join(left, right, keys, broadcast=False):
     """``left.join(right, keys)`` with the keys matched null-safe, so a
     NULL key is its own group, as in the groupBy that made ``right``.
@@ -1502,13 +1497,13 @@ def _key_join(left, right, keys, broadcast=False):
 
 
 def _local_key_codes(pdf, cols, fields):
-    """Dense codes for the ``cols`` key tuples of a collected frame, and
-    each code's key tuple as Python values of the source types.  A NULL
-    key is its own group, as in Spark's ``groupBy``.  Returns None when
-    pandas cannot keep a key exact: a float key holding NaN (NaN and
-    NULL are separate Spark groups but one pandas NA), an integral key
-    that a NULL widened to float64 holding values past 2**53, or a type
-    outside plain integers, floats, strings, booleans and dates."""
+    """Dense codes for the ``cols`` key tuples of a
+    :func:`~woodwork_spark.io.collect_bounded` frame, and each code's
+    key tuple as Python values of the source types.  A NULL key is its
+    own group, as in Spark's ``groupBy`` (the collect keeps integers
+    exact and sends real NaN to Spark, so a pandas NA is a NULL).
+    Returns None for a type outside plain integers, floats, strings,
+    booleans and dates."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -1517,14 +1512,10 @@ def _local_key_codes(pdf, cols, fields):
         return np.zeros(len(pdf), dtype=np.int64), [()]
     codes, values = [], []
     for c in cols:
-        dt, s = fields[c].dataType, pdf[c]
+        dt = fields[c].dataType
         if isinstance(dt, T.IntegralType):
-            if s.dtype.kind == "f" and (s.abs() >= 2.0 ** 53).any():
-                return None
             conv = int
         elif isinstance(dt, (T.FloatType, T.DoubleType)):
-            if s.isna().any():
-                return None
             conv = float
         elif isinstance(dt, T.BooleanType):
             conv = bool
@@ -1532,11 +1523,10 @@ def _local_key_codes(pdf, cols, fields):
             conv = None  # already Python str / datetime.date
         else:
             return None
-        code, uniq = pd.factorize(s, use_na_sentinel=False)
+        code, uniq = pd.factorize(pdf[c], use_na_sentinel=False)
         codes.append(code)
         values.append([
-            None if v is None or v != v else conv(v) if conv else v
-            for v in uniq
+            None if pd.isna(v) else conv(v) if conv else v for v in uniq
         ])
     uniq, inv = np.unique(
         np.stack(codes, axis=1), axis=0, return_inverse=True,
@@ -1547,12 +1537,13 @@ def _local_key_codes(pdf, cols, fields):
 
 def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
     """Whole-fit driver-local twin of :func:`cox_ph_fit`'s Spark path
-    over the collected ``base`` rows: every Newton round and the readout
-    in numpy, the same formulas per (group, strata) partition.  Returns
-    the output rows, or None when the fit must run on the Spark path: a
-    non-finite t, d or x, a key pandas cannot keep exact, or any
-    non-finite intermediate (the Spark path's NaN/NULL expression
-    semantics are not mimicked here)."""
+    over the collected ``base`` rows (no NULL, NaN or inf among t, d
+    and x): every Newton round and the readout in numpy, the same
+    formulas per (group, strata) partition.  Returns the output rows,
+    or None when the fit must run on the Spark path: a key type
+    :func:`_local_key_codes` does not take, or any non-finite
+    intermediate (the Spark path's NaN/NULL expression semantics are
+    not mimicked here)."""
     import math
 
     import numpy as np
@@ -1568,11 +1559,6 @@ def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
     t = pdf["__t"].to_numpy(dtype=np.float64)
     d = pdf["__d"].to_numpy(dtype=np.float64)
     X = pdf[[f"__x{j + 1}" for j in range(k)]].to_numpy(dtype=np.float64)
-    if not (
-        np.isfinite(t).all() and np.isfinite(d).all()
-        and np.isfinite(X).all()
-    ):
-        return None
     grp = _local_key_codes(pdf, group_cols, fields)
     part = _local_key_codes(pdf, part_cols, fields)
     if grp is None or part is None:
@@ -1834,16 +1820,17 @@ def cox_ph_fit(
     Three execution tiers, chosen per fit:
 
     1. **Whole fit on the driver.**  ``base`` (the filtered, cast input)
-       is collected once through Arrow, bounded by
-       :data:`LOCAL_MAX_ROWS` (100k rows).  When it fits and every t, d
+       is collected once by :func:`~woodwork_spark.io.collect_bounded`,
+       bounded by :data:`~woodwork_spark.io.LOCAL_MAX_CELLS` (1M cells:
+       rows x (keys + 2 + covariates)).  When it fits and every t, d
        and x is finite, every round and the readout run in numpy
        (:func:`_cox_fit_local`) — no Spark job per round.
     2. **Per-round driver solve.**  Otherwise the rounds run as Spark
        plans from the cached ``base``, and each multi-covariate round
        steps through :func:`~woodwork_spark.operators.linalg.
        newton_step`: its one-row-per-group sufficient stats are
-       collected and solved on the driver while the group count is
-       within :data:`~woodwork_spark.operators.linalg.LOCAL_MAX_GROUPS`.
+       collected and solved on the driver while they fit the same
+       cell bound.
     3. **Layered plan.**  Above that bound the same helper keeps the
        solve in-plan as the unrolled-Cholesky layers of
        :mod:`~woodwork_spark.operators.linalg`, with an eager checkpoint
@@ -1881,7 +1868,7 @@ def cox_ph_fit(
     """
     from pyspark.sql import types as T
 
-    from woodwork_spark.io import arrow_to_pandas
+    from woodwork_spark.io import collect_bounded
     from woodwork_spark.lifecycle import attach_persisted, persisted_frames
     from woodwork_spark.operators.linalg import newton_step
     from woodwork_spark.operators.rank import global_prefix_sums
@@ -1921,31 +1908,30 @@ def cox_ph_fit(
             for j, c in enumerate(xs)
         ],
     ).persist()
-    if LOCAL_MAX_ROWS > 0:
-        pdf = arrow_to_pandas(base.limit(LOCAL_MAX_ROWS + 1))
-        rows = None
-        # an empty input stays on the Spark path, whose ungrouped
-        # global aggregate yields one all-NULL row
-        if 0 < len(pdf) <= LOCAL_MAX_ROWS:
-            rows = _cox_fit_local(
-                pdf, group_cols, part_cols, base.schema, k, iters, multi,
-            )
-        if rows is not None:
-            names = (
-                ["beta", "se", "z_stat", "p_approx"] if not multi
-                else [
-                    f"{s}_{name}" for name in xs
-                    for s in ("beta", "se", "z", "p")
-                ]
-            )
-            schema = T.StructType(
-                [base.schema[g] for g in group_cols]
-                + [T.StructField(c, T.LongType()) for c in ("n", "n_events")]
-                + [T.StructField(c, T.DoubleType())
-                   for c in names + ["loglik"]],
-            )
-            base.unpersist()
-            return local_rows_df(df.sparkSession, rows, schema)
+    pdf = collect_bounded(base)
+    rows = None
+    # an empty input stays on the Spark path, whose ungrouped global
+    # aggregate yields one all-NULL row
+    if pdf is not None and len(pdf):
+        rows = _cox_fit_local(
+            pdf, group_cols, part_cols, base.schema, k, iters, multi,
+        )
+    if rows is not None:
+        names = (
+            ["beta", "se", "z_stat", "p_approx"] if not multi
+            else [
+                f"{s}_{name}" for name in xs
+                for s in ("beta", "se", "z", "p")
+            ]
+        )
+        schema = T.StructType(
+            [base.schema[g] for g in group_cols]
+            + [T.StructField(c, T.LongType()) for c in ("n", "n_events")]
+            + [T.StructField(c, T.DoubleType())
+               for c in names + ["loglik"]],
+        )
+        base.unpersist()
+        return local_rows_df(df.sparkSession, rows, schema)
     bnames = [f"__b{j + 1}" for j in range(k)]
     caches = [base]
 
