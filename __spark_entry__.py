@@ -53,8 +53,7 @@ def _prep(spark: SparkSession) -> SparkSession:
     # full-width task wave for kilobytes.  Scale-adaptive: AQE sizes
     # cache partitions by bytes, so big caches keep their parallelism.
     spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        os.environ.get("SPARK_GRAFT_CACHED_AQE", "true"),
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true",
     )
     # Arrow driver transfers (guide §6): OSS Spark defaults this OFF,
     # silently taking pickled-row paths for createDataFrame(pandas) —
@@ -62,10 +61,7 @@ def _prep(spark: SparkSession) -> SparkSession:
     # needs it.  Every tested configuration (bench.py, conftest,
     # profiler) already pins it on; setting it here makes an unknown
     # driver session run the exact configuration the oracles verified.
-    spark.conf.set(
-        "spark.sql.execution.arrow.pyspark.enabled",
-        os.environ.get("SPARK_GRAFT_ARROW", "true"),
-    )
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     try:
         cores = spark.sparkContext.defaultParallelism
         spark.conf.set("spark.sql.shuffle.partitions", str(max(cores, 8)))
@@ -18915,9 +18911,9 @@ QUERIES["cox_ph"] = q_cox_ph
 
 def q_logistic_conversion(spark, sf_dir):
     """Logistic regression: does activity volume predict purchase
-    conversion per user cohort?  6 unrolled distributed Newton steps —
-    one aggregate each, coefficient frame broadcast between steps (the
-    bradley_terry / cox_ph iteration convention)."""
+    conversion per user cohort?  6 Newton steps of the one GLM engine
+    (regression._glm_irls_fit on ["x"], projected to the slim schema),
+    whole on the driver under io.LOCAL_MAX_CELLS."""
     from woodwork_spark.operators.regression import logistic_fit
 
     _prep(spark)
@@ -18948,8 +18944,8 @@ def q_logistic_conversion(spark, sf_dir):
 
 def q_poisson_purchases(spark, sf_dir):
     """Poisson (log-link) regression: purchase count per user ~ log of
-    non-purchase activity, per cohort — same unrolled-Newton shape as
-    the logistic fit with the canonical-link weights mu."""
+    non-purchase activity, per cohort — same Newton engine as the
+    logistic fit with the canonical-link weights mu."""
     from woodwork_spark.operators.regression import poisson_fit
 
     _prep(spark)
@@ -20080,9 +20076,9 @@ QUERIES["by_fdr"] = q_by_fdr
 def q_logistic_multi(spark, sf_dir):
     """Multi-covariate logistic regression (k = 2): order fulfillment
     (status = 'F') ~ log order value + order month, per priority-class
-    cohort.  The operator solves each Newton round's 3x3 system IN-PLAN
-    via unrolled Cholesky layers (woodwork_spark.operators.linalg) —
-    the oracle replays the same rounds with an INDEPENDENT algorithm
+    cohort.  The operator solves each Newton round's 3x3 system by
+    Cholesky (woodwork_spark.operators.linalg; whole on the driver
+    under io.LOCAL_MAX_CELLS, else per round) — the oracle replays the same rounds with an INDEPENDENT algorithm
     (explicit Cramer 3x3 cofactors); agreement comes from quadratic
     convergence to the unique optimum, not shared arithmetic."""
     from woodwork_spark.operators.regression import logistic_fit
@@ -21013,7 +21009,7 @@ QUERIES["ols_inference"] = q_ols_inference
 def q_poisson_rate(spark, sf_dir):
     """Poisson RATE model: purchases per user ~ log non-purchase
     activity with exposure = active-span hours — the classic offset
-    formulation ``eta = b'x + ln(exposure)``.  Same unrolled-Newton
+    formulation ``eta = b'x + ln(exposure)``.  Same Newton
     trajectory as poisson_purchases, offset threaded through score,
     information, loglik and dispersion."""
     from woodwork_spark.operators.regression import poisson_fit
@@ -22035,8 +22031,9 @@ QUERIES["ols_by_group"] = q_ols_by_group
 def q_glm_lrt(spark, sf_dir):
     """Likelihood-ratio test between nested logistic fits: does order
     MONTH add predictive power for fulfillment over log order value,
-    per priority cohort?  Both fits are the in-plan unrolled-Cholesky
-    IRLS engine; glm_lrt joins the two model-sized frames and pushes
+    per priority cohort?  Both fits run on the one IRLS engine (whole
+    on the driver under io.LOCAL_MAX_CELLS); glm_lrt joins the two
+    model-sized frames and pushes
     2*(ll_full - ll_reduced) through the exact integer-df chi-square
     survival function (stats_tests._chi2_sf).  The oracle replays BOTH
     fits with independent solve algebra (Cramer cofactors 3x3 / closed
@@ -22364,9 +22361,9 @@ QUERIES["ivf_pq_rerank"] = q_ivf_pq_rerank
 
 
 def q_quality_classifier(spark, sf_dir):
-    """Trainable (fastText-shaped) quality classifier, wholly in-plan:
+    """Trainable (fastText-shaped) quality classifier:
     feature-hashed token shares (portable md5 buckets, k = 3) feed the
-    unrolled-Cholesky logistic IRLS, per doc_id-parity cohort, with
+    Cholesky logistic IRLS, per doc_id-parity cohort, with
     y = (lang = 'en') as the planted separation to recover.  The
     oracle rebuilds the SAME hashed features in SQL and replays the
     fit with independent Cramer-cofactor solves."""
@@ -23799,9 +23796,10 @@ def q_wide_classifier(spark, sf_dir):
     replay the EXACT penalized Newton with Cramer cofactors — a
     different algorithm whose agreement comes from both sitting at the
     unique ridge-penalized optimum (the convergence-verification
-    convention), while the Spark side runs the very same
-    array-native + Summarizer plan that scales to k in the
-    hundreds."""
+    convention).  At k = 2 (d + 1 <= 16) the Spark side runs the
+    small-d codegen path of plain column aggregates; the same Jacobi
+    update drives the array-native + Summarizer plan that takes over
+    for k in the hundreds."""
     from woodwork_spark.operators.regression import logistic_fit_diag
 
     _prep(spark)

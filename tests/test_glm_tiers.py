@@ -1,19 +1,23 @@
-"""Equivalence of the GLM IRLS fit's two Newton-step tiers.
+"""Equivalence of the GLM fit's three execution tiers.
 
-- ``step``: each round's one-row-per-group sufficient stats collect to
-  the driver and solve there (``linalg.newton_step_local``), the default
-  while they fit ``io.LOCAL_MAX_CELLS``;
-- ``layered``: the solve stays in-plan as the unrolled Cholesky layers
+- ``local``: the whole fit on the driver from one bounded collect
+  (``regression._glm_fit_local``, within ``io.LOCAL_MAX_CELLS``, the
+  default tier at this size);
+- ``step``: Spark rounds whose one-row-per-group sufficient stats
+  collect to the driver and solve there (``linalg.newton_step_local``;
+  a cell bound between the group-statistics cells and the ``base``
+  cells);
+- ``layered``: Spark rounds with the in-plan Cholesky layers
   (``LOCAL_MAX_CELLS = 0``).
 
-Logistic and Poisson fits with two covariates run grouped and
-ungrouped, with a ridge penalty and with a Poisson exposure, on data
-holding a degenerate group (x2 identically 0, so the information
-matrix is not PD), a group with one outcome class, a NULL group key and
-rows with a NULL covariate.  The tiers must agree on schema, row count,
-NULL placement and values (rel 1e-9), and spies on the tier entry
-points assert which tier ran.  The NULL-key tests cover every GLM fit
-whose key join used to drop a NULL-key group.
+Logistic and Poisson fits on one covariate (the slim schema) and on two
+run grouped and ungrouped, with a ridge penalty and with a Poisson
+exposure, on data holding a degenerate group (x2 identically 0, so the
+information matrix is not PD), a group with one outcome class, a NULL
+group key and rows with a NULL covariate.  The tiers must agree on
+schema, row count, NULL placement and values (rel 1e-9), and spies on
+the tier entry points assert which tier ran.  The NULL-key tests cover
+every GLM fit whose key join used to drop a NULL-key group.
 """
 
 import math
@@ -26,6 +30,11 @@ from woodwork_spark.operators import linalg, regression
 
 ITERS = 4
 GROUPS = ("a", "b", None, "one", "col")
+# the step tier's cell bound: below the base frame's cells (over 450 in
+# every shape), above the group statistics' (under 70)
+STEP_CELLS = 300
+SLIM = ["n", "intercept", "slope", "se_slope", "z_stat", "p_approx",
+        "loglik", "dispersion"]
 
 
 @pytest.fixture(scope="module")
@@ -54,8 +63,29 @@ def glm_df(spark):
 def fit(monkeypatch):
     """Run a GLM fit in a named tier; returns (frame, collected rows,
     the tier calls the spies saw)."""
-    seen = {"step": [], "layers": []}
+    seen = {"local": [], "step": [], "layers": []}
+    local_fit = regression._glm_fit_local
     step, layers = linalg.newton_step_local, linalg.chol_solve_layers
+    collect = io.collect_bounded
+    frames = []  # (rows, columns) of each bounded collect
+
+    def spy_collect(df):
+        n, c = df.count(), len(df.columns)
+        frames.append((n, c))
+        out = collect(df)
+        if (
+            out is None and "__y" in df.columns
+            and n <= io.LOCAL_MAX_CELLS // c
+        ):
+            # the base frame fits the bound but holds a NaN or inf: the
+            # whole-fit tier declines it
+            seen["local"].append(False)
+        return out
+
+    def spy_local(*a, **k):
+        out = local_fit(*a, **k)
+        seen["local"].append(out is not None)
+        return out
 
     def spy_step(*a, **k):
         out = step(*a, **k)
@@ -68,21 +98,34 @@ def fit(monkeypatch):
             seen["layers"].append(pref)
         return layers(*a, **k)
 
+    monkeypatch.setattr(regression, "_glm_fit_local", spy_local)
     monkeypatch.setattr(linalg, "newton_step_local", spy_step)
     monkeypatch.setattr(linalg, "chol_solve_layers", spy_layers)
+    monkeypatch.setattr(io, "collect_bounded", spy_collect)
 
-    def run(tier, family, df, group, max_cells=None, **kw):
+    def run(tier, family, df, group, x=("x1", "x2"), max_cells=None,
+            **kw):
         for v in seen.values():
             v.clear()
+        frames.clear()
         if max_cells is None:
-            max_cells = 1_000_000 if tier == "step" else 0
+            max_cells = {
+                "local": 1_000_000, "step": STEP_CELLS, "layered": 0,
+            }[tier]
         monkeypatch.setattr(io, "LOCAL_MAX_CELLS", max_cells)
         fn = (
             regression.logistic_fit if family == "logistic"
             else regression.poisson_fit
         )
         y = "yb" if family == "logistic" else "yc"
-        out = fn(df, y, ["x1", "x2"], group, iters=ITERS, **kw)
+        x = list(x) if isinstance(x, tuple) else x
+        out = fn(df, y, x, group, iters=ITERS, **kw)
+        if tier == "step" and max_cells == STEP_CELLS:
+            # the base frame is over the bound, every round's group
+            # statistics within it
+            (n_base, c_base), *rounds = frames
+            assert n_base > max_cells // c_base
+            assert all(n <= max_cells // c for n, c in rounds)
         return out, out.collect(), {k: list(v) for k, v in seen.items()}
 
     return run
@@ -119,29 +162,49 @@ CASES = {
 @pytest.mark.parametrize("group", ["g", ()], ids=["grouped", "ungrouped"])
 @pytest.mark.parametrize("case", list(CASES))
 def test_tiers_agree(glm_df, fit, case, group):
+    _tiers_agree(glm_df, fit, case, group, ["x1", "x2"])
+
+
+@pytest.mark.parametrize("group", ["g", ()], ids=["grouped", "ungrouped"])
+@pytest.mark.parametrize("case", list(CASES))
+def test_slim_tiers_agree(glm_df, fit, case, group):
+    """One covariate name: the same engine, projected to the slim
+    schema."""
+    _tiers_agree(glm_df, fit, case, group, "x1")
+
+
+def _tiers_agree(glm_df, fit, case, group, x):
     family, kw = CASES[case]
     out = {}
-    for tier in ("step", "layered"):
-        df, rows, seen = fit(tier, family, glm_df, group, **kw)
+    for tier in ("local", "step", "layered"):
+        df, rows, seen = fit(tier, family, glm_df, group, x, **kw)
         out[tier] = (df, rows)
-        if tier == "step":
-            assert seen == {"step": [True] * ITERS, "layers": []}
+        if tier == "local":
+            assert seen == {"local": [True], "step": [], "layers": []}
+        elif tier == "step":
+            assert seen == {"local": [], "step": [True] * ITERS, "layers": []}
         else:
-            assert seen["step"] == [False]
+            # one probe per fit, not one per round
+            assert seen["local"] == [] and seen["step"] == [False]
             assert len(seen["layers"]) == ITERS
     keys = [group] if group else []
-    _assert_same(out["step"], out["layered"], keys)
+    _assert_same(out["local"], out["step"], keys)
+    _assert_same(out["local"], out["layered"], keys)
 
-    df, rows = out["step"]
+    df, rows = out["local"]
+    if isinstance(x, str):
+        assert df.columns == keys + SLIM
     if not group:
         assert len(rows) == 1 and rows[0]["loglik"] is not None
         return
     by_g = {r["g"]: r for r in rows}
     assert set(by_g) == set(GROUPS)
-    stats = [c for c in df.columns if c.startswith(("coef_", "se_", "z_"))]
+    stats = [
+        c for c in df.columns if c not in ("g", "n", "loglik", "dispersion")
+    ]
     for g in ("a", "b", None):
         assert all(by_g[g][c] is not None for c in stats), g
-    if "ridge_lambda" not in kw:
+    if isinstance(x, list) and "ridge_lambda" not in kw:
         # x2 identically 0: the information matrix is not PD, so the
         # Wald readout is NULL; the ridge diagonal makes it PD
         assert all(by_g["col"][c] is None for c in stats)
@@ -149,12 +212,43 @@ def test_tiers_agree(glm_df, fit, case, group):
     assert by_g["a"]["n"] == 70 - 8
 
 
+@pytest.mark.parametrize("x", ["x1", ["x1", "x2"]], ids=["x", "x1_x2"])
+def test_non_finite_value_takes_spark_path(glm_df, fit, x):
+    """One infinite covariate: the local tier declines and the Spark
+    path runs from the same cached frame, so the result equals the
+    forced Spark path's."""
+    bad = glm_df.filter("g = 'b'").limit(1).selectExpr(
+        "g", "double('inf') AS x1", "x2", "yb", "yc", "expo",
+    )
+    df = glm_df.unionByName(bad)
+    default = fit("local", "logistic", df, "g", x)
+    assert default[2]["local"] == [False]
+    spark_path = fit("layered", "logistic", df, "g", x)
+    _assert_same(default[:2], spark_path[:2], ["g"])
+
+
+def test_one_name_ridge_is_the_slim_list_fit(glm_df, fit):
+    """A ridge penalty on one name needs no list: it returns the slim
+    projection of the ``["x1"]`` fit."""
+    slim, rows, _ = fit("local", "logistic", glm_df, "g", "x1",
+                        ridge_lambda=0.5)
+    _, wide, _ = fit("local", "logistic", glm_df, "g", ["x1"],
+                     ridge_lambda=0.5)
+    assert slim.columns == ["g"] + SLIM
+    key = lambda r: (r["g"] is None, r["g"])  # noqa: E731
+    for s, w in zip(sorted(rows, key=key), sorted(wide, key=key)):
+        assert [s[c] for c in SLIM] == [
+            w[c] for c in ("n", "intercept", "coef_x1", "se_x1", "z_x1",
+                           "p_x1", "loglik", "dispersion")
+        ]
+
+
 def test_one_group_bound_probe_per_fit(glm_df, fit):
     """With the cell bound below the five groups' statistics, the driver
     solve misses once; the remaining rounds go straight to the layered
     plan instead of re-running the round for a discarded probe."""
     _, rows, seen = fit("step", "logistic", glm_df, "g", max_cells=1)
-    assert seen["step"] == [False]
+    assert seen["local"] == [] and seen["step"] == [False]
     assert len(seen["layers"]) == ITERS
     assert len(rows) == len(GROUPS)
 

@@ -1,17 +1,19 @@
-"""Small-system linear algebra as UNROLLED column expressions.
+"""Small-system linear algebra for the Newton fits, in two twins.
 
 The multi-covariate fitters (logistic / Poisson IRLS, Cox partial-
-likelihood Newton) need to solve a symmetric positive-definite d x d
-system per group per iteration, where d = covariates + intercept is
-small (<= ~10) but the group count is unbounded.  :func:`newton_step`
-is the one entry point for such a round.  While the one-row-per-group
-sufficient stats fit :data:`~woodwork_spark.io.LOCAL_MAX_CELLS` (and
-hold no NaN or inf) it collects them through
-:func:`~woodwork_spark.io.collect_bounded` and solves them on the
-driver (:func:`chol_solve_local`).  Above that bound it unrolls a
-Cholesky factorization + solve as LAYERS of named column expressions
-over the one-row-per-group frame, so the round stays a lazy Catalyst
-plan with no driver math and no collect.  Both solves give bit-identical results.
+likelihood Newton) solve a symmetric positive-definite d x d system
+per group per round, where d = covariates + intercept is small (<= ~10)
+but the group count is unbounded.  On the driver,
+:func:`solve_groups_local` is the one per-group Cholesky loop: the
+whole-fit GLM and Cox kernels and the per-round
+:func:`newton_step_local` reach it through :func:`newton_update_local`
+and :func:`inverse_diagonal_local`.  In Spark, :func:`chol_solve_layers`
+unrolls the same factorization and solve as LAYERS of named column
+expressions over the one-row-per-group frame, so a round stays a lazy
+Catalyst plan with no driver math and no collect.  :func:`newton_step`
+picks between them per round, by
+:data:`~woodwork_spark.io.LOCAL_MAX_CELLS`.  Both twins give
+bit-identical results.
 
 Layering matters: Cholesky entries reference earlier entries, and
 inlining those references would duplicate subtrees exponentially.  Each
@@ -54,7 +56,7 @@ def chol_solve_layers(
       EXACTLY Sylvester's positive-definiteness criterion — the caller
       guards the update with it (a non-PD information matrix means a
       degenerate/collinear design; the guarded row keeps its previous
-      coefficients, mirroring the 2x2 ``det > 0`` convention).
+      coefficients).
 
     Ops per solve are O(d^3): ~36 multiply-adds at d = 3, ~600 at
     d = 10 — noise next to the per-row aggregate that produced A.
@@ -201,12 +203,11 @@ def newton_step(step, group_cols, bnames, a_name, u_names, pref, local):
 
 def newton_step_local(step, group_cols, bnames, a_name, u_names):
     """The driver half of :func:`newton_step`: collect ``step`` through
-    :func:`~woodwork_spark.io.collect_bounded`, solve each group with
-    :func:`chol_solve_local` (bit-identical to the layered
-    expressions), guard with :func:`pd_ok_local`, and return the new
-    coefficient frame as a broadcast-ready local frame.  Returns None
-    when the collect declines: over the cell bound, or a NaN or inf
-    among the stats."""
+    :func:`~woodwork_spark.io.collect_bounded`, update each group with
+    :func:`newton_update_local` (bit-identical to the layered
+    expressions), and return the new coefficient frame as a
+    broadcast-ready local frame.  Returns None when the collect
+    declines: over the cell bound, or a NaN or inf among the stats."""
     from pyspark.sql import types as T
 
     from woodwork_spark.io import collect_bounded, column_values
@@ -217,32 +218,57 @@ def newton_step_local(step, group_cols, bnames, a_name, u_names):
         return None
     col = {c: column_values(pdf[c]) for c in pdf.columns}
     k = len(bnames)
-    out_rows = []
-    for n in range(len(pdf)):
-        sol, piv = chol_solve_local(
-            k,
-            lambda i, j, n=n: col[a_name(i, j)][n],
-            {"s": [col[u][n] for u in u_names]},
-        )
-        ok = pd_ok_local(piv)
-        out_rows.append(
-            tuple(col[g][n] for g in group_cols)
-            + tuple(
-                (col[b][n] + sol["s"][j]) if ok else col[b][n]
-                for j, b in enumerate(bnames)
-            ),
-        )
+    b = newton_update_local(
+        k,
+        {(i, j): col[a_name(i, j)] for i in range(k) for j in range(i + 1)},
+        list(zip(*[col[u] for u in u_names])),
+        list(zip(*[col[c] for c in bnames])),
+    )
+    keys = zip(*[col[g] for g in group_cols]) if group_cols else [()] * len(b)
     schema = T.StructType(
         [step.schema[g] for g in group_cols]
-        + [T.StructField(b, T.DoubleType()) for b in bnames],
+        + [T.StructField(c, T.DoubleType()) for c in bnames],
     )
-    return local_rows_df(step.sparkSession, out_rows, schema=schema)
+    return local_rows_df(
+        step.sparkSession,
+        [tuple(kg) + tuple(bg) for kg, bg in zip(keys, b)],
+        schema=schema,
+    )
 
 
-def pd_ok_local(pivots) -> bool:
-    """Driver-side twin of :func:`pd_ok`: every pivot present and
-    strictly positive (NaN compares False, like the SQL guard)."""
-    return all(p is not None and p > 0 for p in pivots)
+def solve_groups_local(k, a, rhs):
+    """:func:`chol_solve_local` per group ``g``, whose information is
+    ``a[(i, j)][g]`` (i >= j) and right-hand sides ``rhs[g]`` (tag -> k
+    values).  Returns per group its solutions, or None when a pivot
+    fails the :func:`pd_ok` guard (None, NaN or <= 0)."""
+    out = []
+    for g, r in enumerate(rhs):
+        sol, piv = chol_solve_local(k, lambda i, j, g=g: a[(i, j)][g], r)
+        ok = all(p is not None and p > 0 for p in piv)
+        out.append(sol if ok else None)
+    return out
+
+
+def newton_update_local(k, a, u, b):
+    """The guarded Newton update ``b + A^-1 u`` per group (``u[g]`` and
+    ``b[g]`` hold k values); a group whose information is not PD keeps
+    its coefficients, as under :func:`newton_step`'s guard.  Returns one
+    list of k coefficients per group."""
+    sols = solve_groups_local(k, a, [{"s": ug} for ug in u])
+    return [
+        list(bg) if s is None else [x + y for x, y in zip(bg, s["s"])]
+        for s, bg in zip(sols, b)
+    ]
+
+
+def inverse_diagonal_local(k, a, groups):
+    """Per group, the diagonal of ``A^-1`` from one factorization and k
+    unit-vector solves (the Wald readout), or None when A is not PD."""
+    unit = {j: [float(m == j) for m in range(k)] for j in range(k)}
+    return [
+        None if s is None else [s[j][j] for j in range(k)]
+        for s in solve_groups_local(k, a, [unit] * groups)
+    ]
 
 
 def apply_layers(df: DataFrame, layers) -> DataFrame:

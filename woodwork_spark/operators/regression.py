@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from woodwork_spark.operators.scale import local_rows_df
-from woodwork_spark.operators.timeseries import _key_join
+from woodwork_spark.operators.timeseries import _key_join, _local_key_codes
 
 _MAX_AGG_FEATURES = 200
 
@@ -194,171 +194,113 @@ def _norm_two_sided_p_scalar(z: float) -> float:
     return min(1.0, max(0.0, poly * math.exp(-x * x)))
 
 
-def _glm_newton_fit(
-    df: DataFrame,
-    y_col: str,
-    x_col: str,
-    group_cols,
-    iters: int,
-    family: str,
-    exposure_col: str = None,
-) -> DataFrame:
-    """Shared unrolled-Newton engine for the two canonical one-covariate
-    GLMs (logistic / Poisson).  Per iteration, ONE aggregate computes
-    the score vector (U0, U1) and the 2x2 Fisher information (I00, I01,
-    I11) — both are plain sums of per-row column expressions under the
-    current (b0, b1) — and the Newton update solves the 2x2 system in
-    closed form (det = I00*I11 - I01^2).  The one-row-per-group
-    coefficient frame broadcasts into the next step, so a k-step fit is
-    k aggregates with no driver math and no collect: the same
-    distributed-iteration convention as bradley_terry / estimate_m_u /
-    cox_ph_fit.
+def _glm_fit_local(pdf, group_cols, fields, k, iters, family, lam):
+    """Whole-fit driver-local twin of :func:`_glm_irls_fit`'s Spark path
+    over the collected ``base`` rows (no NULL, NaN or inf among y, x and
+    the offset): every Newton round and the readout in numpy, the same
+    formulas per group.  Returns the output rows, or None when the fit
+    must run on the Spark path: a key type :func:`_local_key_codes`
+    does not take, or any non-finite intermediate (the Spark path's
+    NaN/NULL expression semantics are not mimicked here)."""
+    import math
 
-    Newton from (0, 0) on these log-concave likelihoods converges
-    quadratically; 6 steps give ~10 digits for well-conditioned data.
-    The logistic eta is clamped to [-30, 30] (sigmoid saturates there —
-    the guard keeps complete-separation data finite rather than NaN).
+    import numpy as np
 
-    Returns ``(group_cols..., n, intercept, slope, se_slope, z_stat,
-    p_approx, loglik, dispersion)``; the Wald readout uses the
-    information at the final coefficients and the shared A&S erf
-    polynomial, and ``dispersion`` is the Pearson X^2/(n-2)
-    quasi-likelihood scale (>> 1 means the family's variance assumption
-    fails and the reported se is optimistic by ~sqrt(dispersion)).
-    """
+    from woodwork_spark.operators.linalg import (
+        inverse_diagonal_local,
+        newton_update_local,
+    )
     from woodwork_spark.operators.stats_tests import (
-        _std_normal_two_sided_p,
+        _std_normal_two_sided_p_local,
     )
 
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    if family not in ("logistic", "poisson"):
-        raise ValueError(f"unknown family {family!r}")
-    if exposure_col is not None and family != "poisson":
-        raise ValueError("exposure_col is a Poisson-rate concept")
-    group_cols = (
-        [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    )
-    cond = F.col(y_col).isNotNull() & F.col(x_col).isNotNull()
-    off_cols = []
-    if exposure_col is not None:
-        # rate model: eta = b0 + b1 x + ln(exposure) — rows with a
-        # null or non-positive exposure carry no rate information
-        cond = cond & (F.col(exposure_col) > 0)
-        off_cols = [
-            F.log(F.col(exposure_col).cast("double")).alias("__off"),
-        ]
-    base = df.filter(cond).select(
-        *group_cols,
-        F.col(y_col).cast("double").alias("__y"),
-        F.col(x_col).cast("double").alias("__x"),
-        *off_cols,
-    )
+    grp = _local_key_codes(pdf, group_cols, fields)
+    if grp is None:
+        return None
+    gid, keys = grp
+    G, d = len(keys), k + 1
+    y = pdf["__y"].to_numpy(dtype=np.float64)
+    X = np.column_stack([
+        np.ones(len(y)),
+        pdf[[f"__x{j}" for j in range(1, d)]].to_numpy(dtype=np.float64),
+    ])
+    off = pdf["__off"].to_numpy(dtype=np.float64) if "__off" in pdf else None
+    n = np.bincount(gid, minlength=G)
+    pairs = [(i, j) for i in range(d) for j in range(i + 1)]
 
-    def _eta_of(e):
-        return e + F.col("__off") if exposure_col is not None else e
+    def group_sum(v):
+        return np.bincount(gid, weights=v, minlength=G)
 
-    def _joined(coef):
-        if group_cols:
-            return _key_join(base, coef, group_cols, broadcast=True)
-        return base.crossJoin(F.broadcast(coef))
-
-    def _mu_w(eta):
+    def fold(b):
+        """(eta, mu, w) per row and the penalized score and information
+        per group at coefficients b, or None if any is non-finite."""
+        br = b[gid]
+        eta = br[:, 0]
+        for j in range(1, d):
+            eta = eta + br[:, j] * X[:, j]
+        if off is not None:
+            eta = eta + off
         if family == "logistic":
-            eta = F.least(F.lit(30.0), F.greatest(F.lit(-30.0), eta))
-            mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-            return mu, mu * (F.lit(1.0) - mu)
-        # canonical log link: clamp eta at 700 (exp overflows double
-        # just past e^709.78) so a Newton overshoot on ill-scaled
-        # covariates yields a huge-but-finite mu — NaN would sail
-        # through the det > 0 guard and poison the coefficients
-        eta = F.least(F.lit(700.0), eta)
-        mu = F.exp(eta)
-        return mu, mu
+            clamped = np.minimum(30.0, np.maximum(-30.0, eta))
+            mu = 1.0 / (1.0 + np.exp(-clamped))
+            w = mu * (1.0 - mu)
+        else:
+            mu = w = np.exp(np.minimum(700.0, eta))
+        u = np.column_stack([group_sum(X[:, j] * (y - mu)) for j in range(d)])
+        a = {(i, j): group_sum(X[:, i] * X[:, j] * w) for i, j in pairs}
+        if lam:
+            u[:, 1:] = u[:, 1:] - lam * b[:, 1:]
+            for j in range(1, d):
+                a[(j, j)] = a[(j, j)] + lam
+        if not all(np.isfinite(v).all() for v in [u, *a.values()]):
+            return None
+        return eta, mu, w, u.tolist(), {ij: v.tolist() for ij, v in a.items()}
 
-    coef = base.groupBy(*group_cols).agg(
-        F.lit(0.0).alias("__b0"), F.lit(0.0).alias("__b1"),
-    )
-    for _ in range(int(iters)):
-        cur = _joined(coef)
-        eta = _eta_of(F.col("__b0") + F.col("__b1") * F.col("__x"))
-        mu, w = _mu_w(eta)
-        x = F.col("__x")
-        step = cur.groupBy(*group_cols).agg(
-            F.max("__b0").alias("__b0"),
-            F.max("__b1").alias("__b1"),
-            F.sum(F.col("__y") - mu).alias("__u0"),
-            F.sum(x * (F.col("__y") - mu)).alias("__u1"),
-            F.sum(w).alias("__i00"),
-            F.sum(x * w).alias("__i01"),
-            F.sum(x * x * w).alias("__i11"),
-        )
-        det = (
-            F.col("__i00") * F.col("__i11") - F.col("__i01") * F.col("__i01")
-        )
-        coef = step.select(
-            *group_cols,
-            F.when(
-                det > 0,
-                F.col("__b0")
-                + (F.col("__i11") * F.col("__u0")
-                   - F.col("__i01") * F.col("__u1")) / det,
-            ).otherwise(F.col("__b0")).alias("__b0"),
-            F.when(
-                det > 0,
-                F.col("__b1")
-                + (F.col("__i00") * F.col("__u1")
-                   - F.col("__i01") * F.col("__u0")) / det,
-            ).otherwise(F.col("__b1")).alias("__b1"),
-        )
-    fin = _joined(coef)
-    eta = _eta_of(F.col("__b0") + F.col("__b1") * F.col("__x"))
-    mu, w = _mu_w(eta)
-    x = F.col("__x")
-    if family == "logistic":
-        ll = F.col("__y") * F.log(mu) + (
-            F.lit(1.0) - F.col("__y")
-        ) * F.log(F.lit(1.0) - mu)
-    else:
-        # Poisson loglik sans the data-only ln(y!) term (constant in
-        # the coefficients; dropping it is the standard deviance form)
-        ll = F.col("__y") * eta - mu
-    # w > 0 guard: a Poisson row whose eta underflows (~ -745 on
-    # ill-scaled covariates) has mu = w = 0.0 exactly; dividing gives
-    # Inf/NaN and poisons the whole group's dispersion.  Skip such
-    # rows (sum ignores NULL) so dispersion degrades gracefully.
-    resid2 = F.when(
-        w > 0, (F.col("__y") - mu) * (F.col("__y") - mu) / w,
-    )
-    out = fin.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max("__b0").alias("intercept"),
-        F.max("__b1").alias("slope"),
-        F.sum(w).alias("__i00"),
-        F.sum(x * w).alias("__i01"),
-        F.sum(x * x * w).alias("__i11"),
-        F.sum(ll).alias("loglik"),
-        F.sum(resid2).alias("__px2"),
-    )
-    det = F.col("__i00") * F.col("__i11") - F.col("__i01") * F.col("__i01")
-    se = F.sqrt(F.col("__i00") / det)
-    z = F.col("slope") / se
-    ok = det > 0
-    # Pearson X^2 / (n - 2): the quasi-likelihood scale.  ~1 when the
-    # family's variance assumption holds; >> 1 flags overdispersion
-    # (the Wald se is then optimistic by ~sqrt(dispersion)).
-    disp = F.col("__px2") / (F.col("n").cast("double") - 2.0)
-    return out.select(
-        *group_cols,
-        F.col("n").cast("long").alias("n"),
-        F.when(ok, F.col("intercept")).alias("intercept"),
-        F.when(ok, F.col("slope")).alias("slope"),
-        F.when(ok, se).alias("se_slope"),
-        F.when(ok, z).alias("z_stat"),
-        F.when(ok, _std_normal_two_sided_p(z)).alias("p_approx"),
-        "loglik",
-        F.when(ok & (F.col("n") > 2), disp).alias("dispersion"),
-    )
+    b = np.zeros((G, d))
+    with np.errstate(all="ignore"):
+        for _ in range(int(iters)):
+            f = fold(b)
+            if f is None:
+                return None
+            b = np.array(newton_update_local(d, f[4], f[3], b.tolist()))
+            if not np.isfinite(b).all():
+                return None
+        f = fold(b)
+        if f is None:
+            return None
+        eta, mu, w, _, a = f
+        if family == "logistic":
+            ll = group_sum(y * np.log(mu) + (1.0 - y) * np.log(1.0 - mu))
+        else:
+            ll = group_sum(y * eta - mu)
+        # the Spark path's w > 0 guard: its sum skips the NULLed rows,
+        # and a group with none left sums to NULL
+        pos = w > 0
+        px2 = group_sum(np.where(pos, (y - mu) * (y - mu) / w, 0.0))
+        npos = np.bincount(gid[pos], minlength=G)
+    if not (np.isfinite(ll).all() and np.isfinite(px2).all()):
+        return None
+    inv = inverse_diagonal_local(d, a, G)
+    rows = []
+    for g in range(G):
+        stats, disp = [None] * (2 + 4 * k), None
+        if inv[g] is not None:
+            if not all(v > 0 for v in inv[g]):
+                return None
+            ses = [math.sqrt(v) for v in inv[g]]
+            stats[:2] = [float(b[g, 0]), ses[0]]
+            for j in range(1, d):
+                bj = float(b[g, j])
+                z = bj / ses[j]
+                if not math.isfinite(z):
+                    return None
+                stats[4 * j - 2:4 * j + 2] = [
+                    bj, ses[j], z, _std_normal_two_sided_p_local(z),
+                ]
+            if n[g] > d and npos[g]:
+                disp = float(px2[g]) / (float(n[g]) - float(d))
+        rows.append(keys[g] + (int(n[g]), *stats, float(ll[g]), disp))
+    return rows
 
 
 def _glm_irls_fit(
@@ -371,32 +313,46 @@ def _glm_irls_fit(
     exposure_col: str = None,
     ridge_lambda: float = 0.0,
 ) -> DataFrame:
-    """k-covariate generalization of :func:`_glm_newton_fit`: per Newton
-    round ONE aggregate folds the d-vector score ``U_j = sum x_j (y -
+    """The GLM engine behind :func:`logistic_fit` and
+    :func:`poisson_fit`: ``iters`` Newton (IRLS) rounds from b = 0 per
+    group.  Each round folds the d-vector score ``U_j = sum x_j (y -
     mu)`` and the d(d+1)/2 lower-triangle entries of the Fisher
-    information ``A_ij = sum x_i x_j w`` (d = k + 1, ``x_0 = 1``), and
-    :func:`~woodwork_spark.operators.linalg.newton_step` solves the
-    d x d system per group: on the driver while the group-sized stats
-    fit ``io.LOCAL_MAX_CELLS``, else in Spark via the
-    unrolled-Cholesky layers over the one-row-per-group frame (the
-    single-covariate engine stays on its closed-form 2x2 path).
+    information ``A_ij = sum x_i x_j w`` (d = k + 1, ``x_0 = 1``) and
+    solves ``A s = U`` by Cholesky.  Ridge (``ridge_lambda > 0``) adds
+    ``lam`` to the slope diagonal of A and subtracts ``lam b`` from the
+    slope scores, never the intercept's.  Logistic eta is clamped to
+    [-30, 30], Poisson eta to <= 700, and ``exposure_col`` adds the
+    offset ``ln(exposure)``.
 
-    The positive-definite guard (every Cholesky pivot > 0 — Sylvester's
-    criterion, the d-dim analogue of ``det > 0``) keeps a group's
-    previous coefficients when its design goes degenerate/collinear for
-    a round, and NULLs the readout when the FINAL information is not
-    PD.  Family clamps match the 1-covariate engine: logistic eta in
-    [-30, 30], Poisson eta <= 700.
+    The positive-definite guard (every Cholesky pivot > 0, Sylvester's
+    criterion) keeps a group's previous coefficients when its design
+    goes degenerate for a round, and NULLs the readout when the FINAL
+    information is not PD.
+
+    The three execution tiers of
+    :func:`~woodwork_spark.operators.timeseries.cox_ph_fit`: the whole
+    fit in numpy (:func:`_glm_fit_local`) when ``base`` fits
+    :data:`~woodwork_spark.io.LOCAL_MAX_CELLS` through one
+    :func:`~woodwork_spark.io.collect_bounded`; else Spark rounds from
+    the cached ``base``, each stepping through
+    :func:`~woodwork_spark.operators.linalg.newton_step` (a driver solve
+    while the group stats fit the same bound, else in-plan layers).
 
     Returns ``(group_cols..., n, intercept, se_intercept, coef_<x>,
-    se_<x>, z_<x>, p_<x> per covariate..., loglik, dispersion)`` —
-    Wald standard errors come from the inverse-information diagonal
-    (the same factorization solves the d unit vectors; with
-    ``ridge_lambda > 0`` the readout information carries the same
-    ``+ lam`` slope diagonal the Newton steps solved, so the SEs are
-    the penalized-estimator covariance), and dispersion is Pearson
-    X^2 / (n - d).
+    se_<x>, z_<x>, p_<x> per covariate..., loglik, dispersion)``.  Wald
+    standard errors come from the inverse-information diagonal (with
+    ridge, of the same penalized information the steps solved), p from
+    the shared A&S normal polynomial, and dispersion is Pearson X^2 /
+    (n - d) over the rows with w > 0, NULL unless n > d (>> 1 flags
+    overdispersion: the Wald se is then optimistic by about
+    sqrt(dispersion)).  A NULL group
+    key is its own group.  All three tiers return the same schema and
+    NULL gating.
     """
+    from pyspark.sql import types as T
+
+    from woodwork_spark.io import collect_bounded
+    from woodwork_spark.lifecycle import attach_persisted
     from woodwork_spark.operators.linalg import (
         apply_layers,
         chol_solve_layers,
@@ -431,9 +387,8 @@ def _glm_irls_fit(
         off_cols = [
             F.log(F.col(exposure_col).cast("double")).alias("__off"),
         ]
-    # persisted: every Newton round (and its eager checkpoint) re-reads
-    # this frame — without the cache a k-round fit scans the input k+1
-    # times through whatever upstream aggregation produced it
+    # persisted: the bounded collect and, above the bound, every Newton
+    # round (and its eager checkpoint) re-read this frame
     base = df.filter(cond).select(
         *group_cols,
         F.col(y_col).cast("double").alias("__y"),
@@ -443,141 +398,122 @@ def _glm_irls_fit(
         ],
         *off_cols,
     ).persist()
-
-    def _joined(coef):
-        if group_cols:
-            return _key_join(base, coef, group_cols, broadcast=True)
-        return base.crossJoin(F.broadcast(coef))
-
-    def _xs():
-        return [F.lit(1.0)] + [
-            F.col(f"__x{j + 1}") for j in range(len(x_cols))
-        ]
-
-    def _mu_of(eta):
-        if family == "logistic":
-            eta = F.least(F.lit(30.0), F.greatest(F.lit(-30.0), eta))
-            return F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-        # same exp-overflow clamp as the 1-covariate Poisson path
-        return F.exp(F.least(F.lit(700.0), eta))
-
-    def _w_of(mu):
-        return mu * (F.lit(1.0) - mu) if family == "logistic" else mu
-
-    def _eta_mu_cols(cur, eta):
-        """Factor eta and mu through NAMED projections (the
-        logistic_fit_diag/bootstrap convention): the mu tree used to
-        inline into every one of the d + d(d+1)/2 sufficient-stat
-        aggregates, so each Newton round re-analyzed a plan ~(d^2)x
-        bigger than needed.  Same arithmetic — the aggregates now
-        reference a leaf column.  CollapseProject keeps multi-use
-        non-cheap projections, so the layering survives optimization."""
-        cur = cur.select("*", eta.alias("__eta"))
-        return cur.select("*", _mu_of(F.col("__eta")).alias("__mu"))
-
-    def _suff_aggs(mu, w, xs):
-        aggs = [
-            F.sum(xs[j] * (F.col("__y") - mu)).alias(f"__u{j}")
-            for j in range(d)
-        ]
-        for i in range(d):
-            for j in range(i + 1):
-                aggs.append(F.sum(xs[i] * xs[j] * w).alias(f"__a_{i}_{j}"))
-        return aggs
-
-    a_name = lambda i, j: f"__a_{i}_{j}"  # noqa: E731
-    coef = base.groupBy(*group_cols).agg(
-        *[F.lit(0.0).alias(f"__b{j}") for j in range(d)],
-    )
     lam = float(ridge_lambda)
-
-    def _penalized(step):
-        """Ridge: A + lam*I on the SLOPES only (never the intercept),
-        score U - lam*b on the slopes — the standard penalized Newton
-        step, so complete separation stays finite without clamps."""
-        if lam == 0.0:
-            return step
-        reps = []
-        for j in range(1, d):
-            reps.append(
-                (F.col(f"__u{j}") - F.lit(lam) * F.col(f"__b{j}"))
-                .alias(f"__u{j}"),
-            )
-            reps.append(
-                (F.col(f"__a_{j}_{j}") + F.lit(lam)).alias(f"__a_{j}_{j}"),
-            )
-        named = {f"__u{j}" for j in range(1, d)} | {
-            f"__a_{j}_{j}" for j in range(1, d)
-        }
-        return step.select(
-            *[c for c in step.columns if c not in named], *reps,
+    pdf = collect_bounded(base)
+    rows = None
+    # an empty input stays on the Spark path, whose ungrouped global
+    # aggregate yields one row
+    if pdf is not None and len(pdf):
+        rows = _glm_fit_local(
+            pdf, group_cols, base.schema, len(x_cols), iters, family, lam,
         )
+    if rows is not None:
+        names = ["intercept", "se_intercept"] + [
+            f"{s}_{name}" for name in x_cols for s in ("coef", "se", "z", "p")
+        ] + ["loglik", "dispersion"]
+        schema = T.StructType(
+            [base.schema[g] for g in group_cols]
+            + [T.StructField("n", T.LongType(), False)]
+            + [T.StructField(c, T.DoubleType()) for c in names],
+        )
+        base.unpersist()
+        return local_rows_df(df.sparkSession, rows, schema)
 
-    # Each round's Newton step: solved on the driver while the
-    # group-sized stats fit io.LOCAL_MAX_CELLS (one collect of them;
-    # bit-identical to the layered solve), else
-    # in-plan as the unrolled Cholesky layers with an eager checkpoint
-    # per round (see linalg.newton_step).  The aggregates themselves
-    # stay distributed either way.
+    xs = [F.lit(1.0)] + [F.col(f"__x{j}") for j in range(1, d)]
     bnames = [f"__b{j}" for j in range(d)]
     u_names = [f"__u{j}" for j in range(d)]
-    local = True
-    for it in range(int(iters)):
-        cur = _joined(coef)
+
+    def a_name(i, j):
+        return f"__a_{i}_{j}"
+
+    def _with_mu(coef):
+        """``base`` joined to the coefficients, with eta and mu factored
+        through NAMED projections (the logistic_fit_diag/bootstrap
+        convention): the mu tree would otherwise inline into every one
+        of the d + d(d+1)/2 sufficient-stat aggregates.  CollapseProject
+        keeps multi-use non-cheap projections, so the layering survives
+        optimization."""
+        cur = (
+            _key_join(base, coef, group_cols, broadcast=True) if group_cols
+            else base.crossJoin(F.broadcast(coef))
+        )
         eta = F.col("__b0")
-        for j in range(len(x_cols)):
-            eta = eta + F.col(f"__b{j + 1}") * F.col(f"__x{j + 1}")
+        for j in range(1, d):
+            eta = eta + F.col(f"__b{j}") * F.col(f"__x{j}")
         if exposure_col is not None:
             eta = eta + F.col("__off")
-        cur = _eta_mu_cols(cur, eta)
-        mu, w = F.col("__mu"), _w_of(F.col("__mu"))
-        step = _penalized(cur.groupBy(*group_cols).agg(
-            *[F.max(b).alias(b) for b in bnames],
-            *_suff_aggs(mu, w, _xs()),
-        ))
+        cur = cur.select("*", eta.alias("__eta"))
+        eta = F.col("__eta")
+        if family == "logistic":
+            eta = F.least(F.lit(30.0), F.greatest(F.lit(-30.0), eta))
+            mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
+        else:
+            mu = F.exp(F.least(F.lit(700.0), eta))
+        return cur.select("*", mu.alias("__mu"))
+
+    mu = F.col("__mu")
+    w = mu * (F.lit(1.0) - mu) if family == "logistic" else mu
+    suff_aggs = [
+        F.sum(xs[j] * (F.col("__y") - mu)).alias(u_names[j])
+        for j in range(d)
+    ] + [
+        F.sum(xs[i] * xs[j] * w).alias(a_name(i, j))
+        for i in range(d) for j in range(i + 1)
+    ]
+
+    def _ridge(frame, score):
+        """Ridge: ``A + lam`` on the SLOPE diagonal (never the
+        intercept), and with ``score`` also ``U - lam b`` on the slopes
+        — the standard penalized Newton step, so complete separation
+        stays finite without clamps.  The readout takes the same
+        penalized information: the raw A at the converged beta is
+        near-singular in exactly the separation cases ridge exists
+        for."""
+        if not lam:
+            return frame
+        rep = {a_name(j, j): F.col(a_name(j, j)) + F.lit(lam)
+               for j in range(1, d)}
+        if score:
+            rep.update({
+                u_names[j]: F.col(u_names[j]) - F.lit(lam) * F.col(bnames[j])
+                for j in range(1, d)
+            })
+        return frame.withColumns(rep)
+
+    coef = base.groupBy(*group_cols).agg(
+        *[F.lit(0.0).alias(b) for b in bnames],
+    )
+    # tiers 2 and 3: the aggregates stay distributed, newton_step picks
+    # where each round's solve runs
+    local = True
+    for it in range(int(iters)):
+        step = _ridge(_with_mu(coef).groupBy(*group_cols).agg(
+            *[F.max(b).alias(b) for b in bnames], *suff_aggs,
+        ), score=True)
         coef, local = newton_step(
             step, group_cols, bnames, a_name, u_names, f"__it{it}", local,
         )
     # final readout at the converged coefficients
-    fin = _joined(coef)
-    eta = F.col("__b0")
-    for j in range(len(x_cols)):
-        eta = eta + F.col(f"__b{j + 1}") * F.col(f"__x{j + 1}")
-    if exposure_col is not None:
-        eta = eta + F.col("__off")
-    fin = _eta_mu_cols(fin, eta)
-    eta = F.col("__eta")
-    mu, w = F.col("__mu"), _w_of(F.col("__mu"))
     if family == "logistic":
         ll = F.col("__y") * F.log(mu) + (
             F.lit(1.0) - F.col("__y")
         ) * F.log(F.lit(1.0) - mu)
     else:
-        ll = F.col("__y") * eta - mu
-    # same w > 0 underflow guard as the 1-covariate readout
+        ll = F.col("__y") * F.col("__eta") - mu
+    # w > 0 guard: a Poisson row whose eta underflows (~ -745 on
+    # ill-scaled covariates) has mu = w = 0.0 exactly; dividing gives
+    # Inf/NaN and poisons the whole group's dispersion.  Skip such
+    # rows (sum ignores NULL) so dispersion degrades gracefully.
     resid2 = F.when(
         w > 0, (F.col("__y") - mu) * (F.col("__y") - mu) / w,
     )
-    out = fin.groupBy(*group_cols).agg(
+    out = _ridge(_with_mu(coef).groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n"),
-        *[F.max(f"__b{j}").alias(f"__b{j}") for j in range(d)],
-        *_suff_aggs(mu, w, _xs()),
+        *[F.max(b).alias(b) for b in bnames],
+        *suff_aggs,
         F.sum(ll).alias("loglik"),
         F.sum(resid2).alias("__px2"),
-    )
-    if lam:
-        # ridge: the Newton steps solved (A + lam I); the Wald/PD
-        # readout must use the SAME penalized information — the raw A
-        # at the converged beta is near-singular in exactly the
-        # separation cases ridge exists for, inflating the SEs.
-        diag = {f"__a_{j}_{j}" for j in range(1, d)}
-        out = out.select(
-            *[c for c in out.columns if c not in diag],
-            *[
-                (F.col(f"__a_{j}_{j}") + F.lit(lam)).alias(f"__a_{j}_{j}")
-                for j in range(1, d)
-            ],
-        )
+    ), score=False)
     # one factorization, d unit-vector solves -> inverse diagonal
     rhs = {
         f"e{j}": [1.0 if m == j else 0.0 for m in range(d)]
@@ -606,9 +542,33 @@ def _glm_irls_fit(
         F.col("loglik"),
         F.when(ok & (F.col("n") > d), disp).alias("dispersion"),
     ]
-    from woodwork_spark.lifecycle import attach_persisted
-
     return attach_persisted(solved.select(*group_cols, *cols), base)
+
+
+def _glm_fit(df, y_col, x_col, group_cols, iters, family, **kw):
+    """:func:`_glm_irls_fit` for a list of names; for one name, the
+    ``[x_col]`` fit projected to the slim schema ``(group_cols..., n,
+    intercept, slope, se_slope, z_stat, p_approx, loglik,
+    dispersion)``."""
+    from woodwork_spark.lifecycle import attach_persisted, persisted_frames
+
+    if isinstance(x_col, (list, tuple)):
+        return _glm_irls_fit(df, y_col, x_col, group_cols, iters, family,
+                             **kw)
+    out = _glm_irls_fit(df, y_col, [x_col], group_cols, iters, family, **kw)
+    keys = [group_cols] if isinstance(group_cols, str) else list(group_cols)
+    slim = out.select(
+        *keys, "n", "intercept",
+        *[
+            F.col(f"{s}_{x_col}").alias(name) for s, name in (
+                ("coef", "slope"), ("se", "se_slope"), ("z", "z_stat"),
+                ("p", "p_approx"),
+            )
+        ],
+        "loglik", "dispersion",
+    )
+    # the rename select would otherwise drop the fit's persisted base
+    return attach_persisted(slim, *persisted_frames(out))
 
 
 def logistic_fit(
@@ -620,26 +580,21 @@ def logistic_fit(
     ridge_lambda: float = 0.0,
 ) -> DataFrame:
     """Logistic regression of a binary outcome on one or more covariates
-    with an intercept, per group — unrolled distributed Newton.
+    with an intercept, per group: ``iters`` Newton rounds of
+    :func:`_glm_irls_fit`, whole on the driver while the input fits
+    :data:`~woodwork_spark.io.LOCAL_MAX_CELLS`, else distributed.
 
-    ``x_col`` may be a single column name (closed-form 2x2 path, see
-    :func:`_glm_newton_fit`; returns ``(group_cols..., n, intercept,
-    slope, se_slope, z_stat, p_approx, loglik, dispersion)``) or a LIST
-    of names (unrolled-Cholesky IRLS, see :func:`_glm_irls_fit`;
-    returns the wide per-covariate schema).
+    ``x_col`` may be a single column name (returns ``(group_cols..., n,
+    intercept, slope, se_slope, z_stat, p_approx, loglik,
+    dispersion)``) or a LIST of names (returns the wide per-covariate
+    schema of :func:`_glm_irls_fit`).
 
-    ``ridge_lambda > 0`` (IRLS path only) penalizes the SLOPES with L2
-    in every Newton step (``A + lam I`` on slope rows, ``U - lam b``)
-    — the standard fix that keeps completely-separated data finite;
-    the Wald readout then describes the penalized fit."""
-    if isinstance(x_col, (list, tuple)):
-        return _glm_irls_fit(df, y_col, x_col, group_cols, iters,
-                             "logistic", ridge_lambda=ridge_lambda)
-    if ridge_lambda:
-        raise ValueError(
-            "ridge_lambda needs the IRLS path — pass x_col as a list",
-        )
-    return _glm_newton_fit(df, y_col, x_col, group_cols, iters, "logistic")
+    ``ridge_lambda > 0`` penalizes the SLOPES with L2 in every Newton
+    step (``A + lam I`` on slope rows, ``U - lam b``), the standard fix
+    that keeps completely-separated data finite; the Wald readout then
+    describes the penalized fit."""
+    return _glm_fit(df, y_col, x_col, group_cols, iters, "logistic",
+                    ridge_lambda=ridge_lambda)
 
 
 def _balanced_fold(exprs, op):
@@ -914,20 +869,16 @@ def poisson_fit(
     exposure_col: str = None,
 ) -> DataFrame:
     """Poisson (log-link) regression of a count outcome on one or more
-    covariates with an intercept, per group — unrolled distributed
-    Newton.  ``x_col``: a name (closed-form 2x2 path) or a list of
-    names (unrolled-Cholesky IRLS, :func:`_glm_irls_fit`).  loglik
-    omits the coefficient-free ln(y!) term in both shapes.
+    covariates with an intercept, per group: the same engine and the
+    same name-or-list schemas as :func:`logistic_fit`.  loglik omits
+    the coefficient-free ln(y!) term.
 
     ``exposure_col`` turns the count model into a RATE model: the
     classic offset formulation ``eta = b'x + ln(exposure)`` (counts
     per observed hour/page/session); rows with null or non-positive
     exposure are excluded."""
-    if isinstance(x_col, (list, tuple)):
-        return _glm_irls_fit(df, y_col, x_col, group_cols, iters,
-                             "poisson", exposure_col=exposure_col)
-    return _glm_newton_fit(df, y_col, x_col, group_cols, iters,
-                           "poisson", exposure_col=exposure_col)
+    return _glm_fit(df, y_col, x_col, group_cols, iters, "poisson",
+                    exposure_col=exposure_col)
 
 
 def theil_sen_fit(
@@ -1161,11 +1112,11 @@ def glm_predict(
     scoring pass costs exactly one projection on top of the scan, the
     model being model-sized by construction.
 
-    ``x_col``: the same name-or-list passed to the fit.  The slim
-    (single-covariate) schema reads ``intercept``/``slope``; the wide
-    IRLS schema reads ``intercept``/``coef_<x>``.  Link inverses use
-    the SAME clamps as the fit engines (logistic eta in [-30, 30],
-    Poisson eta <= 700), and ``exposure_col`` applies the rate offset
+    ``x_col``: the same name-or-list passed to the fit.  A name reads
+    the slim schema's ``intercept``/``slope``; a list reads
+    ``intercept``/``coef_<x>``.  Link inverses use the SAME clamps as
+    the fit (logistic eta in [-30, 30], Poisson eta <= 700), and
+    ``exposure_col`` applies the rate offset
     symmetric to :func:`poisson_fit`.  Rows of groups absent from the
     model (or with NULL coefficients — degenerate fits) get NULL
     ``out_col``; input rows are never dropped.

@@ -1549,8 +1549,8 @@ def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
     import numpy as np
 
     from woodwork_spark.operators.linalg import (
-        chol_solve_local,
-        pd_ok_local,
+        inverse_diagonal_local,
+        newton_update_local,
     )
     from woodwork_spark.operators.stats_tests import (
         _std_normal_two_sided_p_local,
@@ -1644,13 +1644,9 @@ def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
                 b = np.where(a0 > 0, b[:, 0] + u[:, 0] / a0, 0.0)[:, None]
             else:
                 al = {ij: v.tolist() for ij, v in a.items()}
-                b = b.copy()
-                for g, ug in enumerate(u.tolist()):
-                    sol, piv = chol_solve_local(
-                        k, lambda i, j, g=g: al[(i, j)][g], {"s": ug},
-                    )
-                    if pd_ok_local(piv):
-                        b[g] = [b[g, j] + sol["s"][j] for j in range(k)]
+                b = np.array(
+                    newton_update_local(k, al, u.tolist(), b.tolist()),
+                )
             if not np.isfinite(b).all():
                 return None
         f = fold(b)
@@ -1658,19 +1654,16 @@ def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
         return None
     ll, _, a = f
     al = {ij: v.tolist() for ij, v in a.items()}
+    inv = inverse_diagonal_local(k, al, G) if multi else None
     rows = []
-    unit = {f"e{j}": [float(m == j) for m in range(k)] for j in range(k)}
     for g in range(G):
         if not multi:
             ag = al[(0, 0)][g]
             ok = ne[g] > 0 and ag > 0
             ses = [1.0 / math.sqrt(ag)] if ok else []
         else:
-            sol, piv = chol_solve_local(
-                k, lambda i, j, g=g: al[(i, j)][g], unit,
-            )
-            ok = pd_ok_local(piv) and ne[g] > 0
-            inv_diag = [sol[f"e{j}"][j] for j in range(k)] if ok else []
+            ok = inv[g] is not None and ne[g] > 0
+            inv_diag = inv[g] if ok else []
             if not all(v > 0 for v in inv_diag):
                 return None
             ses = [math.sqrt(v) for v in inv_diag]

@@ -117,6 +117,8 @@ def _sampled_values(
 
     ``known_total`` skips the sizing count job when the caller already
     aggregated it (medcouple_dict folds it into the percentile agg).
+    A NaN is dropped from the sample as missing, as the pandas
+    reference's ``dropna`` does (Spark keeps it apart from NULL).
     """
     src = nonnull.select(c.alias("__v"))
     if sample_mode == "random":
@@ -126,8 +128,10 @@ def _sampled_values(
             src = src.sample(withReplacement=False, fraction=fraction, seed=42)
     from woodwork_spark.io import arrow_to_pandas
 
-    pdf = arrow_to_pandas(src.limit(sample_size))["__v"]
-    return pdf.to_numpy(dtype="float64")
+    values = arrow_to_pandas(src.limit(sample_size))["__v"].to_numpy(
+        dtype="float64",
+    )
+    return values[~np.isnan(values)]
 
 
 def _collect_outlier_values(nonnull, c, low, high, max_values):
