@@ -1,4 +1,5 @@
-"""Equivalence of cox_ph_fit's three execution tiers.
+"""Equivalence of the three execution tiers of the Cox engine behind
+cox_ph_fit and cox_ph_fit_tv.
 
 - ``local``: the whole fit on the driver from one bounded collect
   (within ``io.LOCAL_MAX_CELLS``, the default tier at this size);
@@ -7,12 +8,15 @@
 - ``layered``: Spark rounds with the in-plan Cholesky layers
   (``LOCAL_MAX_CELLS = 0``).
 
-Each fit shape (grouped, ungrouped, stratified; one covariate and two)
-runs on data with tied times, a group with no events, a degenerate
-covariate (x2 identically 0, so the information matrix is not PD), a
-NULL group key and rows with a NULL covariate.  The tiers must agree on
-schema, row count, NULL placement and values (rel 1e-9), and spies on
-the tier entry points assert which tier ran.
+Each fit shape (grouped, ungrouped, stratified, and the time-varying
+fit grouped and ungrouped; one covariate and two) runs on data with
+tied times, a group with no events, a degenerate covariate (x2
+identically 0, so the information matrix is not PD), a NULL group key,
+rows with a NULL covariate and, for the time-varying fit, (start, stop]
+episodes whose starts tie with other episodes' stops and zero-length
+episodes.  The tiers must agree on schema, row count, NULL placement
+and values (rel 1e-9), and spies on the tier entry points assert which
+tier ran.
 """
 
 import math
@@ -24,8 +28,9 @@ from woodwork_spark import io
 from woodwork_spark.operators import linalg, timeseries
 
 ITERS = 4
-# the step tier's cell bound: below the base frame's cells (over 600 in
-# every shape), above the group statistics' (under 100)
+# the step tier's cell bound: below the base frame's cells (over 1000 in
+# every shape, the time-varying ledger's included), above the group
+# statistics' (under 100)
 STEP_CELLS = 300
 
 
@@ -38,23 +43,26 @@ def cox_df(spark):
             x1 = float(np.round(rng.normal(), 3))
             x2 = 0.0 if g == "col" else float(np.round(rng.normal(), 3))
             t = float(rng.randint(1, 15))  # few distinct times: many ties
+            # episode start: ties other episodes' stops; t0 = t is a
+            # zero-length episode, dropped by the time-varying fit
+            t0 = min(float(i % 5), t)
             d = 0.0 if g == "none" else float(rng.uniform() < 0.7)
             s = [0, 1, None][i % 3]
             x = 0.0 if g == "col" else x1
             if g == "a" and i % 9 == 0:
                 x = x1 = None  # dropped by the NULL-covariate filter
-            rows.append((g, s, t, d, x, x1, x2))
+            rows.append((g, s, t0, t, d, x, x1, x2))
     return spark.createDataFrame(
         rows,
-        "g string, s int, t double, d double, x double, x1 double, "
-        "x2 double",
+        "g string, s int, t0 double, t double, d double, x double, "
+        "x1 double, x2 double",
     ).cache()
 
 
 @pytest.fixture
 def fit(monkeypatch):
-    """Run cox_ph_fit in a named tier; returns (collected frame, the
-    tier calls the spies saw)."""
+    """Run cox_ph_fit (cox_ph_fit_tv with ``tv``) in a named tier;
+    returns (frame, collected rows, the tier calls the spies saw)."""
     seen = {"local": [], "step": []}
     local_fit, step = timeseries._cox_fit_local, linalg.newton_step_local
     collect = io.collect_bounded
@@ -87,15 +95,20 @@ def fit(monkeypatch):
     monkeypatch.setattr(linalg, "newton_step_local", spy_step)
     monkeypatch.setattr(io, "collect_bounded", spy_collect)
 
-    def run(tier, df, x, group, strata, max_cells=1_000_000):
+    def run(tier, df, x, group, strata=(), max_cells=1_000_000, tv=False):
         for v in seen.values():
             v.clear()
         frames.clear()
         bound = {"local": max_cells, "step": STEP_CELLS, "layered": 0}[tier]
         monkeypatch.setattr(io, "LOCAL_MAX_CELLS", bound)
-        out = timeseries.cox_ph_fit(
-            df, "t", "d", x, group, iters=ITERS, strata_cols=strata,
-        )
+        if tv:
+            out = timeseries.cox_ph_fit_tv(
+                df, "t0", "t", "d", x, group, iters=ITERS,
+            )
+        else:
+            out = timeseries.cox_ph_fit(
+                df, "t", "d", x, group, iters=ITERS, strata_cols=strata,
+            )
         if tier == "step":
             # the base frame is over the bound, every round's group
             # statistics within it
@@ -127,31 +140,31 @@ def _assert_same(a, b, keys):
                 assert va == vb, (name, ra, rb)
 
 
+# name -> (time-varying fit, group_cols, strata_cols)
 SHAPES = {
-    "grouped": ("g", ()),
-    "ungrouped": ((), ()),
-    "stratified": ("g", "s"),
+    "grouped": (False, "g", ()),
+    "ungrouped": (False, (), ()),
+    "stratified": (False, "g", "s"),
+    "tv_grouped": (True, "g", ()),
+    "tv_ungrouped": (True, (), ()),
 }
 
 
 @pytest.mark.parametrize("x", ["x", ["x1", "x2"]], ids=["x", "x1_x2"])
 @pytest.mark.parametrize("shape", list(SHAPES))
 def test_tiers_agree(cox_df, fit, shape, x):
-    group, strata = SHAPES[shape]
-    multi = isinstance(x, list)
+    tv, group, strata = SHAPES[shape]
     out = {}
     for tier in ("local", "step", "layered"):
-        df, rows, seen = fit(tier, cox_df, x, group, strata)
+        df, rows, seen = fit(tier, cox_df, x, group, strata, tv=tv)
         out[tier] = (df, rows)
         if tier == "local":
             assert seen == {"local": [True], "step": []}
         elif tier == "step":
-            assert seen == {
-                "local": [], "step": [True] * ITERS if multi else [],
-            }
+            assert seen == {"local": [], "step": [True] * ITERS}
         else:
             # one probe per fit, not one per round
-            assert seen == {"local": [], "step": [False] if multi else []}
+            assert seen == {"local": [], "step": [False]}
     keys = [group] if group else []
     _assert_same(out["local"], out["step"], keys)
     _assert_same(out["local"], out["layered"], keys)
@@ -172,33 +185,43 @@ def test_tiers_agree(cox_df, fit, shape, x):
         assert all(
             by_g[k][c] is not None for k in ("a", "b", None) for c in stats
         )
-        # rows with a NULL covariate are dropped
-        assert by_g["a"]["n"] == 70 - 8
+        # rows with a NULL covariate (and zero-length episodes) are
+        # dropped
+        kept = 70 - 8
+        if tv:
+            kept = cox_df.filter("g = 'a' AND x IS NOT NULL AND t0 < t")
+            assert kept.count() < 70 - 8
+            kept = kept.count()
+        assert by_g["a"]["n"] == kept
     else:
         assert len(rows) == 1 and rows[0]["loglik"] is not None
 
 
-@pytest.mark.parametrize("x", ["x", ["x1", "x2"]], ids=["x", "x1_x2"])
-def test_non_finite_value_takes_spark_path(spark, cox_df, fit, x):
-    """One infinite time: the local tier declines and the Spark path
-    runs from the same cached frame, so the result equals the forced
-    Spark path's."""
+@pytest.mark.parametrize(
+    "tv, x",
+    [(False, "x"), (False, ["x1", "x2"]), (True, "x"), (True, ["x1", "x2"])],
+    ids=["x", "x1_x2", "tv_x", "tv_x1_x2"],
+)
+def test_non_finite_value_takes_spark_path(spark, cox_df, fit, tv, x):
+    """One infinite time (an infinite stop for the time-varying fit):
+    the local tier declines and the Spark path runs from the same
+    cached frame, so the result equals the forced Spark path's."""
     bad = cox_df.filter("g = 'b'").limit(1).selectExpr(
-        "g", "s", "double('inf') AS t", "d", "x", "x1", "x2",
+        "g", "s", "t0", "double('inf') AS t", "d", "x", "x1", "x2",
     )
     df = cox_df.unionByName(bad)
-    default, rows, seen = fit("local", df, x, "g", ())
+    default, rows, seen = fit("local", df, x, "g", tv=tv)
     assert seen["local"] == [False]
-    spark_df, spark_rows, _ = fit("step", df, x, "g", ())
+    spark_df, spark_rows, _ = fit("step", df, x, "g", tv=tv)
     _assert_same((default, rows), (spark_df, spark_rows), ["g"])
 
 
 def test_local_tier_skipped_above_bound(cox_df, fit):
     """More cells than LOCAL_MAX_CELLS: the kernel never runs and the
     Spark path gives the local tier's answer."""
-    df, rows, seen = fit("local", cox_df, ["x1", "x2"], "g", ())
+    df, rows, seen = fit("local", cox_df, ["x1", "x2"], "g")
     assert seen == {"local": [True], "step": []}
-    over = fit("local", cox_df, ["x1", "x2"], "g", (), max_cells=STEP_CELLS)
+    over = fit("local", cox_df, ["x1", "x2"], "g", max_cells=STEP_CELLS)
     assert over[2] == {"local": [], "step": [True] * ITERS}
     _assert_same((df, rows), over[:2], ["g"])
 

@@ -498,11 +498,18 @@ class TestCoxTimeVarying:
         assert out["none"]["beta"] is None
         assert out["none"]["loglik"] is None
 
-    def test_ungrouped_plan_no_singlepartition_windows(self, spark):
+    def test_ungrouped_plan_no_singlepartition_windows(
+        self, spark, monkeypatch,
+    ):
+        """The cell bound is set to 0 so the fit takes the Spark path
+        (below it the whole fit runs on the driver and has no plan to
+        inspect)."""
         import random
 
+        from woodwork_spark import io
         from woodwork_spark.operators.timeseries import cox_ph_fit_tv
 
+        monkeypatch.setattr(io, "LOCAL_MAX_CELLS", 0)
         rng = random.Random(9)
         rows = _mk_episodes(rng, 300, k=1)
         df = spark.createDataFrame(

@@ -1535,15 +1535,17 @@ def _local_key_codes(pdf, cols, fields):
     return inv.reshape(-1), keys
 
 
-def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
-    """Whole-fit driver-local twin of :func:`cox_ph_fit`'s Spark path
-    over the collected ``base`` rows (no NULL, NaN or inf among t, d
-    and x): every Newton round and the readout in numpy, the same
-    formulas per (group, strata) partition.  Returns the output rows,
-    or None when the fit must run on the Spark path: a key type
+def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters):
+    """Whole-fit driver-local twin of :func:`_cox_fit`'s Spark path
+    over the collected ``base`` rows (no NULL, NaN or inf among t, sgn,
+    d and x): every Newton round and the readout in numpy, the same
+    formulas per (group, partition), the signed weights included.
+    Returns per group its keys, ``n``, ``n_events``, ``beta, se, z, p``
+    per covariate and ``loglik`` (the caller names the columns), or None
+    when the fit must run on the Spark path: a key type
     :func:`_local_key_codes` does not take, or any non-finite
-    intermediate (the Spark path's NaN/NULL expression semantics are
-    not mimicked here)."""
+    intermediate on an event cell (the Spark path's NaN/NULL expression
+    semantics are not mimicked here)."""
     import math
 
     import numpy as np
@@ -1557,6 +1559,7 @@ def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
     )
 
     t = pdf["__t"].to_numpy(dtype=np.float64)
+    sgn = pdf["__sgn"].to_numpy(dtype=np.float64)
     d = pdf["__d"].to_numpy(dtype=np.float64)
     X = pdf[[f"__x{j + 1}" for j in range(k)]].to_numpy(dtype=np.float64)
     grp = _local_key_codes(pdf, group_cols, fields)
@@ -1569,7 +1572,8 @@ def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
     # rows in (partition, time descending) order; a cell is one
     # (partition, distinct time), as in the Spark path's cell collapse
     order = np.lexsort((-t, pid))
-    t, d, X, gid, pid = t[order], d[order], X[order], gid[order], pid[order]
+    t, sgn, d, X = t[order], sgn[order], d[order], X[order]
+    gid, pid = gid[order], pid[order]
     first = np.ones(len(t), dtype=bool)
     first[1:] = (pid[1:] != pid[:-1]) | (t[1:] != t[:-1])
     cid = np.cumsum(first) - 1
@@ -1592,8 +1596,11 @@ def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
         return np.bincount(cg, weights=w, minlength=G)
 
     dt = cell_sum(d)
+    # the event gate of _counting_process_fold: a ledger cell past the
+    # last exit carries no events and risk sums that cancel to ~0
+    ev = dt > 0
     dx = [cell_sum(d * X[:, j]) for j in range(k)]
-    n = group_sum(np.bincount(cid, minlength=C).astype(np.float64))
+    n = group_sum(cell_sum((sgn > 0).astype(np.float64)))
     ne = group_sum(dt)
     pairs = [(i, j) for i in range(k) for j in range(i + 1)]
 
@@ -1603,29 +1610,29 @@ def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
         eta = br[:, 0] * X[:, 0]
         for j in range(1, k):
             eta = eta + br[:, j] * X[:, j]
-        if multi:
-            eta = np.minimum(700.0, eta)
-        ew = np.exp(eta)
+        sew = sgn * np.exp(np.minimum(700.0, eta))
         V = np.column_stack(
-            [cell_sum(ew)]
-            + [cell_sum(X[:, j] * ew) for j in range(k)]
-            + [cell_sum(X[:, i] * X[:, j] * ew) for i, j in pairs],
+            [cell_sum(sew)]
+            + [cell_sum(X[:, j] * sew) for j in range(k)]
+            + [cell_sum(X[:, i] * X[:, j] * sew) for i, j in pairs],
         )
         S = np.empty_like(V)
         for idx in blocks:
             S[idx] = np.cumsum(V[idx], axis=1)
         s0 = S[:, 0]
-        if not (np.isfinite(S).all() and (s0 > 0).all()):
+        if not (np.isfinite(S[ev]).all() and (s0[ev] > 0).all()):
             return None
-        r = [S[:, 1 + j] / s0 for j in range(k)]
+        r = [np.where(ev, S[:, 1 + j] / s0, 0.0) for j in range(k)]
         bc = b[cg]
         lterm = bc[:, 0] * dx[0]
         for j in range(1, k):
             lterm = lterm + bc[:, j] * dx[j]
-        ll = group_sum(np.where(dt > 0, lterm - dt * np.log(s0), 0.0))
+        ll = group_sum(np.where(ev, lterm - dt * np.log(s0), 0.0))
         u = [group_sum(dx[j] - dt * r[j]) for j in range(k)]
         a = {
-            ij: group_sum(dt * (S[:, 1 + k + m] / s0 - r[ij[0]] * r[ij[1]]))
+            ij: group_sum(np.where(
+                ev, dt * (S[:, 1 + k + m] / s0 - r[ij[0]] * r[ij[1]]), 0.0,
+            ))
             for m, ij in enumerate(pairs)
         }
         if not all(np.isfinite(v).all() for v in [ll, *u, *a.values()]):
@@ -1639,37 +1646,24 @@ def _cox_fit_local(pdf, group_cols, part_cols, fields, k, iters, multi):
             if f is None:
                 return None
             _, u, a = f
-            if not multi:
-                a0 = a[(0, 0)]
-                b = np.where(a0 > 0, b[:, 0] + u[:, 0] / a0, 0.0)[:, None]
-            else:
-                al = {ij: v.tolist() for ij, v in a.items()}
-                b = np.array(
-                    newton_update_local(k, al, u.tolist(), b.tolist()),
-                )
+            al = {ij: v.tolist() for ij, v in a.items()}
+            b = np.array(newton_update_local(k, al, u.tolist(), b.tolist()))
             if not np.isfinite(b).all():
                 return None
         f = fold(b)
     if f is None:
         return None
     ll, _, a = f
-    al = {ij: v.tolist() for ij, v in a.items()}
-    inv = inverse_diagonal_local(k, al, G) if multi else None
+    inv = inverse_diagonal_local(k, {ij: v.tolist() for ij, v in a.items()}, G)
     rows = []
     for g in range(G):
-        if not multi:
-            ag = al[(0, 0)][g]
-            ok = ne[g] > 0 and ag > 0
-            ses = [1.0 / math.sqrt(ag)] if ok else []
-        else:
-            ok = inv[g] is not None and ne[g] > 0
-            inv_diag = inv[g] if ok else []
-            if not all(v > 0 for v in inv_diag):
-                return None
-            ses = [math.sqrt(v) for v in inv_diag]
+        ok = inv[g] is not None and ne[g] > 0
+        inv_diag = inv[g] if ok else []
+        if not all(v > 0 for v in inv_diag):
+            return None
         stats = [None] * (4 * k)
-        for j, se in enumerate(ses):
-            bj = float(b[g, j])
+        for j, v in enumerate(inv_diag):
+            bj, se = float(b[g, j]), math.sqrt(v)
             z = bj / se
             if not math.isfinite(z):
                 return None
@@ -1689,8 +1683,8 @@ def _info_name(i, j):
 
 
 def _counting_process_fold(bnames):
-    """Score/information fold of :func:`cox_ph_fit_tv` and
-    :func:`fine_gray_fit` over per-(group, time) cells carrying the
+    """Score/information fold of the Cox engine :func:`_cox_fit` and
+    of :func:`fine_gray_fit` over per-(group, time) cells carrying the
     coefficients ``bnames``, ``__nc``, ``__dt``, ``__dx<j>`` and the
     risk sums ``__S0``, ``__S1_<j>``, ``__S2_<i>_<j>``.  Every ``S0``
     division sits behind the event gate ``__dt > 0``: suffix
@@ -1781,6 +1775,158 @@ def _cox_wald_readout(out, group_cols, bnames, xs, multi):
     return apply_layers(out, layers).select(*group_cols, *cols)
 
 
+def _cox_fit(base, group_cols, part_cols, xs, multi, iters):
+    """The one Cox engine behind :func:`cox_ph_fit` and
+    :func:`cox_ph_fit_tv`: ``iters`` guarded Newton rounds from beta = 0
+    and the Wald readout, in the three tiers :func:`cox_ph_fit`
+    describes.  ``base`` is persisted and holds ``part_cols`` (risk sets
+    form within these; ``group_cols`` lead them), the time ``__t``, the
+    ledger sign ``__sgn`` (+1 for a row entering the risk set, -1 for
+    one leaving it), the event count ``__d`` and the covariates
+    ``__x<j>``, with no NULL among them.  Returns the slim schema for
+    one name (``multi`` false), the wide one otherwise."""
+    from pyspark.sql import types as T
+
+    from woodwork_spark.io import collect_bounded
+    from woodwork_spark.lifecycle import attach_persisted, persisted_frames
+    from woodwork_spark.operators.linalg import newton_step
+    from woodwork_spark.operators.rank import global_prefix_sums
+    from woodwork_spark.operators.scale import local_rows_df
+
+    k = len(xs)
+    pdf = collect_bounded(base)
+    rows = None
+    # an empty input stays on the Spark path, whose ungrouped global
+    # aggregate yields one all-NULL row
+    if pdf is not None and len(pdf):
+        rows = _cox_fit_local(
+            pdf, group_cols, part_cols, base.schema, k, iters,
+        )
+    if rows is not None:
+        names = (
+            ["beta", "se", "z_stat", "p_approx"] if not multi
+            else [
+                f"{s}_{name}" for name in xs
+                for s in ("beta", "se", "z", "p")
+            ]
+        )
+        schema = T.StructType(
+            [base.schema[g] for g in group_cols]
+            + [T.StructField(c, T.LongType()) for c in ("n", "n_events")]
+            + [T.StructField(c, T.DoubleType())
+               for c in names + ["loglik"]],
+        )
+        base.unpersist()
+        return local_rows_df(base.sparkSession, rows, schema)
+    bnames = [f"__b{j + 1}" for j in range(k)]
+    caches = [base]
+
+    # every Column below is loop-invariant: built once per fit, reused
+    # by each round's plan
+    eta = None
+    for j in range(k):
+        term = F.col(bnames[j]) * F.col(f"__x{j + 1}")
+        eta = term if eta is None else eta + term
+    # exp-overflow clamp, mirroring the GLM engine.  Factor
+    # sgn * e^(b'x) through a NAMED projection (the bootstrap/
+    # logistic_fit_diag convention): the exp(dot-product) tree would
+    # otherwise inline into every one of the 1 + k + k(k+1)/2 cell
+    # aggregates.  Same arithmetic; aggregates reference a leaf column.
+    sew_col = (
+        F.col("__sgn") * F.exp(F.least(F.lit(700.0), eta))
+    ).alias("__sew")
+    sew = F.col("__sew")
+    cell_aggs = [
+        *[F.max(b).alias(b) for b in bnames],
+        F.sum(F.when(F.col("__sgn") > 0, 1).otherwise(0)).alias("__nc"),
+        F.sum("__d").alias("__dt"),
+        F.sum(sew).alias("__c0"),
+    ]
+    vcols, scols = ["__c0"], ["__S0"]
+    for j in range(k):
+        cell_aggs.append(
+            F.sum(F.col("__d") * F.col(f"__x{j + 1}")).alias(f"__dx{j}"),
+        )
+        cell_aggs.append(F.sum(F.col(f"__x{j + 1}") * sew).alias(f"__c1_{j}"))
+        vcols.append(f"__c1_{j}")
+        scols.append(f"__S1_{j}")
+    for i in range(k):
+        for j in range(i + 1):
+            cell_aggs.append(
+                F.sum(
+                    F.col(f"__x{i + 1}") * F.col(f"__x{j + 1}") * sew,
+                ).alias(f"__c2_{i}_{j}"),
+            )
+            vcols.append(f"__c2_{i}_{j}")
+            scols.append(f"__S2_{i}_{j}")
+    suffix_sums = None
+    if part_cols:
+        w = (
+            W.partitionBy(*part_cols)
+            .orderBy(F.desc("__t"))
+            .rowsBetween(W.unboundedPreceding, W.currentRow)
+        )
+        suffix_sums = [
+            F.sum(vc).over(w).alias(sc) for vc, sc in zip(vcols, scols)
+        ]
+
+    def _risk_cells(bdf):
+        """Collapse to (partition, t) cells at the broadcast beta, then
+        suffix-sum the signed risk quantities in descending time."""
+        if group_cols:
+            cur = _key_join(
+                base, bdf.select(*group_cols, *bnames), group_cols,
+                broadcast=True,
+            )
+        else:
+            cur = base.crossJoin(F.broadcast(bdf))
+        cells = cur.select("*", sew_col).groupBy(*part_cols, "__t").agg(
+            *cell_aggs,
+        )
+        if part_cols:
+            return cells.select("*", *suffix_sums)
+        # ungrouped/unstratified: distributed suffix sums — range
+        # shuffle + bucket windows + driver offsets, never a
+        # SinglePartition exchange
+        out = global_prefix_sums(
+            cells, [F.desc("__t")], vcols, out_cols=scols,
+            inclusive=True, small_threshold=0,
+        )
+        caches.extend(persisted_frames(out))
+        return out
+
+    fold = _counting_process_fold(bnames)
+    u_names = [f"__u{j}" for j in range(k)]
+    beta_df = base.groupBy(*group_cols).agg(
+        *[F.lit(0.0).alias(b) for b in bnames],
+    )
+    local = True
+    for it in range(int(iters)):
+        step = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold)
+        beta_df, local = newton_step(
+            step, group_cols, bnames, _info_name, u_names, f"__it{it}",
+            local,
+        )
+    # final readout: information at the FINAL beta for the Wald se
+    out = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold)
+    res = _cox_wald_readout(out, group_cols, bnames, xs, multi)
+    return attach_persisted(res, *caches)
+
+
+def _cox_args(x_col, group_cols, iters):
+    """Validated ``(xs, multi, group_cols)`` of a Cox fit's arguments."""
+    if iters < 1:
+        raise ValueError(f"iters must be >= 1, got {iters}")
+    multi = isinstance(x_col, (list, tuple))
+    xs = list(x_col) if multi else [x_col]
+    if not xs or len(set(xs)) != len(xs):
+        raise ValueError("x_col must be a name or non-empty unique list")
+    group_cols = (
+        [group_cols] if isinstance(group_cols, str) else list(group_cols)
+    )
+    return xs, multi, group_cols
+
+
 def cox_ph_fit(
     df: DataFrame,
     time_col: str,
@@ -1804,26 +1950,27 @@ def cox_ph_fit(
     (tied subjects share a cell, hence the identical risk set the RANGE
     frame used to provide), and folds score ``U_j = sum_t (dx_j - d_t
     S1_j/S0)`` and information ``I_ij = sum_t d_t (S2_ij/S0 -
-    (S1_i/S0)(S1_j/S0))`` in one aggregate.  Single covariate:
-    closed-form ``b' = b + U/I`` (``0`` when ``I <= 0``); multi-
-    covariate: a d x d Cholesky solve (eta clamped at 700 against exp
+    (S1_i/S0)(S1_j/S0))`` in one aggregate
+    (:func:`_counting_process_fold`).  Each step is a d x d Cholesky
+    solve (1 x 1 for one name; eta clamped at 700 against exp
     overflow), guarded by Sylvester's pivots-positive criterion (a
-    degenerate round keeps the previous beta).
+    degenerate round keeps the previous beta).  One name is the
+    ``[x]`` fit under the slim column names.
 
-    Three execution tiers, chosen per fit:
+    Three execution tiers, chosen per fit by the engine
+    :func:`_cox_fit` (shared with :func:`cox_ph_fit_tv`):
 
     1. **Whole fit on the driver.**  ``base`` (the filtered, cast input)
        is collected once by :func:`~woodwork_spark.io.collect_bounded`,
        bounded by :data:`~woodwork_spark.io.LOCAL_MAX_CELLS` (1M cells:
-       rows x (keys + 2 + covariates)).  When it fits and every t, d
+       rows x (keys + 3 + covariates)).  When it fits and every t, d
        and x is finite, every round and the readout run in numpy
        (:func:`_cox_fit_local`) — no Spark job per round.
     2. **Per-round driver solve.**  Otherwise the rounds run as Spark
-       plans from the cached ``base``, and each multi-covariate round
-       steps through :func:`~woodwork_spark.operators.linalg.
-       newton_step`: its one-row-per-group sufficient stats are
-       collected and solved on the driver while they fit the same
-       cell bound.
+       plans from the cached ``base``, and each round steps through
+       :func:`~woodwork_spark.operators.linalg.newton_step`: its
+       one-row-per-group sufficient stats are collected and solved on
+       the driver while they fit the same cell bound.
     3. **Layered plan.**  Above that bound the same helper keeps the
        solve in-plan as the unrolled-Cholesky layers of
        :mod:`~woodwork_spark.operators.linalg`, with an eager checkpoint
@@ -1859,27 +2006,7 @@ def cox_ph_fit(
     (non-PD) information matrix yield NULL statistics.  All three tiers
     return the same schema and NULL gating.
     """
-    from pyspark.sql import types as T
-
-    from woodwork_spark.io import collect_bounded
-    from woodwork_spark.lifecycle import attach_persisted, persisted_frames
-    from woodwork_spark.operators.linalg import newton_step
-    from woodwork_spark.operators.rank import global_prefix_sums
-    from woodwork_spark.operators.scale import local_rows_df
-    from woodwork_spark.operators.stats_tests import (
-        _std_normal_two_sided_p,
-    )
-
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    multi = isinstance(x_col, (list, tuple))
-    xs = list(x_col) if multi else [x_col]
-    if not xs or len(set(xs)) != len(xs):
-        raise ValueError("x_col must be a name or non-empty unique list")
-    k = len(xs)
-    group_cols = (
-        [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    )
+    xs, multi, group_cols = _cox_args(x_col, group_cols, iters)
     strata_cols = (
         [strata_cols] if isinstance(strata_cols, str)
         else list(strata_cols)
@@ -1895,188 +2022,14 @@ def cox_ph_fit(
     base = df.filter(cond).select(
         *part_cols,
         F.col(time_col).cast("double").alias("__t"),
+        F.lit(1.0).alias("__sgn"),
         F.col(event_col).cast("double").alias("__d"),
         *[
             F.col(c).cast("double").alias(f"__x{j + 1}")
             for j, c in enumerate(xs)
         ],
     ).persist()
-    pdf = collect_bounded(base)
-    rows = None
-    # an empty input stays on the Spark path, whose ungrouped global
-    # aggregate yields one all-NULL row
-    if pdf is not None and len(pdf):
-        rows = _cox_fit_local(
-            pdf, group_cols, part_cols, base.schema, k, iters, multi,
-        )
-    if rows is not None:
-        names = (
-            ["beta", "se", "z_stat", "p_approx"] if not multi
-            else [
-                f"{s}_{name}" for name in xs
-                for s in ("beta", "se", "z", "p")
-            ]
-        )
-        schema = T.StructType(
-            [base.schema[g] for g in group_cols]
-            + [T.StructField(c, T.LongType()) for c in ("n", "n_events")]
-            + [T.StructField(c, T.DoubleType())
-               for c in names + ["loglik"]],
-        )
-        base.unpersist()
-        return local_rows_df(df.sparkSession, rows, schema)
-    bnames = [f"__b{j + 1}" for j in range(k)]
-    caches = [base]
-
-    # every Column below is loop-invariant: built once per fit, reused
-    # by each round's plan
-    eta = None
-    for j in range(k):
-        term = F.col(bnames[j]) * F.col(f"__x{j + 1}")
-        eta = term if eta is None else eta + term
-    if multi:
-        # exp-overflow clamp, mirroring the GLM engines; the
-        # 1-covariate path keeps its exact legacy arithmetic
-        eta = F.least(F.lit(700.0), eta)
-    # factor e^(b'x) through a NAMED projection (the bootstrap/
-    # logistic_fit_diag convention): the exp(dot-product) tree would
-    # otherwise inline into every one of the 1 + k + k(k+1)/2 cell
-    # aggregates.  Same arithmetic; aggregates reference a leaf column.
-    ew_col = F.exp(eta).alias("__ew")
-    ew = F.col("__ew")
-    cell_aggs = [
-        *[F.max(b).alias(b) for b in bnames],
-        F.count(F.lit(1)).alias("__nc"),
-        F.sum("__d").alias("__dt"),
-        F.sum(ew).alias("__c0"),
-    ]
-    vcols, scols = ["__c0"], ["__S0"]
-    for j in range(k):
-        cell_aggs.append(
-            F.sum(F.col("__d") * F.col(f"__x{j + 1}")).alias(f"__dx{j}"),
-        )
-        cell_aggs.append(F.sum(F.col(f"__x{j + 1}") * ew).alias(f"__c1_{j}"))
-        vcols.append(f"__c1_{j}")
-        scols.append(f"__S1_{j}")
-    for i in range(k):
-        for j in range(i + 1):
-            cell_aggs.append(
-                F.sum(
-                    F.col(f"__x{i + 1}") * F.col(f"__x{j + 1}") * ew,
-                ).alias(f"__c2_{i}_{j}"),
-            )
-            vcols.append(f"__c2_{i}_{j}")
-            scols.append(f"__S2_{i}_{j}")
-    suffix_sums = None
-    if part_cols:
-        w = (
-            W.partitionBy(*part_cols)
-            .orderBy(F.desc("__t"))
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        suffix_sums = [
-            F.sum(vc).over(w).alias(sc) for vc, sc in zip(vcols, scols)
-        ]
-    def _risk_cells(bdf):
-        """Collapse to (group, t) cells at the broadcast beta, then
-        suffix-sum the risk quantities in descending time."""
-        if group_cols:
-            cur = _key_join(
-                base, bdf.select(*group_cols, *bnames), group_cols,
-                broadcast=True,
-            )
-        else:
-            cur = base.crossJoin(F.broadcast(bdf))
-        cells = cur.select("*", ew_col).groupBy(*part_cols, "__t").agg(
-            *cell_aggs,
-        )
-        if part_cols:
-            return cells.select("*", *suffix_sums)
-        # ungrouped/unstratified: distributed suffix sums — range
-        # shuffle + bucket windows + driver offsets, never a
-        # SinglePartition exchange
-        out = global_prefix_sums(
-            cells, [F.desc("__t")], vcols, out_cols=scols,
-            inclusive=True, small_threshold=0,
-        )
-        caches.extend(persisted_frames(out))
-        return out
-
-    r1 = [F.col(f"__S1_{j}") / F.col("__S0") for j in range(k)]
-    # Breslow partial loglik at the current beta: sum over event cells
-    # of (beta'dx - d_t ln S0) — free from the same cell quantities the
-    # score/information fold reads, and the input to cox likelihood-
-    # ratio tests (glm_lrt works verbatim on these fits)
-    lterm = None
-    for j in range(k):
-        t = F.col(bnames[j]) * F.col(f"__dx{j}")
-        lterm = t if lterm is None else lterm + t
-    fold_aggs = [
-        *[F.max(b).alias(b) for b in bnames],
-        F.sum("__nc").alias("__n"),
-        F.sum("__dt").alias("__ne"),
-        F.sum(
-            F.when(
-                F.col("__dt") > 0,
-                lterm - F.col("__dt") * F.log(F.col("__S0")),
-            ).otherwise(F.lit(0.0)),
-        ).alias("__ll"),
-    ]
-    for j in range(k):
-        fold_aggs.append(
-            F.sum(F.col(f"__dx{j}") - F.col("__dt") * r1[j]).alias(f"__u{j}"),
-        )
-    for i in range(k):
-        for j in range(i + 1):
-            fold_aggs.append(
-                F.sum(
-                    F.col("__dt")
-                    * (F.col(f"__S2_{i}_{j}") / F.col("__S0")
-                       - r1[i] * r1[j]),
-                ).alias(_info_name(i, j)),
-            )
-
-    beta_df = base.groupBy(*group_cols).agg(
-        *[F.lit(0.0).alias(b) for b in bnames],
-    )
-    u_names = [f"__u{j}" for j in range(k)]
-    if not multi:
-        b_next = F.when(
-            F.col("__a_0_0") > 0,
-            F.col("__b1") + F.col("__u0") / F.col("__a_0_0"),
-        ).otherwise(F.lit(0.0)).alias("__b1")
-    local = True
-    for it in range(int(iters)):
-        step = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold_aggs)
-        if not multi:
-            beta_df = step.select(*group_cols, b_next)
-            continue
-        beta_df, local = newton_step(
-            step, group_cols, bnames, _info_name, u_names, f"__it{it}",
-            local,
-        )
-    # final readout: information at the FINAL beta for the Wald se
-    out = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold_aggs)
-    if multi:
-        res = _cox_wald_readout(out, group_cols, bnames, xs, multi)
-    else:
-        ok = (F.col("__ne") > 0) & (F.col("__a_0_0") > 0)
-        se = F.lit(1.0) / F.sqrt(F.col("__a_0_0"))
-        z = F.col("__b1") / se
-        res = out.select(
-            *group_cols,
-            F.col("__n").cast("long").alias("n"),
-            F.col("__ne").cast("long").alias("n_events"),
-            F.when(ok, F.col("__b1")).alias("beta"),
-            F.when(ok, se).alias("se"),
-            F.when(ok, z).alias("z_stat"),
-            F.when(ok, _std_normal_two_sided_p(z)).alias("p_approx"),
-            # gated by the SAME ok predicate as the Wald columns: a
-            # degenerate group's loglik is evaluated at an un-updated
-            # beta and must not silently feed glm_lrt
-            F.when(ok, F.col("__ll")).alias("loglik"),
-        )
-    return attach_persisted(res, *caches)
+    return _cox_fit(base, group_cols, part_cols, xs, multi, iters)
 
 
 def cox_ph_fit_tv(
@@ -2097,24 +2050,25 @@ def cox_ph_fit_tv(
     "does the hazard follow the covariate as it changes?" (treatment
     switches, cumulative exposure, lagged activity).
 
-    Distributed design — the risk-set identity that makes it ride
-    :func:`cox_ph_fit`'s exact machinery: the counting-process risk
-    set decomposes as two SUFFIX sums,
+    The risk-set identity that makes it :func:`cox_ph_fit`'s engine
+    (:func:`_cox_fit`): the counting-process risk set decomposes as two
+    SUFFIX sums,
 
     ``sum_{start < t <= stop} f  =  sum_{stop >= t} f - sum_{start >= t} f``
 
     so each episode row becomes TWO rows of a signed LEDGER — ``(+f``
     at ``t = stop``, ``-f`` at ``t = start)`` — built ONCE (it does
-    not depend on beta) and persisted.  Each Newton round then
-    collapses the ledger to one cell per (group, distinct time) with
-    SIGNED weights (``sum sgn*e^(b'x)``, ``sum sgn*x_j e^(b'x)``,
-    ``sum sgn*x_i x_j e^(b'x)``; event counts ``d_t`` ride only the
-    positive rows) and suffix-sums in descending time — identical
-    window shape, score/information fold, in-plan Cholesky step,
-    per-round eager localCheckpoint, and ungrouped
-    ``global_prefix_sums`` path (no SinglePartition) as the standard
-    fit.  At 100 TB the only cost over plain Cox is 2x the cell-ledger
-    rows.
+    not depend on beta) and persisted as the engine's ``base``.  Each
+    Newton round collapses the ledger to one cell per (group, distinct
+    time) with SIGNED weights (``sum sgn*e^(b'x)``, ``sum sgn*x_j
+    e^(b'x)``, ``sum sgn*x_i x_j e^(b'x)``; event counts ``d_t`` ride
+    only the positive rows) and suffix-sums in descending time.  The
+    fit therefore has :func:`cox_ph_fit`'s three tiers: the whole fit
+    on the driver while the ledger fits
+    :data:`~woodwork_spark.io.LOCAL_MAX_CELLS`, else Spark rounds with
+    the per-round driver solve or the layered in-plan solve, the
+    ungrouped ones through ``global_prefix_sums`` (no SinglePartition).
+    The only cost over plain Cox is 2x the ledger rows.
 
     Ties are Breslow, as in :func:`cox_ph_fit`.  Rows with
     ``start >= stop`` (zero-length episodes) or any NULL are dropped.
@@ -2124,20 +2078,7 @@ def cox_ph_fit_tv(
     list; ``n`` counts EPISODE rows.  Groups with no events or non-PD
     information yield NULL statistics (loglik gated identically).
     """
-    from woodwork_spark.lifecycle import attach_persisted, persisted_frames
-    from woodwork_spark.operators.linalg import newton_step
-    from woodwork_spark.operators.rank import global_prefix_sums
-
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    multi = isinstance(x_col, (list, tuple))
-    xs = list(x_col) if multi else [x_col]
-    if not xs or len(set(xs)) != len(xs):
-        raise ValueError("x_col must be a name or non-empty unique list")
-    k = len(xs)
-    group_cols = (
-        [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    )
+    xs, multi, group_cols = _cox_args(x_col, group_cols, iters)
     cond = (
         F.col(start_col).isNotNull()
         & F.col(stop_col).isNotNull()
@@ -2146,108 +2087,28 @@ def cox_ph_fit_tv(
     )
     for c in xs:
         cond = cond & F.col(c).isNotNull()
-    episodes = df.filter(cond).select(
-        *group_cols,
-        F.col(start_col).cast("double").alias("__t0"),
-        F.col(stop_col).cast("double").alias("__t1"),
-        F.col(event_col).cast("double").alias("__d"),
-        *[
-            F.col(c).cast("double").alias(f"__x{j + 1}")
-            for j, c in enumerate(xs)
-        ],
-    )
-    xnames = [f"__x{j + 1}" for j in range(k)]
+    xcols = [
+        F.col(c).cast("double").alias(f"__x{j + 1}")
+        for j, c in enumerate(xs)
+    ]
+    episodes = df.filter(cond)
     # the signed ledger (beta-free): persisted once, re-read per round
     plus = episodes.select(
         *group_cols,
-        F.col("__t1").alias("__t"),
+        F.col(stop_col).cast("double").alias("__t"),
         F.lit(1.0).alias("__sgn"),
-        "__d",
-        *xnames,
+        F.col(event_col).cast("double").alias("__d"),
+        *xcols,
     )
     minus = episodes.select(
         *group_cols,
-        F.col("__t0").alias("__t"),
+        F.col(start_col).cast("double").alias("__t"),
         F.lit(-1.0).alias("__sgn"),
         F.lit(0.0).alias("__d"),
-        *xnames,
+        *xcols,
     )
     base = plus.unionByName(minus).persist()
-    bnames = [f"__b{j + 1}" for j in range(k)]
-    caches = [base]
-
-    def _risk_cells(bdf):
-        if group_cols:
-            cur = _key_join(base, bdf, group_cols, broadcast=True)
-        else:
-            cur = base.crossJoin(F.broadcast(bdf))
-        eta = None
-        for j in range(k):
-            term = F.col(bnames[j]) * F.col(xnames[j])
-            eta = term if eta is None else eta + term
-        eta = F.least(F.lit(700.0), eta)
-        # factor sgn*e^(b'x) through a NAMED projection — see cox_ph_fit
-        cur = cur.select(
-            "*", (F.col("__sgn") * F.exp(eta)).alias("__sew"),
-        )
-        sew = F.col("__sew")
-        cell_aggs = [
-            F.sum(F.when(F.col("__sgn") > 0, 1).otherwise(0)).alias("__nc"),
-            F.sum("__d").alias("__dt"),
-            F.sum(sew).alias("__c0"),
-        ]
-        vcols, scols = ["__c0"], ["__S0"]
-        for j in range(k):
-            cell_aggs.append(
-                F.sum(F.col("__d") * F.col(xnames[j])).alias(f"__dx{j}"),
-            )
-            cell_aggs.append(F.sum(F.col(xnames[j]) * sew).alias(f"__c1_{j}"))
-            vcols.append(f"__c1_{j}")
-            scols.append(f"__S1_{j}")
-        for i in range(k):
-            for j in range(i + 1):
-                cell_aggs.append(
-                    F.sum(
-                        F.col(xnames[i]) * F.col(xnames[j]) * sew,
-                    ).alias(f"__c2_{i}_{j}"),
-                )
-                vcols.append(f"__c2_{i}_{j}")
-                scols.append(f"__S2_{i}_{j}")
-        cells = cur.groupBy(*group_cols, "__t").agg(
-            *[F.max(b).alias(b) for b in bnames],
-            *cell_aggs,
-        )
-        if group_cols:
-            w = (
-                W.partitionBy(*group_cols)
-                .orderBy(F.desc("__t"))
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            )
-            for vc, sc in zip(vcols, scols):
-                cells = cells.withColumn(sc, F.sum(vc).over(w))
-            return cells
-        out = global_prefix_sums(
-            cells, [F.desc("__t")], vcols, out_cols=scols,
-            inclusive=True, small_threshold=0,
-        )
-        caches.extend(persisted_frames(out))
-        return out
-
-    fold = _counting_process_fold(bnames)
-    u_names = [f"__u{j}" for j in range(k)]
-    beta_df = base.groupBy(*group_cols).agg(
-        *[F.lit(0.0).alias(b) for b in bnames],
-    )
-    local = True
-    for it in range(int(iters)):
-        step = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold)
-        beta_df, local = newton_step(
-            step, group_cols, bnames, _info_name, u_names, f"__tv{it}",
-            local,
-        )
-    out = _risk_cells(beta_df).groupBy(*group_cols).agg(*fold)
-    res = _cox_wald_readout(out, group_cols, bnames, xs, multi)
-    return attach_persisted(res, *caches)
+    return _cox_fit(base, group_cols, group_cols, xs, multi, iters)
 
 
 def fine_gray_fit(
@@ -2303,16 +2164,8 @@ def fine_gray_fit(
     from woodwork_spark.operators.linalg import newton_step
     from woodwork_spark.operators.rank import global_prefix_sums
 
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    multi = isinstance(x_col, (list, tuple))
-    xs = list(x_col) if multi else [x_col]
-    if not xs or len(set(xs)) != len(xs):
-        raise ValueError("x_col must be a name or non-empty unique list")
+    xs, multi, group_cols = _cox_args(x_col, group_cols, iters)
     k = len(xs)
-    group_cols = (
-        [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    )
     cond = F.col(time_col).isNotNull() & F.col(cause_col).isNotNull()
     for c in xs:
         cond = cond & F.col(c).isNotNull()
@@ -2390,7 +2243,7 @@ def fine_gray_fit(
             eta = term if eta is None else eta + term
         eta = F.least(F.lit(700.0), eta)
         # factor e^(b'x) and the mass-shifted weight through NAMED
-        # projections — see cox_ph_fit
+        # projections — see _cox_fit
         cur = cur.select("*", F.exp(eta).alias("__ew"))
         cur = cur.select(
             "*",
